@@ -31,7 +31,6 @@ object Curation {
     * computed metadata: (doc_id, lang, quality, n_tokens, text).
     *
     * @param minQuality  quality-gate threshold in [0,1]
-    * @param nHashes     minhash signature length
     * @param minBands    bands that must agree to call a pair near-dup
     * @param normalizeUnicode NFC-normalize text BEFORE any hashing —
     *                    required for a multilingual corpus, where NFC/NFD
@@ -41,11 +40,10 @@ object Curation {
     *                    single-encoder corpora (the test fixtures) are
     *                    byte-stable already and the survivors' `text`
     *                    column stays byte-identical to the input.
-    * @param maxBandFreq near-dup hot-band stop-list (default-signature
-    *                    path only): band keys shared by more than this
-    *                    many docs are dropped before the pair join — the
-    *                    boilerplate skew defense, with the miss trade
-    *                    documented on [[Dedup.dedupAgainst]].
+    * @param maxBandFreq near-dup hot-band stop-list: band keys shared by
+    *                    more than this many docs are dropped before the
+    *                    pair join — the boilerplate skew defense, with the
+    *                    miss trade documented on [[Dedup.dedupAgainst]].
     * @param keepBestQuality near-dup survivor policy: false (default) =
     *                    the single-pass smaller-id-neighbor policy in the
     *                    object Scaladoc; true = [[Dedup.keepBest]] — each
@@ -97,7 +95,7 @@ object Curation {
     *                    0.5 = "more target-like than not")
     */
   def curate(docs0: DataFrame, minQuality: Double = 0.3,
-      nHashes: Int = 8, minBands: Int = 4,
+      minBands: Int = 4,
       maxDupLines: Double = 1.0, maxTopNgram: Double = 1.0,
       normalizeUnicode: Boolean = false,
       keepBestQuality: Boolean = false,
@@ -155,50 +153,19 @@ object Curation {
         .filter(col("clf") >= minClassifierScore).drop("clf")
       case None => lmGated
     }
-    // T.cached: feeds both band-join sides AND the final anti-join;
-    // registered for post-materialization release by the harness.
+    // T.cached: feeds the pair stage AND the final anti-join; registered
+    // for post-materialization release by the harness.
     val exactKept = graft.ops.T.cached(clfGated
       .withColumn("ch", md5(col("text")))
       .withColumn("keep", col("doc_id") === min("doc_id")
         .over(org.apache.spark.sql.expressions.Window.partitionBy("ch")))
       .filter(col("keep"))
       .drop("ch", "keep"))
-    // Stage 3: minhash band signatures over the exact-dedup survivors.
-    // Default path: the native codegen'd Md5MinHash expression — ONE pass
-    // per document, no token explode and no per-doc groupBy shuffle (the
-    // r4 lesson: the HOF/agg signature stage was the composed pipeline's
-    // bottleneck). Values are identical by construction to the relational
-    // min(md5(tok ∥ '#' ∥ seed)) form, which remains as the fallback for
-    // non-default signature lengths (the expression's seed count is fixed
-    // at compile time for codegen). GeneratedPropertySpec proves the
-    // expression ≡ relational-pipeline equivalence.
-    // T.cached: BOTH band-join sides read the signature frame — without
-    // it each side's Exchange re-runs the whole signature pass (the old
-    // relational form got single-compute for free via ReusedExchange on
-    // its final aggregate; a narrow map has no such reuse point).
-    val pairs =
-      if (nHashes == graft.ops.Md5MinHash.NumHashes)
-        // Dedup.minhashSelfPairs: identical band-join semantics, its own
-        // cached signature frame, and the hot-band stop-list for free.
-        Dedup.minhashSelfPairs(exactKept, minBands, maxBandFreq)
-          .withColumnRenamed("n_bands", "count")
-      else {
-        require(maxBandFreq.isEmpty,
-          "maxBandFreq requires the default signature length")
-        val sigs = exactKept
-          .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-          .groupBy("doc_id")
-          .agg(array((0 until nHashes).map(i =>
-            min(md5(concat(col("tok"), lit(s"#$i")).cast("binary")))): _*).as("sigs"))
-          .select(col("doc_id"), posexplode(col("sigs")).as(Seq("seed", "mh")))
-        sigs.select(col("doc_id").as("a_id"), col("seed"), col("mh"))
-          .join(sigs.select(col("doc_id").as("b_id"), col("seed").as("seed_b"),
-            col("mh").as("mh_b")),
-            col("seed") === col("seed_b") && col("mh") === col("mh_b") &&
-              col("a_id") < col("b_id"))
-          .groupBy("a_id", "b_id").count()
-          .filter(col("count") >= minBands)
-      }
+    // Stage 3: minhash near-dup pairs over the exact-dedup survivors via
+    // the library's one pair path (Dedup.minhashSelfPairs: one native
+    // Md5MinHash pass per document, identical-signature contraction, and
+    // the hot-band stop-list).
+    val pairs = Dedup.minhashSelfPairs(exactKept, minBands, maxBandFreq)
     // Stage 3b (optional): semantic pairs over the exact-dedup survivors'
     // embeddings, unioned into the same pair graph — one survivor policy
     // then covers token-space AND embedding-space duplicates (a doc can

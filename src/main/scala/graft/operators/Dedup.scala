@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.T
@@ -296,112 +296,178 @@ object Dedup {
       posexplode(expr("graft_minhash_md5(text)")).as(Seq("seed", "mh")))
   }
 
-  /** Near-duplicate pairs WITHIN one corpus — the self-join twin of
-    * [[dedupAgainst]], same pair semantics as the graded x_dedup_minhash:
-    * (a_id, b_id, n_bands ≥ minBands), a_id < b_id, candidates from the
-    * (seed, mh) band equi-join. `maxBandFreq` stop-lists band keys
-    * carried by more than that many docs BEFORE the join (both join
-    * sides — it is one signature frame), bounding any hot key's fan-out
-    * at cap²/2 pairs; the miss trade is the one documented on
-    * dedupAgainst. The signature frame is T.cached (both sides and the
-    * frequency agg read it).
+  /** Identical-signature CONTRACTION, the one pair path of the sketch
+    * dedup family (minhash here; simhash and token-set Jaccard in
+    * ops/Similarity). A near-dup corpus is dominated by EXACT template
+    * copies: docs whose signatures are identical (sf0.1: a 1762-doc group
+    * alone is 1.55 M of the minhash graph's 9.2 M pairs). Every supported
+    * pair measure is a function of the two signatures alone, so:
+    *
+    *  1. group docs by signature (plus optional blocking `keys`); rep =
+    *     min(doc_id) per group, members sorted;
+    *  2. every within-group pair takes the measure's identical-signature
+    *     value and is emitted by a combination explode ([[within]]) —
+    *     output-sized, no join;
+    *  3. the caller's candidate join runs among REPS only, so its hot
+    *     buckets hold distinct signatures, not docs (the Σk² blowup
+    *     becomes reps-sized), and each cross-group value is decided once;
+    *  4. rep pairs expand to member pairs ([[expand]]).
+    *
+    * The emitted pair set equals the uncontracted one for any grouping
+    * into identical-signature groups. Null contract: a null signature
+    * (null text) is dropped here, so a null-text doc pairs with nothing,
+    * not even another null-text doc. The groups frame is T.cached: the
+    * within explode, the caller's rep join and both expansion joins read
+    * it.
+    *
+    * @param sigs frame with `doc_id`, `sig` and the `keys` columns
     */
-  def minhashSelfPairs(docs: DataFrame, minBands: Int = 4,
-      maxBandFreq: Option[Long] = None): DataFrame = {
-    val sigs0 = T.cached(minhashSignatures(docs))
-    val sigs = maxBandFreq.fold(sigs0) { cap =>
-      val hot = sigs0.groupBy("seed", "mh").agg(count(lit(1)).as("_freq"))
-        .filter(col("_freq") > cap)
-        .select("seed", "mh")
-      sigs0.join(broadcast(hot), Seq("seed", "mh"), "left_anti")
+  private[graft] final class SignatureGroups(sigs: DataFrame, keys: String*) {
+    /** (keys…, sig, rep, members, k): one row per distinct non-null
+      * signature. k counts non-null signatures, so the null group has
+      * k = 0 and the filter on the aggregate output drops it; a filter on
+      * `sig` itself would be pushed below the projection and evaluate the
+      * signature expression twice per doc.
+      */
+    val groups: DataFrame = T.cached(sigs
+      .groupBy((keys :+ "sig").map(col): _*)
+      .agg(min(col("doc_id")).as("rep"),
+        sort_array(collect_list(col("doc_id"))).as("members"),
+        count(col("sig")).as("k"))
+      .filter(col("k") > 0))
+
+    /** (a_id, b_id, payload): every within-group pair, a_id < b_id;
+      * `payload` is evaluated per group (the measure's value for two
+      * identical signatures).
+      */
+    def within(payload: Column): DataFrame = {
+      val exploded = groups.filter(col("k") >= 2)
+        .select(explode(expr(
+          "flatten(transform(members, (x, i) -> " +
+            "transform(slice(members, i + 2, size(members)), " +
+            "y -> named_struct('a_id', x, 'b_id', y))))")).as("p"), payload)
+      exploded.select(col("p.a_id") +: col("p.b_id") +:
+        exploded.columns.filter(_ != "p").map(col).toSeq: _*)
     }
-    sigs.select(col("doc_id").as("a_id"), col("seed"), col("mh"))
-      .join(sigs.select(col("doc_id").as("b_id"), col("seed"), col("mh")),
+
+    /** Rep pairs (a_rep, b_rep, payload…) → member pairs (a_id, b_id,
+      * payload…): each side's members re-attach through one equi-join on
+      * the rep; ids interleave across groups, so the canonical order is
+      * least/greatest.
+      */
+    def expand(repPairs: DataFrame): DataFrame = {
+      val payload = repPairs.columns.filterNot(Set("a_rep", "b_rep")).map(col).toSeq
+      repPairs
+        .join(groups.select(col("rep").as("a_rep"), col("members").as("mem_a")), "a_rep")
+        .join(groups.select(col("rep").as("b_rep"), col("members").as("mem_b")), "b_rep")
+        .select(explode(col("mem_a")).as("x") +: col("mem_b") +: payload: _*)
+        .select(col("x") +: explode(col("mem_b")).as("y") +: payload: _*)
+        .select(least(col("x"), col("y")).as("a_id") +:
+          greatest(col("x"), col("y")).as("b_id") +: payload: _*)
+    }
+  }
+
+  /** Minhash signature groups over a (doc_id, text) corpus. The per-doc
+    * signature ARRAY comes from one Md5MinHash pass; md5 runs once
+    * because only the cached groups frame reads it (the cap path caches
+    * the array itself, which its frequency agg reads a second time).
+    *
+    * `maxBandFreq` nulls every (seed, mh) entry carried by more than that
+    * many docs BEFORE grouping; [[liveBands]] and [[minhashRepPairs]]
+    * then count only non-null entries. Hotness is a property of the
+    * (seed, mh) key, so two docs agree on exactly the non-hot bands they
+    * shared — the pair set of a band self-join with the hot keys
+    * stop-listed, on the one contracted path. With the cap unset nothing
+    * is nulled.
+    */
+  private def minhashGroups(docs: DataFrame,
+      maxBandFreq: Option[Long]): SignatureGroups = {
+    graft.ops.Custom.register(docs.sparkSession)
+    val sigArr = docs.select(col("doc_id").cast("long").as("doc_id"),
+      expr("graft_minhash_md5(text)").as("sig"))
+    val sigs = maxBandFreq.fold(sigArr) { cap =>
+      val rows = T.cached(sigArr)
+        .select(col("doc_id"), posexplode(col("sig")).as(Seq("seed", "mh")))
+      val hot = rows.groupBy("seed", "mh").agg(count(lit(1)).as("_freq"))
+        .filter(col("_freq") > cap)
+        .select(col("seed"), col("mh"), lit(true).as("_hot"))
+      rows.join(broadcast(hot), Seq("seed", "mh"), "left")
+        .groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("seed"),
+          when(col("_hot").isNull, col("mh")).as("mh")))).as("_s"))
+        .select(col("doc_id"), col("_s.mh").as("sig"))
+    }
+    new SignatureGroups(sigs)
+  }
+
+  /** Non-null signature entries of a group: the n_bands of any two of
+    * its members (8 unless the hot-band cap nulled some).
+    */
+  private val liveBands: Column =
+    size(filter(col("sig"), _.isNotNull)).cast("long")
+
+  /** (a_rep, b_rep, n_bands ≥ minBands): the (seed, mh) band equi-join
+    * among group reps, over non-null entries.
+    */
+  private def minhashRepPairs(g: SignatureGroups, minBands: Int): DataFrame = {
+    val bands = g.groups
+      .select(col("rep"), posexplode(col("sig")).as(Seq("seed", "mh")))
+      .filter(col("mh").isNotNull)
+    bands.select(col("rep").as("a_rep"), col("seed"), col("mh"))
+      .join(bands.select(col("rep").as("b_rep"), col("seed"), col("mh")),
         Seq("seed", "mh"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_bands"))
+      .filter(col("a_rep") < col("b_rep"))
+      .groupBy("a_rep", "b_rep").agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") >= minBands)
   }
 
-  /** Duplicate CLUSTERS of the ≥`minBands` minhash pair graph, via
-    * identical-signature CONTRACTION — the 100 TB form of
-    * `connectedComponents(minhashSelfPairs(docs))`, with exactly the same
-    * result.
+  /** Near-duplicate pairs WITHIN one corpus, the pair semantics of the
+    * graded x_dedup_minhash: (a_id, b_id, n_bands ≥ minBands), a_id <
+    * b_id, n_bands = how many of the 8 (seed, mh) bands the two docs
+    * share. Computed by identical-signature contraction
+    * ([[SignatureGroups]]): within-group pairs carry all their live bands,
+    * the band join runs among reps only. Exact for every minBands.
     *
-    * A near-dup corpus is dominated by EXACT template copies: docs whose
-    * full 8-band signatures are identical. In the naive pair graph every
-    * such group of k docs is a k-clique (sf0.1 fixture: a 1762-doc group
-    * alone contributes 1.55 M of the graph's 9.2 M pairs), so both the
-    * band self-join (hot-bucket k² blowup) and every CC propagation round
-    * (edge-linear) pay quadratic cost for information a groupBy already
-    * has. Contract first:
+    * Null contract: a null `text` has no signature, so its doc is in no
+    * pair. An empty `text` is an ordinary token set (one empty token).
     *
-    *  1. group docs by FULL signature; rep = min(doc_id) per group —
-    *     one n-linear agg (sf0.1: 5000 docs → 937 reps);
-    *  2. band-join among REPS ONLY (identical sigs agree on all 8 bands,
-    *     so doc~doc band agreement ≡ rep~rep agreement — the quotient
-    *     graph has the same ≥minBands edges);
-    *  3. CC over the rep↔rep pairs ONLY; members re-attach through one
-    *     docRep join after the fixpoint (a group's members are pairwise
-    *     8-band dups by construction, ≥ minBands for any valid
-    *     threshold, so a member's component is exactly its rep's), and
-    *     cluster labels still equal the uncontracted graph's min doc_id
-    *     (rep = min of its group ⇒ component min doc = component min
-    *     rep). Components, labels and member counts all equal the
-    *     uncontracted graph's, while the propagation loop's edge volume
-    *     drops from corpus-sized (the former star edges) to Σ(rep
-    *     pairs) — distinct-signatures-sized.
+    * @param maxBandFreq stop-list band keys carried by more than this many
+    *        docs (doc count, not rep count), bounding any hot key's
+    *        fan-out; the miss trade is the one documented on
+    *        [[dedupAgainst]]
+    */
+  def minhashSelfPairs(docs: DataFrame, minBands: Int = 4,
+      maxBandFreq: Option[Long] = None): DataFrame = {
+    val g = minhashGroups(docs, maxBandFreq)
+    // a pair needs one live band: a group the cap nulled entirely has none
+    g.within(liveBands.as("n_bands"))
+      .filter(col("n_bands") >= math.max(minBands, 1))
+      .union(g.expand(minhashRepPairs(g, minBands)))
+  }
+
+  /** Duplicate CLUSTERS of the ≥`minBands` minhash pair graph: exactly
+    * `connectedComponents(minhashSelfPairs(docs, minBands))`, computed on
+    * the contracted graph. CC runs over the REP pairs only; members
+    * re-attach after the fixpoint. A group's members are pairwise
+    * 8-band dups, so a member's component is its rep's, and labels still
+    * equal the uncontracted graph's min doc_id (rep = min of its group ⇒
+    * component min doc = component min rep). The propagation loop's edge
+    * volume is Σ(rep pairs), distinct-signatures-sized. A doc surfaces
+    * iff its group has ≥ 2 members or its rep meets another rep.
     *
-    * Requires minBands ≤ 8 (a group's internal agreement is all 8 bands);
-    * singleton reps with no rep-pairs correctly vanish, and an internally
-    * duplicated group (k ≥ 2) surfaces every member even when its rep
-    * pairs with no other rep.
+    * Null contract: a null `text` has no signature, so its doc is in no
+    * cluster. An empty `text` is an ordinary token set.
     */
   def minhashComponents(docs: DataFrame, minBands: Int = 4): DataFrame = {
-    // Cache the per-doc signature ARRAY (8 strings/doc), not the
-    // exploded rows: the band frame posexplodes it and the contraction
-    // key derives from it with a per-row transform — the former
-    // groupBy(doc_id) + collect_list rebuild of what the expression had
-    // already produced was a full corpus-sized shuffle, and the md5
-    // hashing still runs exactly once (cache build).
-    graft.ops.Custom.register(docs.sparkSession)
-    val sigArr = T.cached(docs.select(col("doc_id").cast("long").as("doc_id"),
-      expr("graft_minhash_md5(text)").as("sigs")))
-    val sigs = sigArr.select(col("doc_id"),
-      posexplode(col("sigs")).as(Seq("seed", "mh")))
-    // Full-signature contraction key: seeds are a fixed 0..7 enumeration,
-    // so the seed-ordered concat is deterministic per doc — and
-    // transform's (element, index) lambda spells the same "seed#mh"
-    // strings the exploded frame's concat_ws did.
-    val full = sigArr.select(col("doc_id"), concat_ws("|", array_sort(
-      expr("transform(sigs, (mh, i) -> concat(i, '#', mh))"))).as("sig"))
-    val groups = full.groupBy("sig")
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"))
-    val docRep = T.cached(full.join(groups, "sig")
-      .select(col("doc_id"), col("rep"), col("n_docs")))
-    // Band join among representatives only: the hot-bucket fan-out is now
-    // bounded by DISTINCT signatures per band value, not docs.
-    val repSigs = sigs.join(
-      docRep.filter(col("doc_id") === col("rep")).select("doc_id"), Seq("doc_id"))
-    val repPairs = repSigs.select(col("doc_id").as("a_id"), col("seed"), col("mh"))
-      .join(repSigs.select(col("doc_id").as("b_id"), col("seed"), col("mh")),
-        Seq("seed", "mh"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= minBands)
-      .select("a_id", "b_id")
-    // CC over the REP graph only — the star edges never enter the
-    // propagation loop (they used to make every round's edge join
-    // corpus-sized; the rep graph is distinct-signatures-sized). Labels
-    // transfer to members unchanged: rep = min(doc_id) of its group, so
-    // a component's min doc_id over all member docs IS its min rep id —
-    // exactly ccLabels' fixpoint over repPairs. A doc surfaces iff its
-    // group is internally duplicated (k ≥ 2 — the old star edges) or its
-    // rep meets another rep; star-only groups label by their own rep.
-    val repLab = ccLabels(repPairs)
+    val g = minhashGroups(docs, None)
+    val repLab = ccLabels(minhashRepPairs(g, minBands)
+        .select(col("a_rep").as("a_id"), col("b_rep").as("b_id")))
       .select(col("u").as("rep"), col("lab"))
-    val labeled = docRep.join(repLab, Seq("rep"), "left")
-      .filter(col("n_docs") >= 2 || col("lab").isNotNull)
+    val labeled = g.groups
+      .select(explode(col("members")).as("doc_id"), col("rep"),
+        (col("k") >= 2 && liveBands >= minBands).as("_dup"))
+      .join(repLab, Seq("rep"), "left")
+      .filter(col("_dup") || col("lab").isNotNull)
       .select(col("doc_id"), coalesce(col("lab"), col("rep")).as("lab"))
     val sizes = labeled.groupBy("lab").agg(count(lit(1)).as("n_members"))
     labeled.join(sizes, "lab")

@@ -13,9 +13,14 @@ import graft.ops.T._
   *    single map stage (no shuffle until the per-probe top-k window, whose
   *    key count = #probes). The LSH-banded scale path for all-pairs is
   *    x_dedup_minhash's bucket join.
-  *  - x_dedup_minhash: classic MinHash-LSH — signatures are one narrow
-  *    groupBy(doc, seed), candidate pairs come from an equi-join on
-  *    (seed, signature) buckets, never a cross product.
+  *  - x_dedup_minhash / x_dedup_lsh_calibrate: thin calls into the one
+  *    minhash pair path, operators/Dedup.minhashSelfPairs — one native
+  *    signature pass per doc, identical signatures contracted, candidate
+  *    pairs from an equi-join on (seed, signature) buckets among group
+  *    representatives, never a cross product.
+  *  - x_dedup_simhash / x_dedup_jaccard share that contraction
+  *    (Dedup.SignatureGroups: signature groups, within-group pairs,
+  *    member expansion) and keep their own rep-pair joins.
   *  - x_dedup_jaccard: blocked by lang + length-band prune; the exact
   *    set-intersection runs per surviving pair. The pair join SHUFFLES on
   *    its lang equi-key (no corpus-sized broadcast), salted so a hot
@@ -71,56 +76,6 @@ object Similarity {
           / (col("nrm") * col("p_nrm")))
       .withColumn("rn", row_number().over(w).cast("bigint"))
       .filter(col("rn") <= 5)
-  }
-
-  /** MinHash-LSH band-agreement pairs (x_dedup_minhash): (a_id, b_id,
-    * n_bands) with ≥ 4 of 8 bands agreeing. Signatures via the native
-    * Md5MinHash expression (ops/Custom.scala): one codegen'd pass per
-    * document — no token explode, no groupBy shuffle (values identical to
-    * min(md5(tok ∥ '#' ∥ seed)) per seed). fan(): single-split parquet
-    * would otherwise run the signature pass in one task.
-    *
-    * Pair GENERATION contracts identical full signatures first (the
-    * x_dedup_cluster device): n_bands is a function of the two signatures
-    * alone, so a k-doc identical-signature group needs no band join at
-    * all (every within-group pair is n_bands = 8, a combination explode)
-    * and each cross-group count is decided once between representatives.
-    * The band self-join's hot buckets then hold distinct signatures, not
-    * docs — the Σk² candidate blowup (sf0.1: ~73 M intermediate rows for
-    * a 9.2 M-pair output) becomes reps-sized, while the emitted pair set
-    * is unchanged (PropertySpec pins equality with the naive form).
-    */
-  private def minhashPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
-    Custom.register(s)
-    val sigs = fan(s, t(s, d, "documents"))
-      .select(col("doc_id"), expr("graft_minhash_md5(text)").as("sig"))
-    val groups = cached(sigs.groupBy("sig")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(lit(1)).as("k")))
-    val within = groups.filter(col("k") >= 2)
-      .select(explode(expr(
-        "flatten(transform(members, (x, i) -> " +
-          "transform(slice(members, i + 2, size(members)), " +
-          "y -> named_struct('a_id', x, 'b_id', y))))")).as("p"))
-      .select(col("p.a_id"), col("p.b_id"), lit(8L).as("n_bands"))
-    val repSigs = groups.select(col("rep"),
-      posexplode(col("sig")).as(Seq("seed", "mh")))
-    val a = repSigs.select(col("rep").as("a_rep"), col("seed"), col("mh"))
-    val b = repSigs.select(col("rep").as("b_rep"),
-      col("seed").as("seed_b"), col("mh").as("mh_b"))
-    val cross = a.join(b, col("seed") === col("seed_b") &&
-        col("mh") === col("mh_b") && col("a_rep") < col("b_rep"))
-      .groupBy("a_rep", "b_rep")
-      .agg(count(lit(1)).as("n_bands"))
-      .filter(col("n_bands") >= 4)
-      .join(groups.select(col("rep").as("a_rep"), col("members").as("mem_a")), "a_rep")
-      .join(groups.select(col("rep").as("b_rep"), col("members").as("mem_b")), "b_rep")
-      .select(explode(col("mem_a")).as("x"), col("mem_b"), col("n_bands"))
-      .select(col("x"), explode(col("mem_b")).as("y"), col("n_bands"))
-      .select(least(col("x"), col("y")).as("a_id"),
-        greatest(col("x"), col("y")).as("b_id"), col("n_bands"))
-    within.union(cross)
   }
 
   val queries: Map[String, Q] = Map(
@@ -404,25 +359,16 @@ object Similarity {
         .groupBy("doc_id", "lang")
         .agg(array_sort(collect_set(col("h"))).as("mask"))
         .select("doc_id", "lang", "mask") // 1 row/doc
-      // Identical-mask CONTRACTION (the x_dedup_cluster device): template
-      // copies share the exact token set, so group docs by (lang, mask)
-      // first — Jaccard is a function of the masks alone, so every
-      // within-group pair is exactly 1.0 and every cross-group pair's
-      // value is decided once between the two group REPRESENTATIVES. The
-      // O(C(n,2)) intersection work then runs over DISTINCT masks, not
-      // docs, and the quadratic within-group pairs are emitted as a pure
-      // combination explode (output-sized, no set arithmetic).
-      val groups = cached(masks.groupBy("lang", "mask")
-        .agg(min(col("doc_id")).as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("k"))
-        .withColumn("n", size(col("mask"))))
-      val within = groups.filter(col("k") >= 2)
-        .select(explode(expr(
-          "flatten(transform(members, (x, i) -> " +
-            "transform(slice(members, i + 2, size(members)), " +
-            "y -> named_struct('a_id', x, 'b_id', y))))")).as("p"))
-        .select(col("p.a_id"), col("p.b_id"), lit(1.0).as("jacc"))
+      // Identical-mask CONTRACTION (Dedup.SignatureGroups, the one
+      // contraction of the dedup family): template copies share the exact
+      // token set, so docs group by (lang, mask) first — Jaccard is a
+      // function of the masks alone, so every within-group pair is exactly
+      // 1.0 (a combination explode, no set arithmetic) and the O(C(n,2))
+      // intersection work runs over DISTINCT masks between group
+      // REPRESENTATIVES.
+      val g = new graft.operators.Dedup.SignatureGroups(
+        masks.withColumnRenamed("mask", "sig"), "lang")
+      val groups = g.groups.withColumn("n", size(col("sig")))
       // Rep-pair generation is a SHUFFLED equi-join on lang — never a
       // corpus-sized broadcast (a 100 TB corpus's distinct masks don't
       // fit an executor: most real docs are unique). Languages are few
@@ -440,25 +386,17 @@ object Similarity {
       val cap = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val salts = broadcast(graft.operators.SaltedJoin.saltCounts(
         groups, "lang", target = 512L, cap = cap))
-      // Payload discipline per side: the a side is salted but NOT
-      // replicated (each row appears exactly once), so its member array
-      // rides inline for free; the b side IS replicated _nsalts× —
-      // carrying mem_b there would amplify the array payload through
-      // every candidate pair (the r10-VERDICT concern), so the b side
-      // ships only (rep, mask, n) and mem_b re-attaches AFTER the
-      // jacc >= 0.6 filter via ONE survivors-sized equi-join against the
-      // cached contracted frame. (Re-joining BOTH sides post-filter
-      // measured ~2 exchanges over the full surviving-pair stream in the
-      // output-dominated ScaleProbe regime — in that regime output cost
-      // is inherent, but extra exchanges on it are not.)
+      // Both sides ship only (rep, mask, n): no member array rides through
+      // the replicated b side or the candidate pairs. Members re-attach
+      // after the jacc >= 0.6 filter (g.expand: two rep-pair-sized
+      // equi-joins against the cached contracted frame).
       val a = groups.join(salts, "lang")
         .select(col("rep").as("a_rep"), col("lang"),
-          col("mask").as("ma"), col("n").as("na"),
-          col("members").as("mem_a"),
+          col("sig").as("ma"), col("n").as("na"),
           pmod(hash(col("rep")), col("_nsalts")).as("salt"))
       val b = groups.join(salts, "lang")
         .select(col("rep").as("b_rep"),
-          col("lang").as("lang_b"), col("mask").as("mb"), col("n").as("nb"),
+          col("lang").as("lang_b"), col("sig").as("mb"), col("n").as("nb"),
           explode(sequence(lit(0), col("_nsalts") - 1)).as("salt_b"))
       val repPairs = a.join(b,
           col("lang") === col("lang_b") && col("salt") === col("salt_b") &&
@@ -475,17 +413,8 @@ object Similarity {
           .cast("double"))
         .withColumn("jacc", col("inter") / (col("na") + col("nb") - col("inter")))
         .filter(col("jacc") >= 0.6)
-        .select(col("mem_a"), col("b_rep"), col("jacc"))
-      val cross = repPairs
-        .join(groups.select(col("rep").as("b_rep"), col("members").as("mem_b")),
-          "b_rep")
-        // expand the group pair to its member pairs; ids interleave
-        // across groups, so canonical ordering is least/greatest
-        .select(explode(col("mem_a")).as("x"), col("mem_b"), col("jacc"))
-        .select(col("x"), explode(col("mem_b")).as("y"), col("jacc"))
-        .select(least(col("x"), col("y")).as("a_id"),
-          greatest(col("x"), col("y")).as("b_id"), col("jacc"))
-      within.union(cross)
+        .select(col("a_rep"), col("b_rep"), col("jacc"))
+      g.within(lit(1.0).as("jacc")).union(g.expand(repPairs))
         .select(col("a_id"), col("b_id"), round(col("jacc"), 6).as("jacc"))
         .orderBy("a_id", "b_id")
     }),
@@ -570,27 +499,33 @@ object Similarity {
       graft.operators.Dedup.removeSpans(
         fan(s, t(s, d, "documents").select("doc_id", "text")), k = 8)),
 
-    // MinHash-LSH: 8 one-hash bands; pairs agreeing on >= 4 bands.
-    // Candidate generation is the classic (seed, signature) band
-    // EQUI-JOIN: signatures explode to one row per (doc, seed), the
-    // self-join key is (seed, min-hash) so matching docs meet inside a
-    // shuffle bucket, and groupBy(pair) HAVING count >= 4 scores band
-    // agreement. Scale-safe by construction: no broadcast, no cross
-    // product — shuffle volume is #docs × #seeds rows plus the candidate
-    // pairs themselves, and min-hash uniformity keeps band buckets
-    // balanced (a hot bucket = an actual duplicate cluster, which IS the
-    // output). On a mostly-unique 100 TB corpus this is O(n) + O(pairs),
-    // where the earlier cluster×cluster formulation degraded to O(n²).
-    "x_dedup_minhash" -> ((s, d) => minhashPairs(s, d).orderBy("a_id", "b_id")),
+    // MinHash-LSH: 8 one-hash bands; pairs agreeing on >= 4 bands — a thin
+    // call into the library's one pair path, Dedup.minhashSelfPairs.
+    // Signatures via the native Md5MinHash expression (ops/Custom.scala):
+    // one codegen'd pass per document (values identical to
+    // min(md5(tok ∥ '#' ∥ seed)) per seed). Identical full signatures are
+    // contracted first (Dedup.SignatureGroups): a k-doc group's pairs are
+    // a combination explode at n_bands = 8, and the (seed, mh) band
+    // EQUI-JOIN runs among group representatives only, so its hot buckets
+    // hold distinct signatures, not docs (sf0.1: the ~73 M-row Σk²
+    // candidate blowup for a 9.2 M-pair output becomes reps-sized). No
+    // broadcast, no cross product; PropertySpec pins equality with the
+    // naive band join. fan(): single-split parquet would otherwise run the
+    // signature pass in one task.
+    "x_dedup_minhash" -> ((s, d) =>
+      graft.operators.Dedup.minhashSelfPairs(
+          fan(s, t(s, d, "documents").select("doc_id", "text")))
+        .orderBy("a_id", "b_id")),
 
     // LSH PARAMETER CALIBRATION — the tuning harness run BEFORE a 100 TB
     // dedup job (x_ann_recall's dedup twin): on a 1/5 sample, measure
     // each band threshold's empirical candidate count, true-positive
     // count (token-Jaccard ≥ 0.6 among candidates), and precision, so
     // the b-of-8 threshold is CHOSEN from data instead of folklore.
-    // Candidates via the same (seed, mh) band equi-join the graded
-    // minhash key uses (≥ 1 band here — the calibration needs the full
-    // agreement histogram); true Jaccard via exact integer intersection
+    // Candidates via the graded minhash key's own pair path
+    // (Dedup.minhashSelfPairs at ≥ 1 band — the calibration needs the
+    // full agreement histogram; contraction is exact at any threshold);
+    // true Jaccard via exact integer intersection
     // counts from a token equi-join (pair-bounded output, no all-pairs
     // scan anywhere); the 4 thresholds evaluate over ONE pair frame via
     // a threshold explode. Sampling bounds the quadratic: calibration
@@ -599,14 +534,7 @@ object Similarity {
       val docs = fan(s, t(s, d, "documents")
         .filter(pmod(col("doc_id"), lit(5)) === 0)
         .select("doc_id", "text"))
-      graft.ops.Custom.register(s)
-      val sigs = docs.select(col("doc_id"),
-        posexplode(expr("graft_minhash_md5(text)")).as(Seq("seed", "mh")))
-      val pairs = sigs.as("a").join(sigs.as("b"),
-          col("a.seed") === col("b.seed") && col("a.mh") === col("b.mh") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .agg(count(lit(1)).as("n_bands"))
+      val pairs = graft.operators.Dedup.minhashSelfPairs(docs, minBands = 1)
       val toks = docs.select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("tok"))
       val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -637,9 +565,10 @@ object Similarity {
     // minhash pair graph (transitive chains a~b~c collapse to one
     // cluster; cluster_id = the component's min doc_id — the canonical
     // survivor a curation pipeline keeps). Computed via identical-
-    // signature contraction (Dedup.minhashComponents): template copies
+    // signature contraction (Dedup.minhashComponents, on the same
+    // SignatureGroups as the x_dedup_minhash pair path): template copies
     // collapse to one super-node BEFORE the band join and the CC rounds,
-    // so edge volume is corpus-linear plus a distinct-signatures join —
+    // so edge volume is the distinct-signatures rep-pair join —
     // identical components to CC over the raw pair graph (the quotient-
     // graph argument on minhashComponents), which is what the oracle's
     // recursive reachability CTE computes.
@@ -693,7 +622,8 @@ object Similarity {
       // minBands = 8 ⇒ the pair graph is exactly the identical-signature
       // relation, so the contracted form's rep-pair join is empty and
       // components are the signature groups themselves — same result as
-      // CC over minhashSelfPairs(minBands = 8), at star-edge cost.
+      // CC over minhashSelfPairs(minBands = 8), with no CC round over
+      // member edges.
       graft.operators.Dedup.minhashComponents(
           fan(s, docs.select("doc_id", "text")), minBands = 8)
         .join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
@@ -742,50 +672,34 @@ object Similarity {
       // repartition the per-doc signature pass and the band join's
       // shuffle write all run in one task (the old groupBy pipeline got
       // its parallelism from the agg exchange as a side effect).
-      val sigs = fan(s, t(s, d, "documents"))
-        .select(col("doc_id"), expr("graft_simhash_md5(text)").as("sig"))
-      // Identical-signature CONTRACTION (the cluster/jaccard/minhash
-      // device): hamming is a function of the two signatures alone, so a
-      // k-doc identical-signature group emits its pairs as a combination
-      // explode (ham = 0) and every cross-group distance is decided once
-      // between representatives — the band join's hot buckets then hold
-      // distinct signatures, not docs.
-      val groups = cached(sigs.groupBy("sig")
-        .agg(min(col("doc_id")).as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("k")))
-      val within = groups.filter(col("k") >= 2)
-        .select(explode(expr(
-          "flatten(transform(members, (x, i) -> " +
-            "transform(slice(members, i + 2, size(members)), " +
-            "y -> named_struct('a_id', x, 'b_id', y))))")).as("p"))
-        .select(col("p.a_id"), col("p.b_id"), lit(0).cast("int").as("ham"))
+      // Identical-signature CONTRACTION (Dedup.SignatureGroups): hamming
+      // is a function of the two signatures alone, so a k-doc group's
+      // pairs are a combination explode (ham = 0) and every cross-group
+      // distance is decided once between representatives — the band
+      // join's hot buckets then hold distinct signatures, not docs.
+      val g = new graft.operators.Dedup.SignatureGroups(fan(s, t(s, d, "documents"))
+        .select(col("doc_id"), expr("graft_simhash_md5(text)").as("sig")))
       // 9 bands over bits 0..59: offsets/widths (0,7)(7,7)…(35,7)(42,6)(48,6)(54,6)
       val bandVals = (0 until 9).map { i =>
         val off = if (i < 6) 7 * i else 42 + 6 * (i - 6)
         val width = if (i < 6) 7 else 6
         shiftright(col("sig"), off).bitwiseAND(lit((1L << width) - 1))
       }
-      val banded = groups.select(col("rep"), col("sig"),
+      val banded = g.groups.select(col("rep"), col("sig"),
         posexplode(array(bandVals: _*)).as(Seq("band", "bits")))
       val a = banded.select(col("rep").as("a_rep"), col("sig").as("sa"),
         col("band"), col("bits"))
       val b = banded.select(col("rep").as("b_rep"), col("sig").as("sb"),
         col("band").as("band_b"), col("bits").as("bits_b"))
-      val cross = a.join(b,
+      val repPairs = a.join(b,
           col("band") === col("band_b") && col("bits") === col("bits_b") &&
           col("a_rep") < col("b_rep"))
         .select("a_rep", "b_rep", "sa", "sb")
         .distinct() // a rep pair can agree on several bands
         .withColumn("ham", bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
         .filter(col("ham") <= 8)
-        .join(groups.select(col("rep").as("a_rep"), col("members").as("mem_a")), "a_rep")
-        .join(groups.select(col("rep").as("b_rep"), col("members").as("mem_b")), "b_rep")
-        .select(explode(col("mem_a")).as("x"), col("mem_b"), col("ham"))
-        .select(col("x"), explode(col("mem_b")).as("y"), col("ham"))
-        .select(least(col("x"), col("y")).as("a_id"),
-          greatest(col("x"), col("y")).as("b_id"), col("ham"))
-      within.union(cross)
+        .select("a_rep", "b_rep", "ham")
+      g.within(lit(0).cast("int").as("ham")).union(g.expand(repPairs))
         .orderBy("a_id", "b_id")
     }),
 

@@ -235,25 +235,19 @@ object ScaleProbe {
       val (tc10, nc10) = time(graft.operators.Dedup.connectedComponents(chainPairs(1000000L)))
       println(f"connectedComponents chains base ${tc1}%6.2fs ($nc1 nodes) -> 10x ${tc10}%7.2fs ($nc10 nodes; factor ${tc10 / tc1}%5.1f)")
     }
-    // Clustering with vs without identical-signature contraction. The
-    // naive path's pair graph grows quadratically in duplicate-cluster
-    // size (sf0.1: 9.2 M pairs over 5 000 docs), so it is only run at
-    // base scale; the contracted path runs at base AND 10× — its edges
-    // are corpus-linear + a distinct-signatures join, so the factor
+    // Clustering via identical-signature contraction at base AND 10×: its
+    // edges are corpus-linear + a distinct-signatures join, so the factor
     // should track corpus growth, not cluster-size².
     if (mode == "all" || mode == "cluster") {
       val docsB = base.select("doc_id", "text")
       val docsX = spark.read.parquet(s"$bigDir/documents.parquet")
         .select("doc_id", "text")
-      val (tn, _) = time(graft.operators.Dedup.connectedComponents(
-        graft.operators.Dedup.minhashSelfPairs(docsB)))
-      graft.ops.T.releaseCaches(blocking = true)
       val (tc, nc) = time(graft.operators.Dedup.minhashComponents(docsB))
       graft.ops.T.releaseCaches(blocking = true)
       val (tcX, ncX) = time(graft.operators.Dedup.minhashComponents(docsX))
       graft.ops.T.releaseCaches(blocking = true)
-      println(f"cluster naive-pairs base ${tn}%6.2fs vs contracted base ${tc}%6.2fs " +
-        f"($nc nodes) -> 10x ${tcX}%7.2fs ($ncX nodes; factor ${tcX / tc}%5.1f)")
+      println(f"cluster contracted base ${tc}%6.2fs ($nc nodes) -> 10x ${tcX}%7.2fs " +
+        f"($ncX nodes; factor ${tcX / tc}%5.1f)")
     }
     // pageRank edge-linearity: synthetic host graphs at 1 M and 10 M
     // edges (100 k / 1 M nodes). Per-iteration work is one rank ⋈ edges

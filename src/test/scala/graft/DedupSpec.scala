@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -109,14 +110,7 @@ class DedupSpec extends SparkSpec {
       Array("doc_id", "quality"))
   }
 
-  test("minhashSelfPairs equals the graded x_dedup_minhash; cap bounds self-join fan-out") {
-    import graft.ops.T
-    val docs = T.t(spark, sf(), "documents").select("doc_id", "text")
-    val lib = Dedup.minhashSelfPairs(docs)
-      .as[(Long, Long, Long)].collect().toSet
-    val graded = SparkEntry.queries("x_dedup_minhash")(spark, sf())
-      .as[(Long, Long, Long)].collect().toSet
-    assert(lib === graded)
+  test("minhashSelfPairs maxBandFreq bounds self-join fan-out, keeps real pairs") {
     // boilerplate fixture: 6 identical docs + 1 genuine near-dup pair
     val boiler = "nav home about contact privacy terms copyright all " +
       "rights reserved follow us on social media subscribe newsletter"
@@ -267,11 +261,30 @@ class DedupSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS ingest_idx")
   }
 
-  test("minhashComponents == CC over minhashSelfPairs (contraction is exact)") {
-    // Mixed corpus: an identical-text group {1,2,3} (one signature group,
-    // contracted to a star), a near-dup neighbor 4 of that group (reaches
-    // it only through a rep pair), an unrelated near pair {10,11}, and a
-    // singleton 20 that must appear in neither output.
+  /** Naive reference for the minhash pair semantics: the textbook band
+    * self-join over Dedup.minhashSignatures, with (seed, mh) keys carried
+    * by more than `cap` docs stop-listed first.
+    */
+  private def naivePairs(docs: DataFrame, minBands: Int,
+      cap: Option[Long] = None): DataFrame = {
+    val all = Dedup.minhashSignatures(docs)
+    val sigs = cap.fold(all) { c =>
+      all.join(all.groupBy("seed", "mh").count().filter(col("count") > c),
+        Seq("seed", "mh"), "left_anti")
+    }
+    sigs.select(col("doc_id").as("a_id"), col("seed"), col("mh"))
+      .join(sigs.select(col("doc_id").as("b_id"), col("seed"), col("mh")),
+        Seq("seed", "mh"))
+      .filter(col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_bands"))
+      .filter(col("n_bands") >= minBands)
+  }
+
+  test("minhashSelfPairs/minhashComponents == naive band self-join (contraction exact)") {
+    // Mixed corpus: an identical-text group {1,2,3} (one signature group),
+    // a near-dup neighbor 4 of that group (reaches it only through a rep
+    // pair), an unrelated near pair {10,11}, and a singleton 20 that must
+    // appear in neither output.
     val base = "alpha beta gamma delta epsilon zeta eta theta"
     val docs = Seq(
       1L -> base, 2L -> base, 3L -> base,
@@ -280,19 +293,49 @@ class DedupSpec extends SparkSpec {
       11L -> "one two three four five six seven nine",
       20L -> "totally unrelated vocabulary here indeed")
       .toDF("doc_id", "text")
-    val naive = Dedup.connectedComponents(Dedup.minhashSelfPairs(docs))
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    val contracted = Dedup.minhashComponents(docs)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(contracted === naive)
-    assert(naive.map(_._1).contains(1L) && !naive.map(_._1).contains(20L))
-    // and at minBands = 8 both forms still agree (rep pairs vanish)
-    val naive8 = Dedup.connectedComponents(
-        Dedup.minhashSelfPairs(docs, minBands = 8))
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    val contracted8 = Dedup.minhashComponents(docs, minBands = 8)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(contracted8 === naive8)
+    // caps 2 and 3 stop-list all / part of the group's bands, so the
+    // contracted path must count live bands per group and per rep pair
+    for (minBands <- Seq(1, 4, 8); cap <- Seq(None, Some(2L), Some(3L))) {
+      val naive = naivePairs(docs, minBands, cap).as[(Long, Long, Long)].collect().toSet
+      val lib = Dedup.minhashSelfPairs(docs, minBands, cap)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(lib === naive, s"minBands=$minBands cap=$cap")
+    }
+    for (minBands <- Seq(4, 8)) {
+      val naive = Dedup.connectedComponents(naivePairs(docs, minBands))
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+      val contracted = Dedup.minhashComponents(docs, minBands)
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+      assert(contracted === naive, s"minBands=$minBands")
+      assert(naive.map(_._1).contains(1L) && !naive.map(_._1).contains(20L))
+    }
+  }
+
+  test("null text has no signature: no pair, no cluster (library and graded keys)") {
+    // 3 null texts, 2 identical texts, 1 unique text. A null text has no
+    // token set, so it matches nothing — not even another null text.
+    val same = "the quick brown fox jumps over the lazy dog"
+    val docs = Seq[(Long, String)](1L -> null, 2L -> null, 3L -> null,
+        4L -> same, 5L -> same,
+        6L -> "ein ganz anderer satz ueber schiffe sterne und meere")
+      .toDF("doc_id", "text")
+    assert(Dedup.minhashSelfPairs(docs).as[(Long, Long, Long)].collect().toSet ===
+      Set((4L, 5L, 8L)))
+    assert(Dedup.minhashComponents(docs).as[(Long, Long, Long)].collect().toSeq ===
+      Seq((4L, 4L, 2L), (5L, 4L, 2L)))
+    val dir = java.nio.file.Files.createTempDirectory("nulltext").toString
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val graded = SparkEntry.queries("x_dedup_minhash")(spark, dir)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(graded === Set((4L, 5L, 8L)))
+    val sim = SparkEntry.queries("x_dedup_simhash")(spark, dir)
+      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    assert(sim === Set((4L, 5L)))
+    // Empty text is an ordinary token set (one empty token), not null:
+    // two empty docs are an 8-band pair.
+    val empty = docs.union(Seq[(Long, String)](7L -> "", 8L -> "").toDF("doc_id", "text"))
+    assert(Dedup.minhashSelfPairs(empty).as[(Long, Long, Long)].collect().toSet ===
+      Set((4L, 5L, 8L), (7L, 8L, 8L)))
   }
 
   test("x_dedup_cluster agrees with x_dedup_minhash pairs on sf0.001") {
