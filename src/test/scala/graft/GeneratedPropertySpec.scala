@@ -151,6 +151,67 @@ class GeneratedPropertySpec extends SparkSpec {
     assert(docs.exists { case (id, text) => out(id) != text })
   }
 
+  test("property: removeSpans equals a from-scratch cut model (k 2/3/8, minDocs 2/3)") {
+    import spark.implicits._
+    // Texts are segments of: a five-token alphabet with "" (short repeats
+    // everywhere, overlapping hit windows for k = 2 and 3, runs of
+    // spaces), slices of three 14-word templates (shared and overlapping
+    // runs long enough for k = 8, sometimes twice in one doc), and fresh
+    // words. Plus null, empty and shorter-than-k texts; ids are permuted
+    // so the canonical (min id) doc is not the first generated.
+    val tiny = Gen.oneOf("a", "b", "c", "", "dd")
+    val tmpl = sample(Gen.listOfN(3, Gen.listOfN(14, word)), 61L)
+    val slice: Gen[Seq[String]] = for {
+      t <- Gen.oneOf(tmpl)
+      from <- Gen.choose(0, 6)
+      len <- Gen.choose(4, 14 - from)
+    } yield t.slice(from, from + len)
+    val segment: Gen[Seq[String]] = Gen.frequency(
+      3 -> Gen.choose(1, 4).flatMap(Gen.listOfN(_, tiny)),
+      3 -> slice,
+      2 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, word)))
+    val text: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some("")),
+      1 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, word)).map(w => Some(w.mkString(" "))),
+      10 -> Gen.choose(1, 4).flatMap(Gen.listOfN(_, segment))
+        .map(s => Some(s.flatten.mkString(" "))))
+    val n = 80
+    val docs = sample(Gen.listOfN(n, text), 62L).zipWithIndex
+      .map { case (t, i) => ((i * 37 % n).toLong, t.orNull) }
+    assert(docs.exists(_._2 == null) && docs.exists(_._2 == ""))
+    val df = docs.toDF("doc_id", "text")
+    // the model, from the spec: a k-token window repeated in >= minDocs
+    // distinct docs keeps its min-id doc; every other doc loses tokens
+    // [pos, pos + k) of each occurrence; kept tokens rejoin with ' '
+    def model(k: Int, minDocs: Int): Seq[(Long, String)] = {
+      val toks = docs.map { case (id, t) => id -> Option(t).map(_.split(" ", -1).toSeq) }
+      val wins = for {
+        (id, Some(ts)) <- toks
+        i <- 0 to ts.length - k
+      } yield (ts.slice(i, i + k), id, i)
+      val canon = wins.groupBy(_._1).collect {
+        case (w, occ) if occ.map(_._2).distinct.size >= minDocs => w -> occ.map(_._2).min
+      }
+      val cuts = wins.collect { case (w, id, i) if canon.get(w).exists(_ != id) => id -> i }
+        .groupMap(_._1)(_._2)
+      toks.map { case (id, ot) =>
+        id -> ot.fold("") { ts =>
+          val cs = cuts.getOrElse(id, Nil)
+          ts.indices.filterNot(j => cs.exists(s => s <= j && j < s + k)).map(ts).mkString(" ")
+        }
+      }.sortBy(_._1)
+    }
+    for (k <- Seq(2, 3, 8); minDocs <- Seq(2, 3)) {
+      val want = model(k, minDocs)
+      val got = graft.operators.Dedup.removeSpans(df, k = k, minDocs = minDocs)
+        .as[(Long, String)].collect().toSeq
+      assert(got === want, s"k=$k minDocs=$minDocs")
+      assert(want.exists { case (id, t) => t != Option(docs.toMap.apply(id)).getOrElse("") },
+        s"k=$k minDocs=$minDocs: the corpus cut nothing")
+    }
+  }
+
   test("property: BpeEncode matches a from-scratch greedy model on random vocab/docs") {
     import spark.implicits._
     graft.ops.Custom.register(spark)
