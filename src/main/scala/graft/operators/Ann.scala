@@ -362,15 +362,6 @@ object Ann {
       probeBands, emb, probes, k, nBits / nBands, probeRadius, broadcastProbes)
   }
 
-  /** IVF (inverted-file) top-k — the other classic ANN scale path. Build:
-    * `nLists` centroids via a few deterministic Lloyd iterations (seeded
-    * init from hashed ids; each iteration is one groupBy + the
-    * element-wise-mean Aggregator — agg→decide→reapply, §3.3); every
-    * vector is assigned to its nearest centroid (inverted list). Search:
-    * a probe scans only the `nProbe` nearest lists. At 100 TB the
-    * assignment is a narrow map against broadcast centroids and the
-    * search shuffles only the probed lists.
-    */
   /** (squared-L2-to-centroid, cid) struct array over `embCol` — shared by
     * list assignment (argmin) and probe routing (sorted prefix).
     */
@@ -390,16 +381,20 @@ object Ann {
   /** Deterministic Lloyd training over a (vec_id, emb) frame: seeded init
     * from hashed ids, `iters` assign→mean rounds. Only the nLists×dim
     * centroid matrix reaches the driver (agg→decide, §3.3). `base` should
-    * be persisted by the caller for the duration.
+    * be cached by the caller for the duration ([[graft.ops.T.cached]]).
     */
   private def lloydCentroids(base: DataFrame, nLists: Int,
       iters: Int): Array[(Int, Seq[Double])] = {
+    // One shuffle per round: the (cid, dim) means are nLists×dim rows, so
+    // they are collected as they are and assembled into vectors here,
+    // not regrouped per cid by a second exchange.
     def meanByCid(df: DataFrame): Array[(Int, Seq[Double])] = df
       .select(col("cid"), posexplode(col("emb")).as(Seq("dim", "v")))
       .groupBy("cid", "dim").agg(avg("v").as("m"))
-      .groupBy("cid")
-      .agg(expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)").as("c"))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1))
+      .collect()
+      .groupBy(_.getInt(0))
+      .map { case (cid, rs) => cid -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
+      .toArray.sortBy(_._1)
     var centroids: Array[(Int, Seq[Double])] = meanByCid(
       base.withColumn("cid", pmod(hash(col("vec_id")), lit(nLists))))
     for (_ <- 1 to iters) {
@@ -421,17 +416,25 @@ object Ann {
       .select(col("probe_id"), col("emb").as("p_emb"), col("cid"))
       .withColumn("p_nrm", sqrt(dot(col("p_emb"), col("p_emb"))))
 
+  /** IVF (inverted-file) top-k — the other classic ANN scale path. Build:
+    * `nLists` centroids via a few deterministic Lloyd iterations (seeded
+    * init from hashed ids; each iteration is one (cid, dim) mean
+    * aggregate collected to the driver — agg→decide→reapply, §3.3);
+    * every vector is assigned to its nearest centroid (inverted list).
+    * Search: a probe scans only the `nProbe` nearest lists. At 100 TB the
+    * assignment is a narrow map against broadcast centroids and the
+    * search shuffles only the probed lists.
+    */
   def ivfTopK(emb: DataFrame, probes: DataFrame, k: Int,
       nLists: Int = 8, nProbe: Int = 2, iters: Int = 3): DataFrame = {
-    // cached for the duration of the Lloyd loop: every iteration scans it
-    // for assignment + centroid means, and without the cache each of the
-    // iters+1 collect() jobs would re-read and re-transform the input.
-    val base = emb.select(col("vec_id"), embDouble(col("embedding")).as("emb"))
-      .persist()
+    // cached for the Lloyd loop (each of its iters+1 collect() jobs scans
+    // it) AND the lazy `lists` plan below — T.cached, as in ivfPqTopK: an
+    // unpersist before returning would drop the cache before the caller
+    // ever runs the search, which then recomputes base from the input.
+    val base = graft.ops.T.cached(
+      emb.select(col("vec_id"), embDouble(col("embedding")).as("emb")))
     val centroids = lloydCentroids(base, nLists, iters)
-    // inverted lists + multi-probe search (release the build-time cache;
-    // the final assignment below recomputes base once if evicted)
-    base.unpersist(blocking = false)
+    // inverted lists + multi-probe search
     val lists = assignTo(base, centroids, "cid")
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val probeCids = probeRouting(probes, centroids, nProbe)
@@ -1002,10 +1005,6 @@ object Ann {
     adcTopK(spark.table(table), probes, topK, cb, refine, embOpt)
   }
 
-  /** Embedding-cosine near-duplicate pairs (cosine >= minCos), found via
-    * signature-band blocking + exact verification. Self-join form of
-    * lshTopK; output pairs are canonical (a_id < b_id).
-    */
   /** SemDedup-style semantic near-duplicate pairs (Abbas et al. 2023):
     * assign every vector to its nearest Lloyd centroid (the IVF
     * clustering this module already trains), then verify exact cosine ≥
@@ -1025,7 +1024,8 @@ object Ann {
     */
   def semanticNearDupPairs(emb: DataFrame, minCos: Double,
       nLists: Int = 8, iters: Int = 3): DataFrame = {
-    val base = emb.select(col("vec_id"), embDouble(col("embedding")).as("emb"))
+    val base = graft.ops.T.cached(
+      emb.select(col("vec_id"), embDouble(col("embedding")).as("emb")))
     val cs = lloydCentroids(base, nLists, iters)
     val assigned = graft.ops.T.cached(assignTo(base, cs, "cid")
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb")))))
@@ -1040,6 +1040,10 @@ object Ann {
       .select("a_id", "b_id", "cos")
   }
 
+  /** Embedding-cosine near-duplicate pairs (cosine >= minCos), found via
+    * signature-band blocking + exact verification. Self-join form of
+    * lshTopK; output pairs are canonical (a_id < b_id).
+    */
   def cosineNearDupPairs(emb: DataFrame, minCos: Double,
       nBits: Int = 16, nBands: Int = 4, dim: Int = 64, seed: Long = 42L): DataFrame = {
     require(nBits % nBands == 0)

@@ -86,15 +86,32 @@ object Dedup {
     * is exact: decimal(38,0) holds ~1e38, and any real graph is below
     * ~1e19 rows × max-long labels. The ONE aggregate job doubles as the
     * round's checkpoint materialization (the former spelling needed the
-    * per-round old-vs-new join just to feed a changed-rows count).
+    * per-round old-vs-new join just to feed a changed-rows count); the
+    * row count rides in the same aggregate for [[ccProbe]]'s check.
     */
-  private def labSum(labels: DataFrame): Option[java.math.BigDecimal] =
-    Option(labels.agg(sum(col("lab").cast("decimal(38,0)"))).head.getDecimal(0))
+  private def labSum(labels: DataFrame): Option[java.math.BigDecimal] = {
+    val r = labels.agg(count(lit(1)), sum(col("lab").cast("decimal(38,0)"))).head
+    ccProbe(r.getLong(0), r.getDecimal(1))
+  }
+
+  /** The probe value of a label frame with `n` rows and label sum `s`:
+    * None for the empty graph, the sum otherwise. A null sum over a
+    * NON-empty frame is a decimal overflow (non-ANSI mode returns null
+    * instead of failing) — two such rounds would compare equal and stop
+    * the loop on unconverged labels, so it fails loudly here instead.
+    */
+  private[graft] def ccProbe(n: Long,
+      s: java.math.BigDecimal): Option[java.math.BigDecimal] =
+    if (n > 0 && s == null)
+      throw new IllegalStateException(
+        s"connectedComponents: the label sum of $n rows overflowed decimal(38,0); " +
+          "the convergence probe cannot decide")
+    else Option(s)
 
   /** Value equality of two probe sums (BigDecimal.equals is scale-
     * sensitive; compareTo is the value compare). None = empty graph.
     */
-  private def ccSumEq(a: Option[java.math.BigDecimal],
+  private[graft] def ccSumEq(a: Option[java.math.BigDecimal],
       b: Option[java.math.BigDecimal]): Boolean = (a, b) match {
     case (Some(x), Some(y)) => x.compareTo(y) == 0
     case (None, None) => true
@@ -636,41 +653,6 @@ object Dedup {
     novel
   }
 
-  /** Exact-substring (repeated k-token span) dedup — the Lee-et-al.-style
-    * family the set/sketch methods miss: two documents that are globally
-    * dissimilar but share a long VERBATIM run (boilerplate header,
-    * license block, templated chrome). Finds, for every document, the
-    * maximal token spans whose every k-token window also occurs in at
-    * least `minDocs` distinct documents.
-    *
-    * Pipeline (all corpus-linear, no cross product):
-    *  1. one md5 per TOKEN → polynomial k-window hashes over the hash
-    *     array ([[graft.functions.TextAnalysis.windowHashes]]) — the
-    *     rolling-hash trick split into its O(n) hashing half and its
-    *     O(n·k) cheap integer half, both narrow map work;
-    *  2. explode to (doc_id, pos, wh): one row per token position — the
-    *     INVERTED INDEX over window hashes (the x_dedup_ngram device,
-    *     one level below: windows, not shingle strings, so matches are
-    *     order-sensitive and position-addressed);
-    *  3. window hashes repeated across ≥ minDocs documents (one
-    *     partial-combined count-distinct agg, uniform md5-derived keys);
-    *  4. left-semi join positions against the repeated set (equi on the
-    *     hash — shuffle volume is corpus-linear; a hot hash IS shared
-    *     boilerplate, which is the output);
-    *  5. merge overlapping/adjacent hit windows into maximal spans: the
-    *     gaps-and-islands lag-window (the t_session device) per doc —
-    *     same-length intervals merge exactly when starts differ by ≤ k.
-    *
-    * Scale (100 TB): steps 1-2 are map-side; 3-4 shuffle on the window
-    * hash (uniform by construction); 5 shuffles on doc_id. Span OUTPUT is
-    * bounded by the input token count — unlike pair emission there is no
-    * quadratic blowup on duplicate-heavy corpora, which is why this is
-    * the production first-pass: remove the spans, THEN run document-level
-    * near-dup on what remains.
-    *
-    * @return (doc_id, span_start, span_len) — 0-based token offset and
-    *         token length of each maximal duplicated span, ordered
-    */
   /** The excision step completing the exact-substring family: rewrite
     * every document with its duplicated spans REMOVED, keeping exactly
     * one occurrence corpus-wide (the one in the minimum doc_id — the
@@ -679,54 +661,49 @@ object Dedup {
     * vanish from every copy but one, and the documents themselves
     * survive for document-level near-dup afterwards.
     *
-    * Same corpus-linear machinery as [[substringSpans]] plus: a min-agg
-    * picks each repeated window's canonical doc; non-canonical hit
-    * windows explode to covered token indexes (k rows per hit); an
-    * anti-join drops those tokens; a per-doc sort-agg rebuilds the text.
-    * Every stage is an equi-shuffle on a hash or doc_id — no broadcast
-    * of anything corpus-sized, no pair materialization at all.
+    * Pipeline (corpus-linear, no cross product, no pair emission):
+    *  1. the cached [[windowFrame]] rows (doc_id, pos, wh) — the same
+    *     inverted index [[substringSpans]] reads;
+    *  2. [[repeatedWindows]]: ONE aggregate per window hash gives both
+    *     the repeat test (≥ minDocs distinct docs) and the canonical
+    *     min(doc_id);
+    *  3. every occurrence outside its canonical doc is a cut start;
+    *     `collect_list(pos)` per doc_id gathers each doc's starts;
+    *  4. the docs left-join their cuts, and one narrow per-doc
+    *     projection ([[graft.ops.RemoveTokenSpans]], codegen'd, linear
+    *     in tokens + cuts) drops tokens [s, s + k) of every start s and
+    *     rejoins the rest with ' '.
+    * No per-token explode, anti-join or per-doc sort-and-rebuild: a doc
+    * without cuts passes through the projection byte-identical. The
+    * shuffles are the distinct-count aggregate's two (on wh), the cut
+    * collection (on doc_id) and the output sort; the two joins
+    * broadcast only when their build sides are small.
     *
-    * @return (doc_id, text) for EVERY input doc — untouched docs pass
-    *         through byte-identical, fully-covered docs come back empty
+    * @return (doc_id, text) for EVERY input doc, ordered by doc_id —
+    *         untouched docs pass through byte-identical; fully-covered
+    *         docs and null texts come back empty
     */
   def removeSpans(docs: DataFrame, textCol: String = "text", k: Int = 8,
       minDocs: Int = 2): DataFrame = {
-    import graft.functions.TextAnalysis.windowHashes
-    val toks = T.cached(docs
-      .select(col("doc_id"), split(col(textCol), " ").as("tk"))
-      .withColumn("hs", transform(col("tk"), tk =>
-        pmod(conv(substring(md5(tk), 1, 8), 16, 10).cast("long"),
-          lit(graft.functions.TextAnalysis.fingerprintMod)))))
-    val wins = T.cached(toks.filter(size(col("hs")) >= k)
-      .select(col("doc_id"), posexplode(windowHashes(col("hs"), k)))
-      .toDF("doc_id", "pos", "wh"))
-    val repeated = wins.groupBy("wh")
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs).select("wh")
-    val hits = wins.join(repeated, Seq("wh"), "left_semi")
-    val canon = hits.groupBy("wh").agg(min("doc_id").as("cdoc"))
-    val cut = hits.join(canon, "wh")
+    import org.apache.spark.sql.GraftBridge.{columnOf, exprOf}
+    val wins = T.cached(windowFrame(docs, textCol, k))
+    val cuts = wins.join(repeatedWindows(wins, minDocs), "wh")
       .filter(col("doc_id") =!= col("cdoc"))
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + lit(k - 1))).as("idx"))
-      .distinct()
-    val kept = toks
-      .select(col("doc_id"), posexplode(col("tk")).as(Seq("idx", "tok")))
-      .join(cut, Seq("doc_id", "idx"), "left_anti")
-      .groupBy("doc_id")
-      .agg(concat_ws(" ", expr(
-        "transform(array_sort(collect_list(struct(idx, tok))), s -> s.tok)"))
-        .as("kept_text"))
-    // left join back so fully-cut docs return as empty, not vanish
-    docs.select(col("doc_id"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("kept_text"), lit("")).as(textCol))
+      .groupBy("doc_id").agg(collect_list("pos").as("cut_pos"))
+    val starts = coalesce(col("cut_pos"), typedLit(Seq.empty[Int]))
+    val kept = columnOf(graft.ops.RemoveTokenSpans(exprOf(col(textCol)), exprOf(starts), k))
+    docs.select(col("doc_id"), col(textCol))
+      .join(cuts, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(kept, lit("")).as(textCol))
       .orderBy("doc_id")
   }
 
   /** (doc_id, pos, wh): every k-token window hash of every doc — the
     * shared inverted-index feedstock of the substring family
-    * ([[substringSpans]], [[decontaminate]]).
+    * ([[substringSpans]], [[removeSpans]], [[decontaminate]]). Docs
+    * shorter than k (and null texts) have no windows: windowHashes
+    * returns [] for them, so no length filter is needed — one would be
+    * pushed below the projection and hash every token twice.
     */
   private def windowFrame(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     import graft.functions.TextAnalysis.{tokenHashesMd5, windowHashes}
@@ -734,10 +711,22 @@ object Dedup {
     // reads an attribute, not a re-derived expression (CollapseProject
     // keeps multi-use non-cheap aliases in their own stage).
     docs.select(col("doc_id"), tokenHashesMd5(col(textCol)).as("hs"))
-      .filter(size(col("hs")) >= k)
       .select(col("doc_id"), posexplode(windowHashes(col("hs"), k)))
       .toDF("doc_id", "pos", "wh")
   }
+
+  /** (wh, cdoc): every window hash occurring in ≥ `minDocs` distinct
+    * docs, with its canonical (minimum) doc — ONE partial-combined
+    * aggregate over [[windowFrame]] rows, shared by [[substringSpans]]
+    * (which keeps the hashes; the unused min is pruned) and
+    * [[removeSpans]] (which cuts every occurrence outside cdoc). Keys
+    * are uniform md5-derived hashes; a hot hash IS shared boilerplate.
+    */
+  private def repeatedWindows(wins: DataFrame, minDocs: Int): DataFrame =
+    wins.groupBy("wh")
+      .agg(count_distinct(col("doc_id")).as("nd"), min("doc_id").as("cdoc"))
+      .filter(col("nd") >= minDocs)
+      .select("wh", "cdoc")
 
   /** Per-doc benchmark-contamination counts: how many of a document's
     * k-token windows also occur ANYWHERE in `benchmark` (the
@@ -769,14 +758,46 @@ object Dedup {
     docs.join(doomed, Seq("doc_id"), "left_anti")
   }
 
+  /** Exact-substring (repeated k-token span) dedup — the Lee-et-al.-style
+    * family the set/sketch methods miss: two documents that are globally
+    * dissimilar but share a long VERBATIM run (boilerplate header,
+    * license block, templated chrome). Finds, for every document, the
+    * maximal token spans whose every k-token window also occurs in at
+    * least `minDocs` distinct documents.
+    *
+    * Pipeline (all corpus-linear, no cross product):
+    *  1. one md5 per TOKEN → polynomial k-window hashes over the hash
+    *     array ([[graft.functions.TextAnalysis.windowHashes]]) — the
+    *     rolling-hash trick split into its O(n) hashing half and its
+    *     O(n·k) cheap integer half, both narrow map work;
+    *  2. explode to (doc_id, pos, wh): one row per token position — the
+    *     INVERTED INDEX over window hashes ([[windowFrame]]; the
+    *     x_dedup_ngram device one level below: windows, not shingle
+    *     strings, so matches are order-sensitive and position-addressed);
+    *  3. window hashes repeated across ≥ minDocs documents
+    *     ([[repeatedWindows]], the aggregate [[removeSpans]] shares);
+    *  4. left-semi join positions against the repeated set (equi on the
+    *     hash — shuffle volume is corpus-linear; a hot hash IS shared
+    *     boilerplate, which is the output);
+    *  5. merge overlapping/adjacent hit windows into maximal spans: the
+    *     gaps-and-islands lag-window (the t_session device) per doc —
+    *     same-length intervals merge exactly when starts differ by ≤ k.
+    *
+    * Scale (100 TB): steps 1-2 are map-side; 3-4 shuffle on the window
+    * hash (uniform by construction); 5 shuffles on doc_id. Span OUTPUT is
+    * bounded by the input token count — unlike pair emission there is no
+    * quadratic blowup on duplicate-heavy corpora, which is why this is
+    * the production first-pass: remove the spans, THEN run document-level
+    * near-dup on what remains.
+    *
+    * @return (doc_id, span_start, span_len) — 0-based token offset and
+    *         token length of each maximal duplicated span, ordered
+    */
   def substringSpans(docs: DataFrame, textCol: String = "text", k: Int = 8,
       minDocs: Int = 2): DataFrame = {
     val wins = T.cached(windowFrame(docs, textCol, k))
-    val repeated = wins.groupBy("wh")
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs)
-      .select("wh")
-    val hits = wins.join(repeated, Seq("wh"), "left_semi")
+    val hits = wins.join(repeatedWindows(wins, minDocs).select("wh"), Seq("wh"),
+      "left_semi")
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     hits

@@ -357,6 +357,77 @@ object Md5MinHash {
   }
 }
 
+/** Span excision over a space-tokenized string: drops every token covered
+  * by some `[s, s + k)` with `s` in `starts` (0-based token offsets of
+  * `split(text, ' ')`) and rejoins the kept tokens with ' ' — equal to
+  * `concat_ws(' ', kept tokens in order)`, so an empty `starts` returns
+  * the text byte-identical. One pass over the UTF-8 bytes (0x20 never
+  * occurs inside a multi-byte sequence) plus one over the starts via a
+  * coverage difference array: O(bytes + starts), no sort, where an
+  * `exists` lambda per token would be O(tokens × starts) and
+  * interpreted. The rewrite step of [[graft.operators.Dedup.removeSpans]].
+  */
+case class RemoveTokenSpans(left: Expression, right: Expression, k: Int)
+  extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType, ArrayType(IntegerType))
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_remove_spans"
+  override protected def nullSafeEval(text: Any, starts: Any): Any =
+    RemoveTokenSpans.compute(text.asInstanceOf[UTF8String],
+      starts.asInstanceOf[ArrayData], k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) => s"graft.ops.RemoveTokenSpans.compute($t, $s, $k)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object RemoveTokenSpans {
+  def compute(text: UTF8String, starts: ArrayData, k: Int): UTF8String = {
+    val ns = starts.numElements()
+    if (ns == 0) return text
+    val bytes = text.getBytes
+    var nTok = 1
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') nTok += 1; i += 1 }
+    // depth(t) - depth(t - 1) = spans opening at t minus spans closing at t
+    val delta = new Array[Int](nTok + 1)
+    i = 0
+    while (i < ns) {
+      if (!starts.isNullAt(i)) {
+        val s = starts.getInt(i)
+        if (s >= 0 && s < nTok) {
+          delta(s) += 1
+          delta(math.min(s + k, nTok)) -= 1
+        }
+      }
+      i += 1
+    }
+    val out = new Array[Byte](bytes.length)
+    var o = 0
+    var depth = 0
+    var tok = 0
+    var from = 0
+    var first = true
+    i = 0
+    while (i <= bytes.length) {
+      if (i == bytes.length || bytes(i) == ' ') {
+        depth += delta(tok)
+        if (depth == 0) {
+          if (!first) { out(o) = ' '; o += 1 }
+          System.arraycopy(bytes, from, out, o, i - from)
+          o += i - from
+          first = false
+        }
+        tok += 1
+        from = i + 1
+      }
+      i += 1
+    }
+    UTF8String.fromBytes(out, 0, o)
+  }
+}
+
 /** Geometric mean as a typed Aggregator. The ln-sum buffer is an exact
   * BigDecimal (scale 12) so the result is independent of partition count
   * and merge order; output rounded to 2 decimals because cross-engine

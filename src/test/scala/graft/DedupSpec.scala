@@ -46,6 +46,21 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("convergence probe: empty graph, overflowed sum, equal and unequal sums") {
+    // (count, sum) from the one probe aggregate: (0, null) is the empty
+    // graph; a null sum over rows is a decimal overflow and must throw,
+    // never compare equal to the previous round's null and "converge"
+    def bd(v: String) = new java.math.BigDecimal(v)
+    assert(Dedup.ccProbe(0L, null) === None)
+    val e = intercept[IllegalStateException](Dedup.ccProbe(5L, null))
+    assert(e.getMessage.contains("overflowed"))
+    assert(Dedup.ccSumEq(Dedup.ccProbe(0L, null), Dedup.ccProbe(0L, null)))
+    // value equality, not scale-sensitive BigDecimal.equals
+    assert(Dedup.ccSumEq(Dedup.ccProbe(3L, bd("10")), Dedup.ccProbe(3L, bd("10.0"))))
+    assert(!Dedup.ccSumEq(Dedup.ccProbe(3L, bd("10")), Dedup.ccProbe(3L, bd("9"))))
+    assert(!Dedup.ccSumEq(Dedup.ccProbe(0L, null), Dedup.ccProbe(1L, bd("0"))))
+  }
+
   test("seeded (incremental) CC converges to the identical fixpoint") {
     import spark.implicits._
     // two chains 1-2-3 and 10-11; the delta adds 3-10, MERGING them —
@@ -472,6 +487,21 @@ class DedupSpec extends SparkSpec {
       3L -> "c1 c2 h1 h2 h3 h4 h5 h6 c3")
     val after = cut(docs).toSeq
     assert(spans(after).isEmpty)
+  }
+
+  test("RemoveTokenSpans: linear cut keeps space runs, clamps at the end, ignores strays") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def rm(text: String, k: Int, starts: Any*) =
+      graft.ops.RemoveTokenSpans.compute(UTF8String.fromString(text),
+        new GenericArrayData(starts.map(_.asInstanceOf[AnyRef]).toArray), k).toString
+    assert(rm("a b c d e", 2, 1) === "a d e")
+    assert(rm("a b c d e", 2, 0, 1) === "d e") // overlapping spans
+    assert(rm("a b c d e", 2, 3, 3) === "a b c") // repeated start, span cut at the end
+    assert(rm("a  b c", 2, 2) === "a ") // "" tokens survive: ["a", ""] rejoined
+    assert(rm("a b c", 3, 0) === "") // fully covered
+    assert(rm("a b c", 2, 7, -1, null) === "a b c") // out of range and null starts
+    assert(rm("é b ü", 1, 1) === "é ü") // byte-level split keeps UTF-8 intact
   }
 
   test("decontaminate drops docs sharing a k-run with the benchmark, counts are exact") {

@@ -24,6 +24,35 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("x_dedup_spanremove plans its pinned shuffle count (no stage creeps back)") {
+    // removeSpans is one pipeline: the repeated-window aggregate (two
+    // exchanges on wh for the distinct count), the cut collection on
+    // doc_id and the output sort; its two joins broadcast at this size.
+    // The former spelling (token explode, anti-join, sort-and-rebuild, a
+    // second min aggregate and re-join) planned 8 shuffles and 5
+    // broadcasts. Counted on the query's own initial plan — the cached
+    // window frame's plan is shared feedstock, and fan's round-robin
+    // input repartition is the key's, not the library's.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val plan = SparkEntry.queries("x_dedup_spanremove")(spark, sf())
+      .queryExecution.executedPlan
+    val all = nodes(plan)
+    val shuffles = all.count {
+      case e: ShuffleExchangeExec => e.shuffleOrigin == ENSURE_REQUIREMENTS
+      case _ => false
+    }
+    val broadcasts = all.count(_.isInstanceOf[BroadcastExchangeExec])
+    assert(shuffles === 4, s"x_dedup_spanremove:\n$plan")
+    assert(broadcasts <= 2, s"x_dedup_spanremove:\n$plan")
+  }
+
   test("x_flex_geometry broadcasts the alias vocabulary (log lines never shuffle pre-agg)") {
     // The vendor-key vocabulary is a few dozen rows — it must broadcast;
     // the ONLY shuffle should be the per-dataset pivot agg. A shuffle of
