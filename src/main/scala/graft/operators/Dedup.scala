@@ -662,22 +662,23 @@ object Dedup {
     * survive for document-level near-dup afterwards.
     *
     * Pipeline (corpus-linear, no cross product, no pair emission):
-    *  1. the cached [[windowFrame]] rows (doc_id, pos, wh) — the same
-    *     inverted index [[substringSpans]] reads;
+    *  1. the cached [[windowFrame]] (doc_id, whs) — the same per-doc
+    *     window hashes [[substringSpans]] reads;
     *  2. [[repeatedWindows]]: ONE aggregate per window hash gives both
     *     the repeat test (≥ minDocs distinct docs) and the canonical
     *     min(doc_id);
-    *  3. every occurrence outside its canonical doc is a cut start;
-    *     `collect_list(pos)` per doc_id gathers each doc's starts;
+    *  3. every window occurrence (doc_id, pos, wh) outside its
+    *     canonical doc is a cut start; `collect_list(pos)` per doc_id
+    *     gathers each doc's starts;
     *  4. the docs left-join their cuts, and one narrow per-doc
     *     projection ([[graft.ops.RemoveTokenSpans]], codegen'd, linear
     *     in tokens + cuts) drops tokens [s, s + k) of every start s and
     *     rejoins the rest with ' '.
     * No per-token explode, anti-join or per-doc sort-and-rebuild: a doc
     * without cuts passes through the projection byte-identical. The
-    * shuffles are the distinct-count aggregate's two (on wh), the cut
-    * collection (on doc_id) and the output sort; the two joins
-    * broadcast only when their build sides are small.
+    * shuffles are the repeat aggregate (on wh), the cut collection (on
+    * doc_id) and the output sort; the two joins broadcast only when
+    * their build sides are small. `doc_id` must be a key.
     *
     * @return (doc_id, text) for EVERY input doc, ordered by doc_id —
     *         untouched docs pass through byte-identical; fully-covered
@@ -687,7 +688,8 @@ object Dedup {
       minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.GraftBridge.{columnOf, exprOf}
     val wins = T.cached(windowFrame(docs, textCol, k))
-    val cuts = wins.join(repeatedWindows(wins, minDocs), "wh")
+    val cuts = wins.select(col("doc_id"), posexplode(col("whs")).as(Seq("pos", "wh")))
+      .join(repeatedWindows(wins, minDocs), "wh")
       .filter(col("doc_id") =!= col("cdoc"))
       .groupBy("doc_id").agg(collect_list("pos").as("cut_pos"))
     val starts = coalesce(col("cut_pos"), typedLit(Seq.empty[Int]))
@@ -698,12 +700,14 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** (doc_id, pos, wh): every k-token window hash of every doc — the
-    * shared inverted-index feedstock of the substring family
-    * ([[substringSpans]], [[removeSpans]], [[decontaminate]]). Docs
-    * shorter than k (and null texts) have no windows: windowHashes
-    * returns [] for them, so no length filter is needed — one would be
-    * pushed below the projection and hash every token twice.
+  /** (doc_id, whs): every doc's k-token window hashes, one row per doc,
+    * `whs(i)` the window starting at token i — the shared feedstock of
+    * the substring family ([[substringSpans]], [[removeSpans]],
+    * [[decontaminate]]), which explode it into the (doc_id, pos, wh)
+    * inverted index as each needs. Docs shorter than k (and null texts)
+    * have no windows: windowHashes returns [] for them, so no length
+    * filter is needed — one would be pushed below the projection and
+    * hash every token twice.
     */
   private def windowFrame(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     import graft.functions.TextAnalysis.{tokenHashesMd5, windowHashes}
@@ -711,20 +715,23 @@ object Dedup {
     // reads an attribute, not a re-derived expression (CollapseProject
     // keeps multi-use non-cheap aliases in their own stage).
     docs.select(col("doc_id"), tokenHashesMd5(col(textCol)).as("hs"))
-      .select(col("doc_id"), posexplode(windowHashes(col("hs"), k)))
-      .toDF("doc_id", "pos", "wh")
+      .select(col("doc_id"), windowHashes(col("hs"), k).as("whs"))
   }
 
   /** (wh, cdoc): every window hash occurring in ≥ `minDocs` distinct
     * docs, with its canonical (minimum) doc — ONE partial-combined
-    * aggregate over [[windowFrame]] rows, shared by [[substringSpans]]
-    * (which keeps the hashes; the unused min is pruned) and
-    * [[removeSpans]] (which cuts every occurrence outside cdoc). Keys
+    * aggregate (one shuffle, on wh) over a [[windowFrame]], shared by
+    * [[substringSpans]] (which keeps the hashes; the unused min is
+    * pruned) and [[removeSpans]] (which cuts every occurrence outside
+    * cdoc). Each doc contributes its DISTINCT hashes (array_distinct
+    * inside its own row), so with `doc_id` a key the plain count is the
+    * distinct-doc count — no (wh, doc_id) pre-aggregation shuffle. Keys
     * are uniform md5-derived hashes; a hot hash IS shared boilerplate.
     */
   private def repeatedWindows(wins: DataFrame, minDocs: Int): DataFrame =
-    wins.groupBy("wh")
-      .agg(count_distinct(col("doc_id")).as("nd"), min("doc_id").as("cdoc"))
+    wins.select(col("doc_id"), explode(array_distinct(col("whs"))).as("wh"))
+      .groupBy("wh")
+      .agg(count(col("doc_id")).as("nd"), min("doc_id").as("cdoc"))
       .filter(col("nd") >= minDocs)
       .select("wh", "cdoc")
 
@@ -739,8 +746,10 @@ object Dedup {
     */
   def contaminationHits(docs: DataFrame, benchmark: DataFrame,
       textCol: String = "text", k: Int = 8): DataFrame = {
-    val benchWh = windowFrame(benchmark, textCol, k).select("wh").distinct()
+    val benchWh = windowFrame(benchmark, textCol, k)
+      .select(explode(col("whs")).as("wh")).distinct()
     windowFrame(docs, textCol, k)
+      .select(col("doc_id"), explode(col("whs")).as("wh"))
       .join(benchWh, Seq("wh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
   }
@@ -770,8 +779,8 @@ object Dedup {
     *     array ([[graft.functions.TextAnalysis.windowHashes]]) — the
     *     rolling-hash trick split into its O(n) hashing half and its
     *     O(n·k) cheap integer half, both narrow map work;
-    *  2. explode to (doc_id, pos, wh): one row per token position — the
-    *     INVERTED INDEX over window hashes ([[windowFrame]]; the
+    *  2. explode [[windowFrame]] to (doc_id, pos, wh): one row per token
+    *     position — the INVERTED INDEX over window hashes (the
     *     x_dedup_ngram device one level below: windows, not shingle
     *     strings, so matches are order-sensitive and position-addressed);
     *  3. window hashes repeated across ≥ minDocs documents
@@ -796,8 +805,8 @@ object Dedup {
   def substringSpans(docs: DataFrame, textCol: String = "text", k: Int = 8,
       minDocs: Int = 2): DataFrame = {
     val wins = T.cached(windowFrame(docs, textCol, k))
-    val hits = wins.join(repeatedWindows(wins, minDocs).select("wh"), Seq("wh"),
-      "left_semi")
+    val hits = wins.select(col("doc_id"), posexplode(col("whs")).as(Seq("pos", "wh")))
+      .join(repeatedWindows(wins, minDocs).select("wh"), Seq("wh"), "left_semi")
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     hits

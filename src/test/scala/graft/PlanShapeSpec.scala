@@ -25,14 +25,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("x_dedup_spanremove plans its pinned shuffle count (no stage creeps back)") {
-    // removeSpans is one pipeline: the repeated-window aggregate (two
-    // exchanges on wh for the distinct count), the cut collection on
-    // doc_id and the output sort; its two joins broadcast at this size.
-    // The former spelling (token explode, anti-join, sort-and-rebuild, a
-    // second min aggregate and re-join) planned 8 shuffles and 5
-    // broadcasts. Counted on the query's own initial plan — the cached
-    // window frame's plan is shared feedstock, and fan's round-robin
-    // input repartition is the key's, not the library's.
+    // removeSpans is one pipeline: the repeated-window aggregate (on wh),
+    // the cut collection (on doc_id) and the output sort; its two joins
+    // broadcast at this size. The former spelling (two-level distinct
+    // count, token explode, anti-join, sort-and-rebuild, a second min
+    // aggregate and re-join) planned 8 shuffles and 5 broadcasts.
+    // Counted on the query's own initial plan — the cached window
+    // frame's plan is shared feedstock, and fan's round-robin input
+    // repartition is the key's, not the library's.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
@@ -49,7 +49,7 @@ class PlanShapeSpec extends SparkSpec {
       case _ => false
     }
     val broadcasts = all.count(_.isInstanceOf[BroadcastExchangeExec])
-    assert(shuffles === 4, s"x_dedup_spanremove:\n$plan")
+    assert(shuffles === 3, s"x_dedup_spanremove:\n$plan")
     assert(broadcasts <= 2, s"x_dedup_spanremove:\n$plan")
   }
 
