@@ -784,7 +784,8 @@ object Dedup {
     *     x_dedup_ngram device one level below: windows, not shingle
     *     strings, so matches are order-sensitive and position-addressed);
     *  3. window hashes repeated across ≥ minDocs documents
-    *     ([[repeatedWindows]], the aggregate [[removeSpans]] shares);
+    *     ([[repeatedWindows]], the aggregate [[removeSpans]] shares;
+    *     `doc_id` must be a key);
     *  4. left-semi join positions against the repeated set (equi on the
     *     hash — shuffle volume is corpus-linear; a hot hash IS shared
     *     boilerplate, which is the output);
