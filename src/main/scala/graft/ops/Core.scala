@@ -33,19 +33,37 @@ private[graft] object T {
     // physical schema (pre-normalizeTs), so the ns-as-long dispatch
     // below still sees exactly what inference saw.
     val path = s"$sfDir/$name.parquet"
-    // Size cap: the key set is fixture-table-sized in a bench run, but a
-    // long-lived service calling with ever-new paths must not grow driver
-    // memory without bound (r18 advice). Wholesale clear is correct for a
-    // pure cache — one re-inference per live entry, then steady state.
-    if (!schemaMemo.contains(path) && schemaMemo.size >= 256)
-      schemaMemo.clear()
-    val sch = schemaMemo.getOrElseUpdate(path, s.read.parquet(path).schema)
+    // Size-capped (memoGet): the key set is fixture-table-sized in a
+    // bench run, but a long-lived service calling with ever-new paths
+    // must not grow driver memory without bound (r18 advice).
+    val sch = memoGet(schemaMemo, path)(s.read.parquet(path).schema)
     normalizeTs(s.read.schema(sch).parquet(path))
   }
 
   private[graft] val schemaMemo =
     scala.collection.concurrent.TrieMap
       .empty[String, org.apache.spark.sql.types.StructType]
+
+  /** Entry cap of the driver-side memos ([[memoGet]] / [[memoPut]]). */
+  private val MemoCap = 256
+
+  /** Put into a size-capped memo: a NEW key at the cap first evicts ONE
+    * arbitrary entry. Evicting one (not clearing all) keeps the entries
+    * a writer that seeds the memo on every commit has just added; a
+    * lost entry of a pure cache costs one recompute.
+    */
+  private[graft] def memoPut[K, V](memo: scala.collection.concurrent.TrieMap[K, V],
+      key: K, value: V): Unit = {
+    if (!memo.contains(key) && memo.size >= MemoCap)
+      memo.keysIterator.take(memo.size - MemoCap + 1).toList.foreach(memo.remove)
+    memo.put(key, value)
+    ()
+  }
+
+  /** Get-or-compute on a size-capped memo (see [[memoPut]]). */
+  private[graft] def memoGet[K, V](memo: scala.collection.concurrent.TrieMap[K, V],
+      key: K)(compute: => V): V =
+    memo.getOrElse(key, { val v = compute; memoPut(memo, key, v); v })
 
   /** One extensions-enabled sibling session per BASE session, memoized:
     * extension binding happens at session construction, so every

@@ -332,7 +332,7 @@ private[sources] final case class GraftFileWriterFactory(conf: GraftSerConf,
         // cast projections bound to the row layout: part and checksum to
         // STRING (the manifest's renderings), stats to DOUBLE — catalyst
         // Cast, so the per-row values are bit-identical to what the
-        // scan-agg staging paths compute. A COMPOSITE spec's part value
+        // Snapshot staging paths record. A COMPOSITE spec's part value
         // is the components' cast renderings joined by the same
         // separator/sentinel as Snapshot.partExpr.
         def castAt(i: Int): org.apache.spark.sql.catalyst.expressions.Expression = {

@@ -1,8 +1,18 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences,
+  Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker,
+  FileFormatWriter, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned-snapshot table on plain parquet — the table-format core
   * five graded keys build on: `x_io_snapshot` (publish → upsert →
@@ -954,54 +964,266 @@ object Snapshot {
     }.toMap
   }
 
-  /** Per-file stats over a freshly staged version directory (hive layout
-    * on the `_p` copy of the partition column, so each file is pure in
-    * one partition value): root-relative path, partition value, row
-    * count, order-insensitive md5-prefix-sum checksum.
+  // ------------------------------------------------------------------
+  // WRITE-SIDE MANIFEST ROWS — every staged write records its files'
+  // manifest rows (row count, checksum, per-file column ranges) WHILE it
+  // writes, the way Delta records per-file statistics on its `add`
+  // actions: reading a freshly staged `v<n>/` back to aggregate them is
+  // a second scan of every written byte of the checksum column plus a
+  // footer-inference job and a two-stage aggregate per commit.
+  // ------------------------------------------------------------------
+
+  /** One staged file's manifest ingredients, gathered task-side: row
+    * count, checksum sum (NULL when the checksum column is NULL on every
+    * row — what SQL `sum` gives) and each recorded stats column's
+    * [min, max], cast to double.
     */
-  private def manifestRowsFor(spark: SparkSession, dir: String, n: Int,
-      partCol: String, checksumCol: String): DataFrame = {
-    val vDir = s"$dir/v$n"
-    spark.read.parquet(vDir)
-      .groupBy(input_file_name().as("abs"), col("_p"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
-          .cast("bigint")).as("checksum"))
-      // root-relative ("v{n}/_p=…/part-….parquet") — the manifest must
-      // survive relocating/copying the table root. Every data file path
-      // contains exactly one "/v<digits>/" segment under the root.
-      .select(relPathExpr(col("abs")).as("path"),
-        col("_p").cast("string").as("part"), col("n_rows"), col("checksum"),
-        // stats columns stay aligned with clustered manifests (carried
-        // rows union with fresh ones); a non-clustered stage has none
-        lit(null).cast("double").as("stat_lo"),
-        lit(null).cast("double").as("stat_hi"),
-        lit(null).cast("string").as("stat_col"),
-        lit(null).cast("string").as("kind"))
+  private final case class FileStat(nRows: Long, checksum: java.lang.Long,
+      ranges: Seq[(java.lang.Double, java.lang.Double)])
+
+  private final case class ManifestTaskStats(files: Map[String, FileStat])
+    extends WriteTaskStats
+
+  /** Job side of the staged-write stats tracker. Expressions are bound
+    * to the written DATA row (partition columns excluded): `checksum`
+    * is the manifest checksum rule, `stats` holds per recorded column
+    * its ordinal, type and `cast(c AS double)`. Files are keyed by
+    * [[fileKey]].
+    */
+  private final class ManifestStatsTracker(val checksum: Expression,
+      val stats: Seq[(Int, DataType, Expression)], val width: Int,
+      val dvSidecar: Boolean) extends WriteJobStatsTracker {
+    /** Driver-side result: only COMMITTED tasks' stats reach here. */
+    @transient @volatile var files: Map[String, FileStat] = Map.empty
+    override def newTaskInstance(): WriteTaskStatsTracker =
+      new ManifestTaskTracker(this)
+    override def processStats(stats: Seq[WriteTaskStats],
+        jobCommitTime: Long): Unit =
+      files = stats.flatMap {
+        case ManifestTaskStats(fs) => fs
+        case _ => Nil
+      }.toMap
   }
 
-  /** [[manifestRowsFor]] collected to driver-side entries — ONE Spark
-    * job (the stats agg) instead of two (agg + JSON write); the write
-    * itself goes through the direct metadata path. #files-sized.
+  /** Task side: per file, counts rows, sums the checksum expression
+    * (through one `UnsafeProjection`, so values are bit-identical to
+    * the SQL aggregate) and keeps min/max of each stats column in the
+    * column's OWN type (the SQL `min`/`max` ordering, first value kept
+    * on ties) before one cast to double at task commit.
     */
-  private def collectManifestRows(spark: SparkSession, dir: String, n: Int,
-      partCol: String, checksumCol: String): Seq[MEntry] =
-    collectEntries(manifestRowsFor(spark, dir, n, partCol, checksumCol))
+  private final class ManifestTaskTracker(job: ManifestStatsTracker)
+      extends WriteTaskStatsTracker {
+    private final class Acc {
+      var rows = 0L
+      var sum = 0L
+      var hasSum = false
+      val lo = new Array[Any](job.stats.length)
+      val hi = new Array[Any](job.stats.length)
+    }
+    private lazy val checksumOf = UnsafeProjection.create(Seq(job.checksum))
+    private lazy val orderings = job.stats.map { case (_, dt, _) =>
+      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+    }
+    private val accs = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+    private var lastPath: String = null
+    private var last: Acc = null
 
-  /** Collect a manifest-schema DataFrame to entries (driver-side,
-    * #files-sized by construction).
-    */
-  private def collectEntries(m: DataFrame): Seq[MEntry] =
-    m.select("path", "part", "n_rows", "checksum", "stat_lo", "stat_hi",
-        "stat_col", "kind")
-      .collect().toSeq.map { r =>
-        def lng(i: Int): java.lang.Long =
-          if (r.isNullAt(i)) null else Long.box(r.getLong(i))
-        def dbl(i: Int): java.lang.Double =
-          if (r.isNullAt(i)) null else Double.box(r.getDouble(i))
-        MEntry(r.getString(0), r.getString(1), lng(2), lng(3), dbl(4), dbl(5),
-          r.getString(6), r.getString(7))
+    private def acc(path: String): Acc = {
+      if (path ne lastPath) {
+        last = accs.getOrElseUpdate(fileKey(path, job.dvSidecar), new Acc)
+        lastPath = path
       }
+      last
+    }
+    override def newPartition(partitionValues: InternalRow): Unit = ()
+    override def newFile(filePath: String): Unit = { acc(filePath); () }
+    override def closeFile(filePath: String): Unit = ()
+    override def newRow(filePath: String, row: InternalRow): Unit = {
+      val a = acc(filePath)
+      a.rows += 1
+      val c = checksumOf(row)
+      if (!c.isNullAt(0)) { a.sum += c.getLong(0); a.hasSum = true }
+      var i = 0
+      while (i < job.stats.length) {
+        val (ord, dt, _) = job.stats(i)
+        if (!row.isNullAt(ord)) {
+          val v = row.get(ord, dt)
+          if (a.lo(i) == null || orderings(i).lt(v, a.lo(i)))
+            a.lo(i) = InternalRow.copyValue(v)
+          if (a.hi(i) == null || orderings(i).gt(v, a.hi(i)))
+            a.hi(i) = InternalRow.copyValue(v)
+        }
+        i += 1
+      }
+    }
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats = {
+      def asDouble(i: Int, v: Any): java.lang.Double =
+        if (v == null) null
+        else {
+          val (ord, _, cast) = job.stats(i)
+          val r = new GenericInternalRow(job.width)
+          r.update(ord, v)
+          cast.eval(r) match {
+            case d: Double => Double.box(d)
+            case _ => null
+          }
+        }
+      ManifestTaskStats(accs.map { case (k, a) =>
+        k -> FileStat(a.rows, if (a.hasSum) Long.box(a.sum) else null,
+          job.stats.indices.map(i => (asDouble(i, a.lo(i)), asDouble(i, a.hi(i)))))
+      }.toMap)
+    }
+  }
+
+  /** The key a staged file's stats are filed under, task- and
+    * driver-side alike: `_p=<value>/<name>` for a partitioned data write
+    * (one task names its files alike in every partition directory it
+    * writes), the bare name for an unpartitioned DV sidecar.
+    */
+  private def fileKey(path: String, dvSidecar: Boolean): String =
+    path.split('/').takeRight(if (dvSidecar) 1 else 2).mkString("/")
+
+  /** What one [[stagedWrite]] wrote: per-file stats keyed by
+    * [[fileKey]], the data files' physical schema, and the recorded
+    * stats columns.
+    */
+  private final case class StagedWrite(files: Map[String, FileStat],
+      dataSchema: StructType, statCols: Seq[String], dvSidecar: Boolean) {
+    def isEmpty: Boolean = files.isEmpty
+
+    /** The manifest rows of the written files, now committed under
+      * `dir/v<n>` (`dir/v<n>/_dv` for a DV sidecar; a staged append
+      * renames its temp dir there first): ONE recursive `listStatus`
+      * walk maps tracker keys to root-relative paths. The partition
+      * value is the `_p=` directory name unescaped — the value the write
+      * rendered, never a re-typed one; a sidecar records `__dv__`. A
+      * data write also seeds [[fileSchemaMemo]] under the generation's
+      * key, so the first read of `v<n>` skips footer inference.
+      */
+    def entries(spark: SparkSession, dir: String, n: Int): Seq[MEntry] = {
+      val tail = if (dvSidecar) s"v$n/_dv" else s"v$n"
+      val at = new Path(dir, tail)
+      val listed = filesUnder(at.getFileSystem(
+        spark.sparkContext.hadoopConfiguration), at).flatMap { case (rel, _) =>
+        files.get(fileKey(rel, dvSidecar)).map(st => (rel, st))
+      }
+      require(listed.size == files.size,
+        s"staged write under $dir/$tail: ${files.size} file(s) written but " +
+          s"${listed.size} found after commit")
+      if (!dvSidecar)
+        graft.ops.T.memoPut(fileSchemaMemo, s"$dir/v$n/",
+          org.apache.spark.sql.GraftBridge.asNullable(dataSchema))
+      listed.sortBy(_._1).map { case (rel, st) =>
+        val part =
+          if (dvSidecar) "__dv__"
+          else rel.split('/').find(_.startsWith("_p=")).map(_.stripPrefix("_p="))
+            .filterNot(_ == org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+            .map(org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.unescapePathName).orNull
+        val (lo, hi, sc, multi) = statCols match {
+          case Seq() => (null, null, null, Map.empty[String, ColStat])
+          case Seq(c) => (st.ranges.head._1, st.ranges.head._2, c,
+            Map.empty[String, ColStat])
+          case cs => (null, null, null, cs.zip(st.ranges).map {
+            case (c, (l, h)) => c -> ColStat(l, h, null, null)
+          }.toMap)
+        }
+        MEntry(s"$tail/$rel", part, Long.box(st.nRows), st.checksum, lo, hi,
+          sc, if (dvSidecar) "dv" else null, multi)
+      }
+    }
+  }
+
+  /** THE staged-write helper: writes `df` as parquet under `out`
+    * (replacing it, as `mode("overwrite")` did) — hive-partitioned on
+    * its `_p` column, or unpartitioned for a key DV sidecar
+    * (`dvSidecar`, written under `v<n>/_dv`) — and records each file's
+    * manifest ingredients as the rows pass through ([[StagedWrite]]).
+    *
+    * Mechanism: the write goes through Spark's own
+    * `FileFormatWriter.write` — the engine behind `df.write.parquet` —
+    * with a [[ManifestStatsTracker]] next to the
+    * `BasicWriteJobStatsTracker` every file write carries (so Spark's
+    * SQL write metrics are unchanged). The checksum is the manifest rule
+    * `conv(substring(md5(cast(c AS string)),1,8),16,10)::bigint`,
+    * resolved by the analyzer over the data schema (session time zone
+    * and ANSI mode, exactly as the SQL aggregate resolves it) and
+    * evaluated per row; `statCols` record per-file ranges (one column:
+    * the `stat_lo/stat_hi/stat_col` triple; several: the `stats` map).
+    *
+    * Retry safety: task trackers keep their stats in task memory and
+    * hand them over only through `getFinalStats` of a COMMITTED task;
+    * the driver sees them in `processStats`, which the writer calls once
+    * after the job commits. A failed or speculative attempt's files are
+    * discarded by the commit protocol and its stats never arrive — no
+    * accumulators, which would double-count re-executed tasks.
+    *
+    * Dependency: `FileFormatWriter` and the `WriteJobStatsTracker` /
+    * `WriteTaskStatsTracker` pair are Spark-internal API (stable through
+    * the 3.x line, pinned here at Spark 4.1.2); a Spark upgrade that
+    * changes them fails this file's compile, not a run.
+    */
+  private def stagedWrite(spark: SparkSession, df: DataFrame, out: Path,
+      checksumCol: String, statCols: Seq[String] = Nil,
+      dvSidecar: Boolean = false): StagedWrite = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame].queryExecution
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val fs = out.getFileSystem(hadoopConf)
+    if (fs.exists(out)) fs.delete(out, true)
+    val plan = qe.executedPlan
+    val partAttrs = if (dvSidecar) Nil else plan.output.filter(_.name == "_p")
+    // the files' physical schema: the plan's output minus the partition
+    // column, as the writer derives it
+    val dataSchema = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .fromAttributes(plan.output.filterNot(partAttrs.contains))
+    // resolve the per-row expressions against an empty relation of the
+    // data schema, then bind them to its ordinals
+    val statIdx = statCols.map(c => dataSchema.fieldIndex(c))
+    val probe = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), dataSchema)
+      .select(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
+        .cast("bigint") +: statCols.map(c => col(c).cast("double")): _*)
+    val bound = org.apache.spark.sql.GraftBridge.planOf(probe) match {
+      case Project(list, child) => list.map(e => BindReferences.bindReference(
+        e match { case a: Alias => a.child; case o => o }, child.output))
+      case p => sys.error(s"unexpected probe plan ${p.getClass.getSimpleName}")
+    }
+    val tracker = new ManifestStatsTracker(bound.head,
+      statIdx.zip(bound.tail).map { case (i, cast) =>
+        (i, dataSchema(i).dataType, cast) },
+      dataSchema.length, dvSidecar)
+    SQLExecution.withNewExecutionId(qe, Some(s"graft staged write $out")) {
+      FileFormatWriter.write(session, plan, new ParquetFileFormat(),
+        FileCommitProtocol.instantiate(
+          session.sessionState.conf.fileCommitProtocolClass,
+          java.util.UUID.randomUUID().toString, out.toString),
+        FileFormatWriter.OutputSpec(out.toString, Map.empty, plan.output),
+        hadoopConf, partAttrs, None,
+        Seq(new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics), tracker),
+        Map.empty)
+    }
+    StagedWrite(tracker.files, dataSchema, statCols, dvSidecar)
+  }
+
+  /** Every file under `root` with its root-relative path — a recursive
+    * `listStatus` walk, depth-first in listing order.
+    */
+  private[graft] def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    // not listFiles(root, true): it builds a LocatedFileStatus per file,
+    // whose permission load forks `ls -ld` per file on a local FS
+    // without native Hadoop (~5 ms each)
+    def walk(p: Path, rel: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        val r = if (rel.isEmpty) st.getPath.getName else s"$rel/${st.getPath.getName}"
+        if (st.isDirectory) walk(st.getPath, r) else Seq(r -> st)
+      }
+    walk(root, "")
+  }
 
   /** Stage a FULL snapshot as version current+1 (no commit): data under
     * `v{N+1}/` hive-partitioned on a `_p` copy of `partCol` (the copy
@@ -1025,15 +1247,15 @@ object Snapshot {
     // (a giant skewed partition would re-split via AQE or an explicit
     // (n, col) repartition; at fixture scale one file per partition).
     // Explicit count — see [[stagedLayout]].
-    stagedLayout(spark, df.withColumn("_p", partExpr(partCol)))
-      .write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
+    val fresh = stagedWrite(spark,
+      stagedLayout(spark, df.withColumn("_p", partExpr(partCol))),
+      new Path(dir, s"v$n"), checksumCol).entries(spark, dir, n)
     // CHECK enforcement reads the staged files back column-pruned (one
     // agg over the referenced columns) rather than re-running the
     // input query; a violation leaves v$n as uncommitted vacuum garbage
     requireConstraints(spark, dir, cur,
       spark.read.parquet(s"$dir/v$n"), "published snapshot")
-    writeManifestEntries(spark, dir, n,
-      collectManifestRows(spark, dir, n, partCol, checksumCol))
+    writeManifestEntries(spark, dir, n, fresh)
     // a full republish may CHANGE the partition column (every file is
     // replaced, so no mixed state arises) — but once a spec HISTORY
     // exists it must stay truthful for time travel/restore: record the
@@ -1138,10 +1360,10 @@ object Snapshot {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir, s"_stage_tmp.${java.util.UUID.randomUUID}")
     try {
-      stagedLayout(spark, delta.withColumn("_p", partExpr(partCol)))
-        .write.mode("overwrite").partitionBy("_p").parquet(tmp.toString)
-      if (!fs.listStatus(tmp).exists(_.getPath.getName.startsWith("_p=")))
-        return cur // nothing to stage; caller may re-tag cur
+      val staged = stagedWrite(spark,
+        stagedLayout(spark, delta.withColumn("_p", partExpr(partCol))),
+        tmp, checksumCol)
+      if (staged.isEmpty) return cur // nothing to stage; caller may re-tag cur
       val n = claimVersion(spark, dir)
       val dest = new Path(dir, s"v$n")
       if (fs.exists(dest)) fs.delete(dest, true) // crashed prior attempt
@@ -1152,8 +1374,7 @@ object Snapshot {
       requireConstraints(spark, dir, cur,
         spark.read.parquet(dest.toString), "appended delta")
       writeManifestEntries(spark, dir, n,
-        manifestEntries(spark, dir, cur) ++
-          collectManifestRows(spark, dir, n, partCol, checksumCol))
+        manifestEntries(spark, dir, cur) ++ staged.entries(spark, dir, n))
       n
     } finally if (fs.exists(tmp)) { fs.delete(tmp, true); () }
   }
@@ -1184,12 +1405,13 @@ object Snapshot {
   private def stageCow(spark: SparkSession, dir: String, touching: DataFrame,
       partCol: String, checksumCol: String,
       includeOldGen: Boolean = false,
-      extraCols: Seq[(String, String)] = Nil)
+      extraCols: Seq[(String, String)] = Nil,
+      statsCol: Option[String] = None)
       (rebuild: DataFrame => DataFrame): Int = {
     val cur = currentVersion(spark, dir)
     require(cur >= 1, s"snapshot table $dir has no committed version to refresh")
     stageCowFrom(spark, dir, cur, claimVersion(spark, dir), touching,
-      partCol, checksumCol, includeOldGen, extraCols)(rebuild)
+      partCol, checksumCol, includeOldGen, extraCols, statsCol)(rebuild)
   }
 
   /** [[stageCow]] generalized over its BASE version and staged version
@@ -1200,7 +1422,8 @@ object Snapshot {
   private def stageCowFrom(spark: SparkSession, dir: String, base: Int,
       n: Int, touching: DataFrame, partCol: String, checksumCol: String,
       includeOldGen: Boolean = false,
-      extraCols: Seq[(String, String)] = Nil)
+      extraCols: Seq[(String, String)] = Nil,
+      statsCol: Option[String] = None)
       (rebuild: DataFrame => DataFrame): Int = {
     requireNoDv(spark, dir, base, "copy-on-write maintenance")
     requireAddedCols(spark, dir, base, touching, "copy-on-write updates")
@@ -1266,9 +1489,11 @@ object Snapshot {
     try requireConstraints(spark, dir, base, staged, "copy-on-write update")
     catch { case e: Throwable =>
       staged.unpersist(blocking = true); throw e }
-    stagedLayout(spark, staged.withColumn("_p", partExpr(partCol)))
-      // whole partitions per task — see stagePublish
-      .write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
+    // whole partitions per task — see stagePublish; a sorted rebuild
+    // (compaction of a clustered table) records its statsCol ranges
+    val fresh = stagedWrite(spark,
+      stagedLayout(spark, staged.withColumn("_p", partExpr(partCol))),
+      new Path(dir, s"v$n"), checksumCol, statsCol.toSeq).entries(spark, dir, n)
     staged.unpersist(blocking = true)
     // carried = the EXACT complement of the affected file set (NOT a
     // re-derivation from part values: old-generation files are affected
@@ -1276,8 +1501,7 @@ object Snapshot {
     // duplicate its rows)
     val affectedSet = affectedFiles.toSet
     val carried = manifest.filterNot(e => affectedSet.contains(e.path))
-    writeManifestEntries(spark, dir, n,
-      carried ++ collectManifestRows(spark, dir, n, partCol, checksumCol))
+    writeManifestEntries(spark, dir, n, carried ++ fresh)
     n
   }
 
@@ -1707,39 +1931,24 @@ object Snapshot {
     // were two extra jobs per rewrite. The write never races its input
     // either way (it reads the base version's immutable files and writes
     // a fresh v$n dir). purgedAll is derived from what LANDED — an
-    // all-rows-deleted rewrite writes no _p= dirs (the stageAppend
-    // device) — instead of a pre-write isEmpty pass.
+    // all-rows-deleted rewrite writes no files (the stageAppend device)
+    // — instead of a pre-write isEmpty pass.
     val checks = constraintsAt(spark, dir, cur)
     val staged = if (checks.nonEmpty) laid.localCheckpoint() else laid
     try requireConstraints(spark, dir, cur, staged.drop("_p"),
       "rewritten rows")
     catch { case e: Throwable =>
       if (checks.nonEmpty) staged.unpersist(blocking = true); throw e }
-    staged.write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
-    if (checks.nonEmpty) staged.unpersist(blocking = true)
     val vDir = new Path(s"$dir/v$n")
-    val vfs = vDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val purgedAll =
-      !vfs.listStatus(vDir).exists(_.getPath.getName.startsWith("_p="))
-    if (purgedAll) vfs.delete(vDir, true) // leave no empty version dir
+    val written = stagedWrite(spark, staged, vDir, checksumCol, statsCol.toSeq)
+    if (checks.nonEmpty) staged.unpersist(blocking = true)
+    val purgedAll = written.isEmpty
+    if (purgedAll) // leave no empty version dir
+      vDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(vDir, true)
     val hitSet = hit.toSet
     val carryBase = manifest.filterNot(shed)
     val carried = carryBase.filterNot(e => hitSet.contains(e.path))
-    val fresh: Seq[MEntry] = if (purgedAll) Nil else statsCol match {
-      case Some(c) =>
-        collectEntries(spark.read.parquet(s"$dir/v$n")
-          .groupBy(input_file_name().as("abs"), col("_p"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
-              .cast("bigint")).as("checksum"),
-            min(col(c)).cast("double").as("stat_lo"),
-            max(col(c)).cast("double").as("stat_hi"))
-          .select(relPathExpr(col("abs")).as("path"),
-            col("_p").cast("string").as("part"), col("n_rows"),
-            col("checksum"), col("stat_lo"), col("stat_hi"),
-            lit(c).as("stat_col"), lit(null).cast("string").as("kind")))
-      case None => collectManifestRows(spark, dir, n, partCol, checksumCol)
-    }
+    val fresh = if (purgedAll) Nil else written.entries(spark, dir, n)
     writeManifestEntries(spark, dir, n, carried ++ fresh)
     n
   }
@@ -2256,22 +2465,8 @@ object Snapshot {
     // version number is burned in that error path, which commit
     // tolerates (stagePurgeCore's constraint refusal already does this).
     val n = claimVersion(spark, dir)
-    val dvDir = s"$dir/v$n/_dv"
-    keys.select(keyCol).distinct()
-      .write.mode("overwrite").parquet(dvDir)
-    val keySchema = org.apache.spark.sql.types.StructType(
-      Seq(keys.select(keyCol).schema.head))
-    val dvManifest = collectEntries(spark.read.schema(keySchema).parquet(dvDir)
-      .groupBy(input_file_name().as("abs"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(conv(substring(md5(col(keyCol).cast("string")), 1, 8), 16, 10)
-          .cast("bigint")).as("checksum"))
-      .select(relPathExpr(col("abs")).as("path"),
-        lit("__dv__").as("part"), col("n_rows"), col("checksum"),
-        lit(null).cast("double").as("stat_lo"),
-        lit(null).cast("double").as("stat_hi"),
-        lit(null).cast("string").as("stat_col"),
-        lit("dv").as("kind")))
+    val dvManifest = stagedWrite(spark, keys.select(keyCol).distinct(),
+      new Path(dir, s"v$n/_dv"), keyCol, dvSidecar = true).entries(spark, dir, n)
     if (dvManifest.forall(e => e.nRows == null || e.nRows.longValue == 0L)) {
       val p = new Path(s"$dir/v$n")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -2534,7 +2729,7 @@ object Snapshot {
     * loudly when the manifest is absent — callers that tolerate absence
     * check existence first, same contract as the old Spark JSON read.
     */
-  private[sources] def manifestEntries(spark: SparkSession, dir: String,
+  private[graft] def manifestEntries(spark: SparkSession, dir: String,
       n: Int): Seq[MEntry] = {
     val p = new Path(dir, s"_manifest.v$n")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2556,8 +2751,8 @@ object Snapshot {
       "stat_lo DOUBLE, stat_hi DOUBLE, stat_col STRING, kind STRING")
 
   /** Manifest rows as a DataFrame — a LOCAL relation built from the
-    * driver-side parse (kept for the staging paths that union manifest
-    * rows with freshly-scanned file stats before one write). `kind` is
+    * driver-side parse (for the paths that join manifest rows against
+    * data, e.g. [[statsHitPaths]]' range join). `kind` is
     * NULL for data files and 'dv' for merge-on-read DELETE-VECTOR
     * sidecars ([[stageDeleteMor]]); old manifests lack the column and
     * read back NULL — data, as before.
@@ -2671,19 +2866,12 @@ object Snapshot {
   private def uriDecodeExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(regexp_replace(c, "%25", "%"), "%20", " ")
 
-  /** Root-relative manifest path from an absolute scan path —
-    * RIGHTMOST `v<digits>/` segment, the same rule as [[vTailOf]]/
-    * [[vTailExpr]] (a leftmost rule would mis-split under a table ROOT
-    * containing a literal v<digits> path segment, and the three
-    * resolvers must agree or DV masks silently stop matching).
-    */
-  private def relPathExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_extract(uriDecodeExpr(c), "^(?:.*/)?(v\\d+/.*)$", 1)
-
-  /** The file's `v<N>/…` tail as a SQL expression over an absolute
-    * path column — the executor-side twin of [[vTailOf]] (rightmost
-    * `v<digits>/` segment, so roots containing a literal `v12` dir and
-    * clone-absolute paths both resolve to the true version tail).
+  /** The file's `v<N>/…` tail — its root-relative manifest path — as a
+    * SQL expression over an absolute scan path column: the
+    * executor-side twin of [[vTailOf]] (rightmost `v<digits>/` segment,
+    * so roots containing a literal `v12` dir and clone-absolute paths
+    * both resolve to the true version tail; the resolvers must agree or
+    * DV masks silently stop matching).
     */
   private def vTailExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_extract(uriDecodeExpr(c), "^(?:.*/)?(v\\d+/.*)$", 1)
@@ -2999,14 +3187,14 @@ object Snapshot {
     val n = claimVersion(spark, dir)
     val rows = readFiles(spark, dir, cur, oldGen.map(_.path).toArray)
       .localCheckpoint()
-    try {
-      stagedLayout(spark, rows.withColumn("_p", partExpr(active)))
-        .write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
-    } finally rows.unpersist(blocking = true)
+    val fresh =
+      try stagedWrite(spark,
+        stagedLayout(spark, rows.withColumn("_p", partExpr(active))),
+        new Path(dir, s"v$n"), checksumCol).entries(spark, dir, n)
+      finally rows.unpersist(blocking = true)
     val oldSet = oldGen.map(_.path).toSet
     writeManifestEntries(spark, dir, n,
-      manifest.filterNot(e => oldSet.contains(e.path)) ++
-        collectManifestRows(spark, dir, n, active, checksumCol))
+      manifest.filterNot(e => oldSet.contains(e.path)) ++ fresh)
     commit(spark, dir, n, currentTag(spark, dir))
     n
   }
@@ -3250,13 +3438,10 @@ object Snapshot {
           // (a republished table's live sets never mix lineages; time
           // travel to the old lineage keys separately)
           s"$dir::mixed::v${gens.min}"
-      // Size cap: one entry per generation lineage is tiny per table,
-      // but a long-lived service committing forever must not grow the
-      // memo without bound (r18 advice). Clearing a pure cache costs one
-      // footer re-inference per live lineage, then steady state again.
-      if (!fileSchemaMemo.contains(key) && fileSchemaMemo.size >= 256)
-        fileSchemaMemo.clear()
-      val sch = fileSchemaMemo.getOrElseUpdate(key,
+      // Size-capped (T.memoGet): a long-lived service committing
+      // forever must not grow the memo without bound, and every staged
+      // write seeds its generation here (StagedWrite.entries)
+      val sch = graft.ops.T.memoGet(fileSchemaMemo, key)(
         spark.read.parquet(abs: _*).schema)
       val df0 = spark.read.schema(sch).parquet(abs: _*)
       if (posMask.isEmpty && !withPosCols) return df0
@@ -3600,27 +3785,16 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     requireAddedCols(spark, dir, cur, df, "published snapshot") // see stagePublish
     val n = claimVersion(spark, dir)
-    df.withColumn("_p", partExpr(partCol))
+    val fresh = stagedWrite(spark, df.withColumn("_p", partExpr(partCol))
       .repartitionByRange(nFiles, col("_p"), col(statsCol))
-      .sortWithinPartitions("_p", statsCol)
-      .write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
+      .sortWithinPartitions("_p", statsCol),
+      new Path(dir, s"v$n"), checksumCol, Seq(statsCol)).entries(spark, dir, n)
     // CHECK enforcement mirrors stagePublish: a clustered (re)publish
     // violating an active constraint refuses before anything commits —
     // the staged dir is vacuum garbage (round-14 advice gap)
     requireConstraints(spark, dir, cur,
       spark.read.parquet(s"$dir/v$n"), "published snapshot")
-    writeManifestEntries(spark, dir, n, collectEntries(
-      spark.read.parquet(s"$dir/v$n")
-        .groupBy(input_file_name().as("abs"), col("_p"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
-            .cast("bigint")).as("checksum"),
-          min(col(statsCol)).cast("double").as("stat_lo"),
-          max(col(statsCol)).cast("double").as("stat_hi"))
-        .select(relPathExpr(col("abs")).as("path"),
-          col("_p").cast("string").as("part"), col("n_rows"), col("checksum"),
-          col("stat_lo"), col("stat_hi"), lit(statsCol).as("stat_col"),
-          lit(null).cast("string").as("kind"))))
+    writeManifestEntries(spark, dir, n, fresh)
     recordLayout(spark, dir, partCol, checksumCol, Some(statsCol))
     commit(spark, dir, n)
     n
@@ -3666,38 +3840,17 @@ object Snapshot {
         s"floor((CAST($c AS DOUBLE) - ($lo)) / (${hi - lo}) * 65535.0))) AS BIGINT)"
     }
     val z = expr(s"graft_zorder(${bucket(colA, 0, 1)}, ${bucket(colB, 2, 3)})")
-    df.withColumn("_p", partExpr(partCol)).withColumn("_zkey", z)
-      .repartitionByRange(nFiles, col("_p"), col("_zkey"))
-      .sortWithinPartitions("_p", "_zkey")
-      .drop("_zkey")
-      .write.mode("overwrite").partitionBy("_p").parquet(s"$dir/v$n")
+    // the write records count, checksum and BOTH columns' ranges; the
+    // manifest rows carry the 2-D stats inline
+    val fresh = stagedWrite(spark,
+      df.withColumn("_p", partExpr(partCol)).withColumn("_zkey", z)
+        .repartitionByRange(nFiles, col("_p"), col("_zkey"))
+        .sortWithinPartitions("_p", "_zkey")
+        .drop("_zkey"),
+      new Path(dir, s"v$n"), checksumCol, Seq(colA, colB)).entries(spark, dir, n)
     requireConstraints(spark, dir, cur,
       spark.read.parquet(s"$dir/v$n"), "published snapshot")
-    // one grouped agg computes count, checksum, and BOTH columns'
-    // ranges; the manifest rows carry the 2-D stats inline
-    val rows = spark.read.parquet(s"$dir/v$n")
-      .groupBy(input_file_name().as("abs"), col("_p"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
-          .cast("bigint")).as("checksum"),
-        min(col(colA)).cast("double").as("a_lo"),
-        max(col(colA)).cast("double").as("a_hi"),
-        min(col(colB)).cast("double").as("b_lo"),
-        max(col(colB)).cast("double").as("b_hi"))
-      .select(relPathExpr(col("abs")).as("path"),
-        col("_p").cast("string").as("part"), col("n_rows"), col("checksum"),
-        col("a_lo"), col("a_hi"), col("b_lo"), col("b_hi"))
-      .collect()
-    val entries = rows.toSeq.map { r =>
-      def d(i: Int): java.lang.Double =
-        if (r.isNullAt(i)) null else Double.box(r.getDouble(i))
-      MEntry(r.getString(0), r.getString(1), Long.box(r.getLong(2)),
-        if (r.isNullAt(3)) null else Long.box(r.getLong(3)),
-        null, null, null, null,
-        stats = Map(colA -> ColStat(d(4), d(5), null, null),
-          colB -> ColStat(d(6), d(7), null, null)))
-    }
-    writeManifestEntries(spark, dir, n, entries)
+    writeManifestEntries(spark, dir, n, fresh)
     recordLayout(spark, dir, partCol, checksumCol)
     commit(spark, dir, n)
     n
@@ -4890,8 +5043,8 @@ object Snapshot {
       if (hit.isEmpty) return cur
       // pass the caller's statsCol through: on a clustered table the
       // healed + fragmented rewrite keeps the range-partitioned sort
-      // (stagePurgeCore's Some(c) path), so restampFreshStats records
-      // TIGHT [lo,hi] ranges instead of broadly overlapping ones
+      // (stagePurgeCore's Some(c) path), so the write records TIGHT
+      // [lo,hi] ranges instead of broadly overlapping ones
       // (ADVICE r17). rangeBuckets sizes the clustered rewrite to the
       // post-compaction target — ≈ one bucket per affected partition
       // value — instead of stagePurgeCore's count-preserving default,
@@ -4917,37 +5070,12 @@ object Snapshot {
     // correct but degraded skipping); passing the cluster column keeps
     // the files sorted and their manifest ranges populated
     val sorted = statsCol.fold(rows)(c => rows.sortWithinPartitions(partExpr(partCol), col(c)))
-    val n = stageReplacePartitions(spark, dir, sorted, partCol, checksumCol)
-    statsCol.foreach(c => restampFreshStats(spark, dir, n, c))
+    // the rewrite records the compacted files' statsCol ranges as it
+    // writes them (stageCow's statsCol)
+    val n = stageCow(spark, dir, sorted, partCol, checksumCol,
+      statsCol = statsCol)(_ => sorted)
     commit(spark, dir, n, currentTag(spark, dir)) // layout-only: keep the tag
     n
-  }
-
-  /** Recompute the freshly-staged files' [lo, hi] stats into version
-    * `n`'s just-written manifest — one scan-agg job over the v`n` files
-    * only; the merge and rewrite stay driver-side.
-    */
-  private def restampFreshStats(spark: SparkSession, dir: String, n: Int,
-      c: String): Unit = {
-    val m = manifestEntries(spark, dir, n)
-    val fresh = m.filter(_.path.startsWith(s"v$n/"))
-      .map(e => resolvePath(dir, e.path))
-    if (fresh.isEmpty) return
-    val stats = spark.read.parquet(fresh.toIndexedSeq: _*)
-      .groupBy(input_file_name().as("abs"))
-      .agg(min(col(c)).cast("double").as("new_lo"),
-        max(col(c)).cast("double").as("new_hi"))
-      .select(relPathExpr(col("abs")).as("path"),
-        col("new_lo"), col("new_hi"))
-      .collect().map(r => r.getString(0) ->
-        (Double.box(r.getDouble(1)), Double.box(r.getDouble(2)))).toMap
-    writeManifestEntries(spark, dir, n, m.map { e =>
-      stats.get(e.path) match {
-        case Some((lo, hi)) =>
-          e.copy(statLo = lo, statHi = hi, statCol = c)
-        case None => e
-      }
-    })
   }
 
   /** [[read]] restricted to the given partition values — files are pruned
@@ -5000,7 +5128,7 @@ object Snapshot {
         .agg(count(lit(1)).as("a_rows"),
           sum(conv(substring(md5(col(cksum).cast("string")), 1, 8), 16, 10)
             .cast("bigint")).as("a_checksum"))
-        .select(relPathExpr(col("abs")).as("path"),
+        .select(vTailExpr(col("abs")).as("path"),
           col("a_rows"), col("a_checksum"))
     // DV sidecars verify against their OWN key column (self-described —
     // the sidecar's only column); a tampered delete vector is an
@@ -5124,20 +5252,15 @@ object Snapshot {
           // file underneath — non-parquet write debris tagged 'file',
           // exactly like the partial-dir branch (the report never drifts
           // from the action)
-          val it = fs.listFiles(st.getPath, true)
-          while (it.hasNext) {
-            val f = it.next().getPath
-            gone += ((rel(f),
-              if (f.getName.endsWith(".parquet")) "data" else "file"))
+          // (a listStatus walk, not listFiles: see filesUnder)
+          filesUnder(fs, st.getPath).foreach { case (_, f) =>
+            gone += ((rel(f.getPath),
+              if (f.getPath.getName.endsWith(".parquet")) "data" else "file"))
           }
           if (delete) fs.delete(st.getPath, true)
         } else {
-          val it = fs.listFiles(st.getPath, true)
-          val dead = scala.collection.mutable.ArrayBuffer.empty[Path]
-          while (it.hasNext) {
-            val f = it.next().getPath
-            if (!live.contains(rel(f))) dead += f
-          }
+          val dead = filesUnder(fs, st.getPath).map(_._2.getPath)
+            .filterNot(f => live.contains(rel(f)))
           dead.foreach { f =>
             drop(f, recursive = false,
               if (f.getName.endsWith(".parquet")) "data" else "file")

@@ -1006,13 +1006,9 @@ object ScaleProbe {
       def bytesUnder(dir: String, v: Int): Long = {
         val p = new org.apache.hadoop.fs.Path(s"$dir/v$v")
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a listStatus walk, not listFiles(p, true): see Snapshot.filesUnder
         if (!fs.exists(p)) 0L
-        else {
-          val it = fs.listFiles(p, true)
-          var total = 0L
-          while (it.hasNext) total += it.next().getLen
-          total
-        }
+        else graft.sources.Snapshot.filesUnder(fs, p).map(_._2.getLen).sum
       }
       def probe(mult: Int, mor: Boolean): (Double, Long, Double) = {
         val root = java.nio.file.Files.createTempDirectory("probe_deltadv").toString

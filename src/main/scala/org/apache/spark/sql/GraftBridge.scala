@@ -89,6 +89,13 @@ object GraftBridge {
     s
   }
 
+  /** `schema` with every field nullable, recursively — what a file
+    * source's relation reports for the schema it reads from a footer
+    * (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** The session's merged Hadoop conf (`sessionState` is
     * `private[sql]`) — what file-format reader builders expect.
     */

@@ -1,12 +1,21 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import graft.sources.DocumentIO
+import graft.sources.{DocumentIO, Snapshot}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** T1 checks for DocumentIO.writeManifest/readVerified (graded by
   * `x_io_manifest`): the REFUSAL paths the value oracle can't see — a
   * tampered file, a deleted file, and an extra file must each fail
   * verification loudly; an untouched snapshot must verify and read.
+  *
+  * Snapshot's write-side manifest rows: every staging path's rows must
+  * equal the read-back aggregate the format computed before its writes
+  * recorded them (kept here as the reference model), the staged write
+  * must seed the footer-schema memo with what inference would read, and
+  * the per-call Spark job counts are pinned.
   */
 class ManifestSpec extends SparkSpec {
 
@@ -92,5 +101,230 @@ class ManifestSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       DocumentIO.readVerified(spark, dir, "text").count())
     assert(e.getMessage.contains("part-extra.parquet"))
+  }
+
+  // ---------------------------------------------------------------
+  // Snapshot: write-side manifest rows against the read-back model
+  // ---------------------------------------------------------------
+
+  /** Partition values the layout must survive: space, `%`, `=`,
+    * non-ASCII, NULL (the hive default directory) and a plain one whose
+    * checksum column is NULL on every row. The non-ASCII value needs a
+    * JVM whose file-name encoding is UTF-8: under a POSIX locale no
+    * write can create its directory (`InvalidPathException`), whatever
+    * the table format does.
+    */
+  private val partVals = Seq("a b", "50%", "x=y", null, "plain") ++
+    (if (System.getProperty("sun.jnu.encoding", "").replace("-", "")
+        .equalsIgnoreCase("UTF8")) Seq("\u00fc\u20ac") else Nil)
+
+  /** `n` rows with ids from `offset`: `id BIGINT NOT NULL`, a partition
+    * column derived from the id (stable per key), a nullable checksum
+    * column, and numeric stats columns `k` (int) and `amount` (double).
+    */
+  private def table(n: Long, offset: Long = 0L,
+      s: SparkSession = spark): DataFrame = {
+    val pv = array(partVals.map(v =>
+      if (v == null) lit(null).cast("string") else lit(v)): _*)
+    s.range(offset, offset + n)
+      .withColumn("part", element_at(pv, (col("id") % partVals.size + 1).cast("int")))
+      .withColumn("text", when(col("part") === "plain" || col("id") % 7 === 3,
+        lit(null).cast("string")).otherwise(concat(lit("t"), col("id").cast("string"))))
+      .withColumn("amount", col("id") * 1.5 - 40)
+      .withColumn("k", ((col("id") * 37) % 101).cast("int"))
+      .withColumn("grp", concat(lit("g"), (col("id") % 3).cast("string")))
+  }
+
+  private type FileRow = (String, String, Long, java.lang.Long,
+    Seq[(java.lang.Double, java.lang.Double)])
+
+  /** Version `n`'s own files as its manifest records them. */
+  private def written(dir: String, n: Int, statCols: Seq[String]): Set[FileRow] =
+    Snapshot.manifestEntries(spark, dir, n)
+      .filter(_.path.startsWith(s"v$n/")).map { e =>
+        val ranges = statCols match {
+          case Seq() =>
+            assert(e.statLo == null && e.statHi == null && e.stats.isEmpty)
+            Nil
+          case Seq(c) =>
+            assert(e.statCol === c)
+            Seq((e.statLo, e.statHi))
+          case cs => cs.map(c => (e.stats(c).lo, e.stats(c).hi))
+        }
+        (e.path, e.part, e.nRows.longValue, e.checksum, ranges)
+      }.toSet
+
+  /** The reference model: the read-back aggregate over version `n`'s
+    * staged directory that built manifest rows before the writes
+    * recorded them (`dvKey` = a delete-vector sidecar under `_dv`, read
+    * under the key's schema).
+    */
+  private def readBack(dir: String, n: Int, checksumCol: String,
+      statCols: Seq[String], dvKey: Option[String] = None): Set[FileRow] = {
+    val df = dvKey.fold(spark.read.parquet(s"$dir/v$n"))(k =>
+      spark.read.schema(StructType(Seq(StructField(k, LongType))))
+        .parquet(s"$dir/v$n/_dv"))
+    val keys = input_file_name().as("abs") +:
+      (if (dvKey.isEmpty) Seq(col("_p")) else Nil)
+    val aggs = Seq(count(lit(1)).as("n_rows"),
+      sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
+        .cast("bigint")).as("checksum")) ++
+      statCols.zipWithIndex.flatMap { case (c, i) =>
+        Seq(min(col(c)).cast("double").as(s"lo$i"),
+          max(col(c)).cast("double").as(s"hi$i"))
+      }
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      .select(Seq(regexp_extract(regexp_replace(regexp_replace(col("abs"),
+          "%25", "%"), "%20", " "), "^(?:.*/)?(v\\d+/.*)$", 1),
+        if (dvKey.isEmpty) col("_p").cast("string") else lit("__dv__"),
+        col("n_rows"), col("checksum")) ++
+        statCols.indices.flatMap(i => Seq(col(s"lo$i"), col(s"hi$i"))): _*)
+      .collect().map { r =>
+        def dbl(i: Int): java.lang.Double =
+          if (r.isNullAt(i)) null else Double.box(r.getDouble(i))
+        (r.getString(0), r.getString(1), r.getLong(2),
+          if (r.isNullAt(3)) null else Long.box(r.getLong(3)),
+          statCols.indices.map(i => (dbl(4 + 2 * i), dbl(5 + 2 * i))))
+      }.toSet
+  }
+
+  private def assertModel(dir: String, n: Int, statCols: Seq[String] = Nil,
+      checksumCol: String = "text", dvKey: Option[String] = None): Unit = {
+    val got = written(dir, n, statCols)
+    assert(got.nonEmpty, s"v$n recorded no files of its own")
+    assert(got === readBack(dir, n, checksumCol, statCols, dvKey), s"v$n")
+  }
+
+  private def tableDir(): String =
+    Files.createTempDirectory("graft_manifest_rows").toString + "/t"
+
+  test("write-side manifest rows equal the read-back model on every staging path") {
+    val dir = tableDir()
+    val v1 = Snapshot.publish(spark, dir, table(300), "part", "text")
+    assertModel(dir, v1)
+    // the all-NULL checksum partition records a NULL checksum, as sum did
+    assert(Snapshot.manifestEntries(spark, dir, v1)
+      .filter(_.part == "plain").forall(_.checksum == null))
+    assert(Snapshot.manifestEntries(spark, dir, v1).exists(_.part == null))
+    // sink append (the stream sink's landing verb on a live table)
+    graft.streaming.SnapshotSink.landBatch(table(60, 1000), dir, "part", "text", 7L)
+    val v2 = Snapshot.currentVersion(spark, dir)
+    assert(v2 > v1)
+    assertModel(dir, v2)
+    // an empty delta writes nothing and claims no version
+    assert(Snapshot.append(spark, dir, table(0), "part", "text") === v2)
+    assert(Snapshot.currentVersion(spark, dir) === v2)
+    // copy-on-write upsert
+    val v3 = Snapshot.upsert(spark, dir, table(40, 280), "id", "part", "text")
+    assertModel(dir, v3)
+    // SQL MERGE through the extension session
+    val ext = org.apache.spark.sql.GraftBridge.sessionWithExtensions(
+      spark, new graft.plans.GraftExtensions)
+    table(30, 290, ext).createOrReplaceTempView("mf_src")
+    ext.sql(s"GRAFT SNAPSHOT MERGE '$dir' KEY id PARTITION part CHECKSUM text " +
+      "WHEN MATCHED AND s.amount < 400 THEN DELETE WHEN MATCHED THEN UPDATE " +
+      "WHEN NOT MATCHED THEN INSERT AS SELECT * FROM mf_src").collect()
+    val v4 = Snapshot.currentVersion(spark, dir)
+    assert(v4 > v3)
+    assertModel(dir, v4)
+    // merge-on-read delete-vector sidecar; an empty key set refuses
+    val v5 = Snapshot.deleteMorKeys(spark, dir, Seq(1L, 2L, 3L, 1005L), "id")
+    assertModel(dir, v5, checksumCol = "id", dvKey = Some("id"))
+    assert(Snapshot.manifestEntries(spark, dir, v5).filter(_.path.startsWith(s"v$v5/"))
+      .forall(e => e.kind == "dv" && e.part == "__dv__"))
+    val empty = intercept[IllegalArgumentException](
+      Snapshot.deleteMorKeys(spark, dir, spark.range(0).toDF("id"), "id"))
+    assert(empty.getMessage.contains("empty delete key set"))
+    assert(Snapshot.currentVersion(spark, dir) === v5)
+    // apply deletes without, then with, a stats column
+    val v6 = Snapshot.applyMorDeletes(spark, dir, "part", "text")
+    assertModel(dir, v6)
+    Snapshot.deleteMorKeys(spark, dir, Seq(10L, 11L, 1010L), "id")
+    val v7 = Snapshot.applyMorDeletes(spark, dir, "part", "text", Some("k"))
+    assertModel(dir, v7, Seq("k"))
+    // compaction of fragmented partitions records the statsCol ranges
+    (0 until 3).foreach(i =>
+      Snapshot.append(spark, dir, table(12, 3000 + 100 * i), "part", "text"))
+    val v8 = Snapshot.compactPartitions(spark, dir, "part", "text",
+      maxFiles = 2, statsCol = Some("k"))
+    assert(v8 > v7)
+    assertModel(dir, v8, Seq("k"))
+    // partition-spec evolution: the migration rewrite under the new spec
+    Snapshot.evolvePartitionSpec(spark, dir, "grp")
+    val v9 = Snapshot.migratePartitionSpec(spark, dir, "text")
+    assertModel(dir, v9)
+    assert(written(dir, v9, Nil).map(_._2) === Set("g0", "g1", "g2"))
+    // clustered and z-ordered publishes on their own tables
+    val cdir = tableDir()
+    assertModel(cdir, Snapshot.publishClustered(spark, cdir, table(200), "part",
+      "k", "text", nFiles = 4), Seq("k"))
+    val zdir = tableDir()
+    assertModel(zdir, Snapshot.publishZOrdered(spark, zdir, table(200), "part",
+      "k", "amount", "text", nFiles = 4), Seq("k", "amount"))
+  }
+
+  test("an all-numeric string partition keeps its written value ('007', not '7')") {
+    // the read-back re-typed partition values by inference; the write
+    // records the value it rendered, which is what partExpr compares
+    val dir = tableDir()
+    val df = spark.range(40).withColumn("part",
+      when(col("id") % 2 === 0, lit("007")).otherwise(lit("010")))
+      .withColumn("text", concat(lit("t"), col("id").cast("string")))
+    val v = Snapshot.publish(spark, dir, df, "part", "text")
+    val got = written(dir, v, Nil)
+    val model = readBack(dir, v, "text", Nil)
+    assert(got.map(_._2) === Set("007", "010"))
+    assert(model.map(_._2) === Set("7", "10"))
+    def rest(s: Set[FileRow]) = s.map(r => (r._1, r._3, r._4))
+    assert(rest(got) === rest(model))
+    assert(Snapshot.readWhere(spark, dir, Seq("007")).count() === 20L)
+  }
+
+  test("a staged write seeds the schema memo with the footer schema it wrote") {
+    val dir = tableDir()
+    def check(n: Int): Unit = {
+      val files = Snapshot.manifestEntries(spark, dir, n)
+        .filter(_.path.startsWith(s"v$n/")).map(e => s"$dir/${e.path}")
+      assert(files.nonEmpty)
+      val seeded = Snapshot.fileSchemaMemo.get(s"$dir/v$n/")
+      assert(seeded.contains(spark.read.parquet(files: _*).schema), s"v$n")
+    }
+    assert(!table(1).schema("id").nullable)
+    check(Snapshot.publish(spark, dir, table(120), "part", "text"))
+    check(Snapshot.append(spark, dir, table(30, 500), "part", "text"))
+    check(Snapshot.upsert(spark, dir, table(20, 100), "id", "part", "text"))
+    check(Snapshot.purgeKeys(spark, dir, Seq(1L, 2L, 501L), "id", "part", "text"))
+  }
+
+  test("pinned Spark job counts of publish, append, upsert and deleteMorKeys") {
+    val dir = tableDir()
+    val sc = spark.sparkContext
+    val counts = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("mf-")).foreach(g =>
+            counts.put(g, counts.getOrElse(g, 0) + 1))
+    }
+    // three partition values, one file each
+    def small(n: Long, offset: Long): DataFrame = spark.range(offset, offset + n)
+      .withColumn("part", concat(lit("p"), (col("id") % 3).cast("string")))
+      .withColumn("text", concat(lit("t"), col("id").cast("string")))
+    def jobs(name: String)(body: => Unit): Int = {
+      sc.setJobGroup(s"mf-$name", name)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+      counts.getOrElse(s"mf-$name", 0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = Seq(
+        "publish" -> jobs("publish")(Snapshot.publish(spark, dir, small(60, 0), "part", "text")),
+        "append" -> jobs("append")(Snapshot.append(spark, dir, small(30, 100), "part", "text")),
+        "upsert" -> jobs("upsert")(Snapshot.upsert(spark, dir, small(20, 50), "id", "part", "text")),
+        "deleteMorKeys" -> jobs("delete")(Snapshot.deleteMorKeys(spark, dir, Seq(1L, 2L), "id")))
+      assert(got === Seq("publish" -> 2, "append" -> 2, "upsert" -> 6,
+        "deleteMorKeys" -> 1))
+    } finally sc.removeSparkListener(listener)
   }
 }
