@@ -11,7 +11,8 @@ import graft.functions.SimHash
   *
   * Two paths, same output schema:
   *  - `bruteTopK`: exact cosine against broadcast probes — the baseline
-  *    (this is what the graded x_sim_cosine_topk uses).
+  *    (the graded x_sim_cosine_topk, x_knn_label_vote and
+  *    x_emb_prefix_topk call it).
   *  - `lshTopK`: random-hyperplane LSH. Each vector gets an `nBits`-bit
   *    signature (sign of dot with deterministic seeded hyperplanes),
   *    signatures are split into bands, candidates = vectors sharing at

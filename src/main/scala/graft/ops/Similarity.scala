@@ -62,22 +62,6 @@ object Similarity {
       .withColumn("nrm", sqrt(expr("graft_dot(emb, emb)")))
   }
 
-  /** Top-5 cosine neighbors for probes vec_id <= 10 (shared by topk/vote). */
-  private def topk(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val e = normed(s, d)
-    val probes = broadcast(e.filter(col("vec_id") <= 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm")))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos_raw").desc, col("vec_id").asc)
-    fan(s, e).join(probes, col("vec_id") =!= col("probe_id"))
-      .withColumn("cos_raw",
-        expr("graft_dot(emb, p_emb)")
-          / (col("nrm") * col("p_nrm")))
-      .withColumn("rn", row_number().over(w).cast("bigint"))
-      .filter(col("rn") <= 5)
-  }
-
   val queries: Map[String, Q] = Map(
     "x_sim_dot" -> ((s, d) => {
       graft.ops.Custom.register(s)
@@ -95,11 +79,13 @@ object Similarity {
         .orderBy("vec_id")
     }),
 
-    "x_sim_cosine_topk" -> ((s, d) =>
-      topk(s, d)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("rn"),
-          round(col("cos_raw"), 6).as("cosine"))
-        .orderBy("probe_id", "rn")),
+    "x_sim_cosine_topk" -> ((s, d) => {
+      val e = t(s, d, "embeddings").select("vec_id", "embedding")
+      graft.operators.Ann.bruteTopK(fan(s, e), e.filter(col("vec_id") <= 10), 5)
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          col("rn").cast("bigint").as("rn"), round(col("cos"), 6).as("cosine"))
+        .orderBy("probe_id", "rn")
+    }),
 
     // MATRYOSHKA prefix-dimension retrieval — the serving trick of
     // nested-representation embeddings (MRL): rank with only the FIRST
@@ -110,30 +96,23 @@ object Similarity {
     // happens BEFORE normalization (a full-norm denominator is the
     // classic implementation bug, and it would hash-mismatch).
     "x_emb_prefix_topk" -> ((s, d) => {
-      val pre = normed(s, d)
-        .select(col("vec_id"), slice(col("emb"), 1, 16).as("emb16"))
-        .withColumn("nrm16", sqrt(expr("graft_dot(emb16, emb16)")))
-      val probes = broadcast(pre.filter(col("vec_id") <= 10)
-        .select(col("vec_id").as("probe_id"), col("emb16").as("p_emb"),
-          col("nrm16").as("p_nrm")))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos_raw").desc, col("vec_id").asc)
-      fan(s, pre).join(probes, col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_raw",
-          expr("graft_dot(emb16, p_emb)") / (col("nrm16") * col("p_nrm")))
-        .withColumn("rn", row_number().over(w).cast("bigint"))
-        .filter(col("rn") <= 5)
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("rn"),
-          round(col("cos_raw"), 6).as("cosine16"))
+      val pre = t(s, d, "embeddings")
+        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
+      graft.operators.Ann.bruteTopK(fan(s, pre), pre.filter(col("vec_id") <= 10), 5)
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          col("rn").cast("bigint").as("rn"), round(col("cos"), 6).as("cosine16"))
         .orderBy("probe_id", "rn")
     }),
 
     // k-NN classification: majority label among the 5 neighbors,
     // ties broken toward the smaller label.
     "x_knn_label_vote" -> ((s, d) => {
+      val e = t(s, d, "embeddings")
       val w = Window.partitionBy("probe_id")
         .orderBy(col("votes").desc, col("label").asc)
-      topk(s, d)
+      graft.operators.Ann.bruteTopK(fan(s, e.select("vec_id", "embedding")),
+          e.filter(col("vec_id") <= 10), 5)
+        .join(e.select("vec_id", "label"), "vec_id")
         .groupBy("probe_id", "label")
         .agg(count(lit(1)).as("votes"))
         .withColumn("vr", row_number().over(w))
@@ -1792,7 +1771,7 @@ object Similarity {
     }),
 
     // File-level STATS SKIPPING from snapshot manifest metadata
-    // (Snapshot.publishClustered / readWhereBetween) — the second
+    // (Snapshot.publishClustered / readWhereStats) — the second
     // metadata-pruning lever after partition values, what Iceberg/Delta
     // keep as per-file column stats: publish range-clusters the corpus
     // on n_chars so each file owns a tight [min, max], the manifest
@@ -1807,7 +1786,7 @@ object Similarity {
       val dir = statsSkipScratch
       graft.sources.Snapshot.publishClustered(
         s, dir, t(s, d, "documents"), "lang", "n_chars", "text", nFiles = 8)
-      graft.sources.Snapshot.readWhereBetween(s, dir, 150.0, 300.0)
+      graft.sources.Snapshot.readWhereStats(s, dir, "n_chars", 150.0, 300.0)
         .filter(col("n_chars").between(150, 300))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),

@@ -736,12 +736,9 @@ private[sources] final class GraftDeltaWrite(spark: SparkSession,
           .parquet(freshData.map(e => s"$dir/${e.relPath}"): _*),
         "row-level delta DML (DSv2)")
     val carried = Snapshot.manifestEntries(spark, dir, base)
-    val dataEntries = freshData.map(e => Snapshot.MEntry(e.relPath, e.part,
-      Long.box(e.nRows), e.checksum, e.statLo, e.statHi,
-      if (e.statLo == null) null else layout.statsCol.orNull, null))
+    val dataEntries = freshData.map(_.manifestEntry(layout.statsCol))
     val dvManifest = dvEntries.map { case (rel, rows, cks, lo, hi) =>
-      Snapshot.MEntry(rel, "__dv__", Long.box(rows), Long.box(cks),
-        null, null, null, "dvp",
+      Snapshot.MEntry(rel, "__dv__", Long.box(rows), Long.box(cks), "dvp",
         // the sidecar's file-column range: what lets a reader above the
         // driver mask budget fetch ONLY the sidecars that can reference
         // its file (Snapshot.posDvSpecs → DeltaOps.DvSpec)

@@ -264,11 +264,18 @@ private[sources] final class GraftSerConf(@transient var value: Configuration)
 }
 
 /** One written file's manifest-row ingredients, computed BY the writer
-  * as rows pass through (no second stats scan at commit).
+  * as rows pass through (no second stats scan at commit): `lo`/`hi` is
+  * the layout's stats column range (null without one, or when every
+  * value was null).
   */
 private[sources] final case class GraftFileEntry(relPath: String,
     part: String, nRows: Long, checksum: java.lang.Long,
-    statLo: java.lang.Double, statHi: java.lang.Double)
+    lo: java.lang.Double, hi: java.lang.Double) {
+  /** The file's manifest row, its range recorded under `statsCol`. */
+  def manifestEntry(statsCol: Option[String]): Snapshot.MEntry =
+    Snapshot.MEntry(relPath, part, Long.box(nRows), checksum, null,
+      statsCol.map(_ -> Snapshot.ColStat(lo, hi, null, null)).toMap)
+}
 
 private[sources] final case class GraftFilesMessage(
     entries: Seq[GraftFileEntry]) extends WriterCommitMessage
@@ -520,9 +527,7 @@ private[sources] final class GraftBatchWrite(spark: SparkSession,
         })
     val carried = Snapshot.manifestEntries(spark, dir, base)
       .filterNot(e => replaced.contains(e.path))
-    val freshEntries = fresh.map(e => Snapshot.MEntry(e.relPath, e.part,
-      Long.box(e.nRows), e.checksum, e.statLo, e.statHi,
-      if (e.statLo == null) null else layout.statsCol.orNull, null))
+    val freshEntries = fresh.map(_.manifestEntry(layout.statsCol))
     Snapshot.writeManifestEntries(spark, dir, n, carried ++ freshEntries)
     Snapshot.commitIfBase(spark, dir, n, base)
   }

@@ -1121,16 +1121,11 @@ object Snapshot {
               .ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
             .map(org.apache.spark.sql.catalyst.catalog
               .ExternalCatalogUtils.unescapePathName).orNull
-        val (lo, hi, sc, multi) = statCols match {
-          case Seq() => (null, null, null, Map.empty[String, ColStat])
-          case Seq(c) => (st.ranges.head._1, st.ranges.head._2, c,
-            Map.empty[String, ColStat])
-          case cs => (null, null, null, cs.zip(st.ranges).map {
-            case (c, (l, h)) => c -> ColStat(l, h, null, null)
+        MEntry(s"$tail/$rel", part, Long.box(st.nRows), st.checksum,
+          if (dvSidecar) "dv" else null,
+          statCols.zip(st.ranges).map { case (c, (l, h)) =>
+            c -> ColStat(l, h, null, null)
           }.toMap)
-        }
-        MEntry(s"$tail/$rel", part, Long.box(st.nRows), st.checksum, lo, hi,
-          sc, if (dvSidecar) "dv" else null, multi)
       }
     }
   }
@@ -1149,8 +1144,8 @@ object Snapshot {
     * `conv(substring(md5(cast(c AS string)),1,8),16,10)::bigint`,
     * resolved by the analyzer over the data schema (session time zone
     * and ANSI mode, exactly as the SQL aggregate resolves it) and
-    * evaluated per row; `statCols` record per-file ranges (one column:
-    * the `stat_lo/stat_hi/stat_col` triple; several: the `stats` map).
+    * evaluated per row; `statCols` record per-file ranges in the
+    * `stats` map.
     *
     * Retry safety: task trackers keep their stats in task memory and
     * hand them over only through `getFinalStats` of a COMMITTED task;
@@ -1763,12 +1758,13 @@ object Snapshot {
     * `keys` is removed from the table. FILE-granular copy-on-write guided
     * by MANIFEST STATS — the lever that makes point deletes affordable at
     * 100 TB: on a table published via [[publishClustered]] with
-    * `statsCol = keyCol`, only files whose recorded [stat_lo, stat_hi]
-    * range can contain a purge key are rewritten; every other file —
-    * including other files of the SAME partition — carries forward by
-    * reference, byte-identical (SnapshotSpec pins both properties). Files
-    * without stats are conservatively rewritten, so the op is correct on
-    * any table and merely cheaper on a clustered one.
+    * `statsCol = keyCol` (or a [[recordFileStats]] range on `keyCol`),
+    * only files whose recorded key range can contain a purge key are
+    * rewritten; every other file — including other files of the SAME
+    * partition — carries forward by reference, byte-identical
+    * (SnapshotSpec pins both properties). Files without a key range are
+    * conservatively rewritten, so the op is correct on any table and
+    * merely cheaper on a clustered one.
     *
     * `keys` is REQUEST-sized (a deletion request, not a data set), so the
     * manifest prune happens driver-side and the delete predicate is a
@@ -1806,10 +1802,9 @@ object Snapshot {
     // paths) fall through to the stats rule
     val blooms = bloomsAt(spark, dir, cur)
     val hit = manifest.filterNot(_.isDv).filter { e =>
-      val statsMay =
-        e.statLo == null || e.statHi == null ||
-          e.statCol == null || e.statCol != keyCol ||
-          keys.exists(k => k >= e.statLo && k <= e.statHi)
+      val statsMay = e.rangeOf(keyCol).forall { case (lo, hi) =>
+        keys.exists(k => k >= lo && k <= hi)
+      }
       val bloomMay = blooms.get(e.path) match {
         case Some(b) if b.col.equalsIgnoreCase(keyCol) =>
           keys.exists(b.filter.mightContainLong)
@@ -1837,37 +1832,31 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     val manifest = manifestEntries(spark, dir, cur)
     // keys × files range join, file side broadcast (#files-sized by
-    // construction); files whose stats are absent or on a DIFFERENT
-    // column are conservatively rewritten (statsHitPaths)
-    val hit = statsHitPaths(entriesDF(spark, manifest.filterNot(_.isDv)),
-      keys, keyCol)
+    // construction); files without a range on the key column are
+    // conservatively rewritten (statsHitPaths)
+    val hit = statsHitPaths(spark, manifest.filterNot(_.isDv), keys, keyCol)
     stagePurgeCore(spark, dir, manifest, hit, antiKeep(_, keys, keyCol),
       partCol, checksumCol, statsCol, dropDv)
   }
 
   /** SHARED stats prune of the key-based rewrite/CDF paths
     * ([[stagePurgeFrameImpl]], [[readChanges]]): of the given manifest
-    * DATA rows, the paths that could contain a key from `keys` —
-    * statted files range-join the key frame (broadcast, #files-sized);
-    * files with NULL stats are conservatively hit; and, load-bearing for
-    * correctness, files whose recorded `stat_col` is NOT the key column
-    * are conservatively hit too — ranges over a DIFFERENT column say
-    * nothing about key containment (a table clustered on n_chars must
-    * not skip files for a doc_id delete; old manifests read stat_col =
-    * NULL and stay conservative).
+    * DATA rows, the paths that could contain a key from `keys` — files
+    * with a recorded range on the KEY column ([[MEntry.rangeOf]])
+    * range-join the key frame (broadcast, #files-sized); every other
+    * file is conservatively hit, since a range over a different column
+    * says nothing about key containment.
     */
-  private def statsHitPaths(entries0: DataFrame, keys: DataFrame,
-      keyCol: String): Array[String] = {
-    val entries = entries0.select("path", "stat_lo", "stat_hi", "stat_col")
-    val prunable = col("stat_lo").isNotNull && col("stat_hi").isNotNull &&
-      (col("stat_col") <=> lit(keyCol))
-    val unprunable = entries.filter(!prunable)
-      .select("path").collect().map(_.getString(0))
+  private def statsHitPaths(spark: SparkSession, entries: Seq[MEntry],
+      keys: DataFrame, keyCol: String): Array[String] = {
+    import spark.implicits._
+    val (statted, unprunable) = entries.partitionMap(e =>
+      e.rangeOf(keyCol).map { case (lo, hi) => (e.path, lo, hi) }.toLeft(e.path))
     val hitStatted = keys.select(col(keyCol).cast("double").as("_k"))
-      .join(broadcast(entries.filter(prunable)),
-        col("_k") >= col("stat_lo") && col("_k") <= col("stat_hi"))
+      .join(broadcast(statted.toDF("path", "lo", "hi")),
+        col("_k") >= col("lo") && col("_k") <= col("hi"))
       .select("path").distinct().collect().map(_.getString(0))
-    (unprunable ++ hitStatted).distinct
+    (unprunable ++ hitStatted).distinct.toArray
   }
 
   /** The distributed delete predicate of the frame purge path: a plain
@@ -1971,12 +1960,12 @@ object Snapshot {
   // step: a file is rewritten only when its manifest metadata says the
   // predicate COULD match a row in it — the partition value decides
   // atoms on the partition column exactly (every row of a file shares
-  // it), and the recorded stat_lo/stat_hi interval decides numeric
-  // comparisons on the file's stats column; everything the metadata
-  // cannot prove is conservatively rewritten. On a table clustered on
-  // the predicate column, a range delete at 100 TB therefore rewrites a
-  // handful of files and carries everything else by manifest reference
-  // (SnapshotSpec pins both the pruning and the conservatism).
+  // it), and a recorded per-file range decides numeric comparisons on
+  // its column; everything the metadata cannot prove is conservatively
+  // rewritten. On a table clustered on the predicate column, a range
+  // delete at 100 TB therefore rewrites a handful of files and carries
+  // everything else by manifest reference (SnapshotSpec pins both the
+  // pruning and the conservatism).
   // ------------------------------------------------------------------
 
   /** Of the manifest DATA rows `entries0`, the paths whose rows COULD
@@ -1985,11 +1974,11 @@ object Snapshot {
     * footer reads, no scan. The walker is SOUND, never complete: AND
     * intersects, OR unions, `part = <literal>` / `IN` prunes by the
     * file's partition value (string/integral literals only — their
-    * string rendering is unambiguous), numeric comparisons against the
-    * file's OWN `stat_col` prune by interval overlap, and any shape it
-    * does not recognize (IS NULL, NOT, arithmetic, other columns,
-    * non-numeric literals, stats on a different column) returns
-    * may-match = true, i.e. the file is rewritten rather than skipped.
+    * string rendering is unambiguous), numeric comparisons against a
+    * column the file records a range for prune by interval overlap, and
+    * any shape it does not recognize (NOT, arithmetic, columns without
+    * recorded stats) returns may-match = true, i.e. the file is
+    * rewritten rather than skipped.
     */
   private[sources] def predicateHitPaths(spark: SparkSession, entries0: Seq[MEntry],
       condSql: String, partCol: String,
@@ -2039,40 +2028,26 @@ object Snapshot {
       // pruned by comparing a NEW-spec literal against an OLD-spec
       // part value (their atoms fall to the stats/bloom path instead)
       val filePartCol = specColOf(spec, r.path, partCol)
-      val bounds: Option[(String, Double, Double)] =
-        if (r.statLo == null || r.statHi == null || r.statCol == null) None
-        else Some((r.statCol, r.statLo.doubleValue, r.statHi.doubleValue))
-      // '>'/'<'/'=' with eq folded in; prunable when the name matches
-      // the file's legacy stats column OR a recorded multi-column stat
-      // ([[recordFileStats]]) — both intervals must admit the value
-      def cmpNum(name: String, op: Char, eq: Boolean, v: Double): Boolean = {
-        def admits(lo: Double, hi: Double): Boolean = op match {
-          case '>' => if (eq) hi >= v else hi > v
-          case '<' => if (eq) lo <= v else lo < v
-          case _ => lo <= v && v <= hi
+      // '>'/'<'/'=' with eq folded in; prunable when the file records a
+      // range on the column
+      def cmpNum(name: String, op: Char, eq: Boolean, v: Double): Boolean =
+        r.rangeOf(name).forall { case (lo, hi) =>
+          op match {
+            case '>' => if (eq) hi >= v else hi > v
+            case '<' => if (eq) lo <= v else lo < v
+            case _ => lo <= v && v <= hi
+          }
         }
-        val legacy = bounds match {
-          case Some((sc, lo, hi)) if sc.equalsIgnoreCase(name) => admits(lo, hi)
-          case _ => true
-        }
-        val multi = r.stats.collectFirst {
-          case (c, s) if c.equalsIgnoreCase(name) &&
-              s.lo != null && s.hi != null => admits(s.lo, s.hi)
-        }.getOrElse(true)
-        legacy && multi
-      }
       // string equality against a recorded string min/max — guarded to
       // pure-ASCII operands, where Java's string order equals Spark's
       // UTF8 binary order (beyond ASCII the two orders can disagree on
       // supplementary characters: stay conservative)
       def ascii(s: String): Boolean = s.forall(_ < 128)
       def strEq(name: String, s: String): Boolean =
-        r.stats.collectFirst {
-          case (c, cs) if c.equalsIgnoreCase(name) &&
-              cs.smin != null && cs.smax != null &&
-              ascii(s) && ascii(cs.smin) && ascii(cs.smax) =>
-            cs.smin <= s && s <= cs.smax
-        }.getOrElse(true)
+        r.statOf(name).forall(cs =>
+          cs.smin == null || cs.smax == null ||
+            !(ascii(s) && ascii(cs.smin) && ascii(cs.smax)) ||
+            (cs.smin <= s && s <= cs.smax))
       // equality/IN atoms on a bloom-recorded integral column decide
       // point membership exactly-up-to-fpp (no false negatives); any
       // other shape, column, or literal kind stays conservative
@@ -2120,10 +2095,7 @@ object Snapshot {
       // attr-vs-literal inequality, flipped when the literal is on the
       // left (`5 > c` ≡ `c < 5`); anything else may match
       def nullsOf(name: String): Option[Long] =
-        r.stats.collectFirst {
-          case (c, s) if c.equalsIgnoreCase(name) && s.nulls != null =>
-            s.nulls.longValue
-        }
+        r.statOf(name).flatMap(s => Option(s.nulls)).map(_.longValue)
       def ineq(a: Expression, b: Expression, op: Char, eq: Boolean): Boolean =
         (attrOf(a), numOf(b), attrOf(b), numOf(a)) match {
           case (Some(n), Some(v), _, _) => cmpNum(n, op, eq, v)
@@ -2415,7 +2387,7 @@ object Snapshot {
     * version dir, EVERY existing file — data and prior DVs — carries
     * forward by manifest reference, and all readers anti-join the DV
     * keys at scan time ([[read]]/[[readVersion]]/[[readWhere]]/
-    * [[readWhereBetween]]/[[readVerified]] all apply them). This is the
+    * [[readWhereStats]]/[[readVerified]] all apply them). This is the
     * WRITE-optimized half of the delete trade: O(#keys) I/O at commit
     * time — at 100 TB a right-to-be-forgotten request lands in
     * milliseconds regardless of table size — while reads pay one
@@ -2637,28 +2609,39 @@ object Snapshot {
   private def jsText(n: com.fasterxml.jackson.databind.JsonNode,
       f: String): String = jsTextOpt(n, f).orNull
 
-  /** Per-column file statistics (the MULTI-column companion of the
-    * legacy single `stat_lo/stat_hi/stat_col` triple — what Delta and
-    * Iceberg record per file): a numeric column carries [lo, hi], a
-    * string column carries [min, max]. Recorded by [[recordFileStats]],
-    * consulted by [[predicateHitPaths]] and [[readWhereStats]]; files
-    * rewritten after the recording lose their stats (conservatively
-    * un-prunable) until the next recording.
+  /** Per-column file statistics — the manifest's ONE per-file range
+    * form (what Delta and Iceberg record per file): a numeric column
+    * carries [lo, hi], a string column carries [min, max]. Written by
+    * every staged write that records a stats column (clustered
+    * publishes, STATS rewrites) and merged in by [[recordFileStats]];
+    * read through [[MEntry.statOf]] / [[MEntry.rangeOf]] by every
+    * pruning path. Files rewritten without a stats column carry none
+    * (conservatively un-prunable) until the next recording.
     */
   private[graft] final case class ColStat(lo: java.lang.Double,
       hi: java.lang.Double, smin: String, smax: String,
       nulls: java.lang.Long = null)
 
   /** One manifest row, driver-side. Nullable columns mirror the JSON
-    * schema (`kind` NULL = data file, 'dv' = delete-vector sidecar; old
-    * manifests lack stats columns and read back null). `stats` is the
-    * optional multi-column statistics map (absent in old manifests).
+    * schema (`kind` NULL = data file, 'dv' = delete-vector sidecar).
+    * `stats` is the per-column statistics map, keyed by column name
+    * (empty when the file recorded none).
     */
   private[graft] final case class MEntry(path: String, part: String,
-      nRows: java.lang.Long, checksum: java.lang.Long,
-      statLo: java.lang.Double, statHi: java.lang.Double,
-      statCol: String, kind: String,
+      nRows: java.lang.Long, checksum: java.lang.Long, kind: String,
       stats: Map[String, ColStat] = Map.empty) {
+    /** The recorded statistics of column `c`, its name matched ignoring
+      * case (as SQL resolves it).
+      */
+    def statOf(c: String): Option[ColStat] =
+      stats.collectFirst { case (k, s) if k.equalsIgnoreCase(c) => s }
+    /** The recorded numeric [lo, hi] of column `c`; None when the file
+      * records no range for it (no stats, a string column, or no
+      * non-null value) — the caller must then keep the file.
+      */
+    def rangeOf(c: String): Option[(Double, Double)] =
+      statOf(c).filter(s => s.lo != null && s.hi != null)
+        .map(s => (s.lo.doubleValue, s.hi.doubleValue))
     /** Any delete-vector SIDECAR (not a data file): key-based ('dv',
       * [[stageDeleteMor]]) or position-based ('dvp', the DSv2
       * `SupportsDelta` door) — the filter every data-file walk uses.
@@ -2679,9 +2662,7 @@ object Snapshot {
       fld("path", jq(path)); fld("part", jq(part))
       fld("n_rows", if (nRows == null) null else nRows.toString)
       fld("checksum", if (checksum == null) null else checksum.toString)
-      fld("stat_lo", if (statLo == null) null else statLo.toString)
-      fld("stat_hi", if (statHi == null) null else statHi.toString)
-      fld("stat_col", jq(statCol)); fld("kind", jq(kind))
+      fld("kind", jq(kind))
       if (stats.nonEmpty)
         fld("stats", stats.toSeq.sortBy(_._1).map { case (c, s) =>
           val parts = Seq(
@@ -2701,8 +2682,6 @@ object Snapshot {
     val n = jsonMapper.readTree(line)
     def lng(f: String): java.lang.Long =
       Option(n.get(f)).filterNot(_.isNull).map(v => Long.box(v.asLong())).orNull
-    def dbl(f: String): java.lang.Double =
-      Option(n.get(f)).filterNot(_.isNull).map(v => Double.box(v.asDouble())).orNull
     val stats: Map[String, ColStat] =
       Option(n.get("stats")).filterNot(_.isNull).map { s =>
         import scala.jdk.CollectionConverters._
@@ -2721,8 +2700,7 @@ object Snapshot {
         }.toMap
       }.getOrElse(Map.empty)
     MEntry(jsText(n, "path"), jsText(n, "part"), lng("n_rows"),
-      lng("checksum"), dbl("stat_lo"), dbl("stat_hi"),
-      jsText(n, "stat_col"), jsText(n, "kind"), stats)
+      lng("checksum"), jsText(n, "kind"), stats)
   }
 
   /** Manifest rows of version `n`, driver-side (no Spark job). Fails
@@ -2745,29 +2723,6 @@ object Snapshot {
   private[graft] val fileSchemaMemo =
     scala.collection.concurrent.TrieMap
       .empty[String, org.apache.spark.sql.types.StructType]
-
-  private val ManifestSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "path STRING, part STRING, n_rows BIGINT, checksum BIGINT, " +
-      "stat_lo DOUBLE, stat_hi DOUBLE, stat_col STRING, kind STRING")
-
-  /** Manifest rows as a DataFrame — a LOCAL relation built from the
-    * driver-side parse (for the paths that join manifest rows against
-    * data, e.g. [[statsHitPaths]]' range join). `kind` is
-    * NULL for data files and 'dv' for merge-on-read DELETE-VECTOR
-    * sidecars ([[stageDeleteMor]]); old manifests lack the column and
-    * read back NULL — data, as before.
-    */
-  private def entriesDF(spark: SparkSession, entries: Seq[MEntry]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      entries.map(e =>
-        org.apache.spark.sql.Row(e.path, e.part, e.nRows, e.checksum,
-          e.statLo, e.statHi, e.statCol, e.kind)).asJava
-    spark.createDataFrame(rows, ManifestSchema)
-  }
-
-  private def readManifest(spark: SparkSession, dir: String, n: Int): DataFrame =
-    entriesDF(spark, manifestEntries(spark, dir, n))
 
   /** Write manifest entries directly (metadata-only commits: restore,
     * rename/drop column, constraints, merged optimistic commits) — the
@@ -2858,10 +2813,11 @@ object Snapshot {
     * arrives as `%20`. Both decodes are provably safe: escapePathName
     * never OUTPUTS a literal "%25"/"%20" (a value's own '%' escapes to
     * %25 first), so those sequences in the URI form always denote the
-    * encoder's work. NOT fully general: a non-ASCII partition value's
-    * UTF-8 bytes also arrive percent-encoded and are NOT decoded here —
-    * that pre-existing limitation fails LOUDLY (path-not-found at first
-    * read), never silently.
+    * encoder's work. A non-ASCII partition value needs no decode: on a
+    * JVM whose `sun.jnu.encoding` is UTF-8 its characters arrive as
+    * plain characters, and on any other JVM the staged write itself
+    * fails with `InvalidPathException` (its directory name cannot be
+    * encoded), so no such path ever reaches a reader.
     */
   private def uriDecodeExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(regexp_replace(c, "%25", "%"), "%20", " ")
@@ -3771,7 +3727,7 @@ object Snapshot {
     * column stats): `repartitionByRange` on (partition, statsCol) gives
     * each file a tight contiguous statsCol range, and a range query then
     * prunes files from #files-sized MANIFEST METADATA before the scan is
-    * planned ([[readWhereBetween]]) — no footer reads, no directory
+    * planned ([[readWhereStats]]) — no footer reads, no directory
     * listing, which at 100 TB is the difference between touching
     * thousands of files and a handful. One range shuffle at publish
     * time, the same pay-once economics as `DocumentIO.writeClustered`,
@@ -3987,8 +3943,8 @@ object Snapshot {
     val sharedExtra: Option[(DataFrame, DataFrame)] =
       if (shared.isEmpty) None
       else changed.flatMap { case (kc, ck) =>
-        val hit = statsHitPaths(entriesDF(spark,
-          mbEntries.filter(e => !e.isDv && shared.contains(e.path))), ck, kc)
+        val hit = statsHitPaths(spark,
+          mbEntries.filter(e => !e.isDv && shared.contains(e.path)), ck, kc)
         if (hit.isEmpty) None
         else {
           val rows = readFiles(spark, dir, schemaV, hit)
@@ -4087,8 +4043,8 @@ object Snapshot {
       cp.select(PosDvFileCol).distinct().collect()
         .flatMap(r => tailToPath.get(r.getString(0))).toSet)
     val keyHitPaths: Set[String] = changedKeys.fold(Set.empty[String]) {
-      case (kc, ck) => statsHitPaths(entriesDF(spark,
-        entriesB.filter(e => !e.isDv && shared.contains(e.path))), ck, kc).toSet
+      case (kc, ck) => statsHitPaths(spark,
+        entriesB.filter(e => !e.isDv && shared.contains(e.path)), ck, kc).toSet
     }
     val hitPaths = (posHitPaths ++ keyHitPaths).toArray.sorted
     val sharedExtra: Option[(DataFrame, DataFrame)] =
@@ -4136,36 +4092,15 @@ object Snapshot {
       .select(col("_change_type") +: canonical.map(col): _*)
   }
 
-  /** [[read]] pruned to files whose recorded [stat_lo, stat_hi] range
-    * can intersect [lo, hi] — pure manifest-metadata skipping; files
-    * without stats (written by a non-clustered stage) are conservatively
-    * kept. Rows are NOT filtered — callers apply their own predicate
-    * (which Catalyst then also pushes into the surviving files' row
-    * groups — the two skipping layers compose).
-    */
-  def readWhereBetween(spark: SparkSession, dir: String,
-      lo: Double, hi: Double): DataFrame = {
-    val n = currentVersion(spark, dir)
-    require(n >= 1, s"snapshot table $dir has no committed version")
-    val files = dataEntries(spark, dir, n)
-      .filter(e => e.statLo == null || e.statHi == null ||
-        (e.statLo <= hi && e.statHi >= lo))
-      .map(_.path).toArray
-    if (files.isEmpty) read(spark, dir).limit(0)
-    else readWithDv(spark, dir, n, files)
-  }
-
   // ------------------------------------------------------------------
-  // MULTI-COLUMN FILE STATISTICS — the round-14 judge's missing #3: the
-  // legacy manifest records ONE stats column per file (stat_lo/stat_hi/
-  // stat_col, populated by clustered publishes), so a predicate
-  // delete/update or stats read on any OTHER column degraded to a full
-  // rewrite/scan. Delta/Iceberg record per-column min/max; here
-  // [[recordFileStats]] is the ANALYZE-shaped verb: one scan computes
-  // per-file min/max for N declared columns (numeric lo/hi, string
-  // min/max) into the manifest's `stats` map as a METADATA-ONLY commit,
-  // [[predicateHitPaths]] and [[readWhereStats]] prune on any recorded
-  // column, and files rewritten later simply lose their stats
+  // MULTI-COLUMN FILE STATISTICS: a staged write records ranges only
+  // for its stats column, so a predicate delete/update or stats read on
+  // any OTHER column would degrade to a full rewrite/scan. Delta/Iceberg
+  // record per-column min/max; here [[recordFileStats]] is the
+  // ANALYZE-shaped verb: one scan computes per-file min/max for N
+  // declared columns (numeric lo/hi, string min/max) into the manifest's
+  // `stats` map as a METADATA-ONLY commit, every pruning path reads any
+  // recorded column, and files rewritten later simply lose their stats
   // (conservatively un-prunable) until the next recording — stats can
   // make pruning better, never wrong.
   // ------------------------------------------------------------------
@@ -4181,12 +4116,12 @@ object Snapshot {
 
   /** Record per-file min/max statistics for `cols` on the CURRENT
     * version's data files — one column-pruned scan-agg, then a
-    * metadata-only commit (manifest verbatim + the per-file `stats`
-    * maps; tag preserved). Numeric columns record [lo, hi]; string
-    * columns record [min, max] (binary order). Refuses on non-scalar
-    * columns, metadata-added columns still needing fill, and files
-    * predating an evolution step (the sqlFiles guards — republish
-    * first). Returns the committed version.
+    * metadata-only commit (manifest verbatim, `cols` merged into each
+    * file's `stats` map; tag preserved). Numeric columns record
+    * [lo, hi]; string columns record [min, max] (binary order). Refuses
+    * on non-scalar columns, metadata-added columns still needing fill,
+    * and files predating an evolution step (the sqlFiles guards —
+    * republish first). Returns the committed version.
     */
   def recordFileStats(spark: SparkSession, dir: String,
       cols: Seq[String]): Int = {
@@ -4246,7 +4181,11 @@ object Snapshot {
     val n = claimVersion(spark, dir)
     writeManifestEntries(spark, dir, n, entries.map { e =>
       if (e.isDv) e
-      else byTail.get(vTailOf(e.path)).fold(e)(m => e.copy(stats = m))
+      // merged into the file's recorded map: a clustered column's range
+      // survives, and a data file never changes at its path, so no
+      // recorded range goes stale
+      else byTail.get(vTailOf(e.path)).fold(e)(m => e.copy(stats =
+        e.stats.filterNot { case (c, _) => m.keys.exists(_.equalsIgnoreCase(c)) } ++ m))
     })
     commit(spark, dir, n, currentTag(spark, dir))
     n
@@ -4343,25 +4282,20 @@ object Snapshot {
     n
   }
 
-  /** [[read]] pruned to files whose recorded statistics for `colName`
-    * (multi-column map OR the legacy clustered triple) can intersect
-    * [lo, hi] — [[readWhereBetween]] generalized to ANY recorded
-    * column. Files without stats on the column are conservatively kept.
+  /** [[read]] pruned to files whose recorded range for `colName` can
+    * intersect [lo, hi] — pure manifest-metadata skipping; files without
+    * a range on the column are conservatively kept. Rows are NOT
+    * filtered — callers apply their own predicate (which Catalyst then
+    * also pushes into the surviving files' row groups — the two
+    * skipping layers compose).
     */
   def readWhereStats(spark: SparkSession, dir: String, colName: String,
       lo: Double, hi: Double): DataFrame = {
     val n = currentVersion(spark, dir)
     require(n >= 1, s"snapshot table $dir has no committed version")
-    val files = dataEntries(spark, dir, n).filter { e =>
-      val legacyOk = !(e.statCol != null && e.statCol.equalsIgnoreCase(colName) &&
-        e.statLo != null && e.statHi != null &&
-        (e.statLo > hi || e.statHi < lo))
-      val multiOk = !e.stats.exists { case (c, s) =>
-        c.equalsIgnoreCase(colName) && s.lo != null && s.hi != null &&
-          (s.lo > hi || s.hi < lo)
-      }
-      legacyOk && multiOk
-    }.map(_.path).toArray
+    val files = dataEntries(spark, dir, n).filter(_.rangeOf(colName)
+      .forall { case (flo, fhi) => flo <= hi && fhi >= lo })
+      .map(_.path).toArray
     if (files.isEmpty) read(spark, dir).limit(0)
     else readWithDv(spark, dir, n, files)
   }
@@ -5066,7 +5000,7 @@ object Snapshot {
     val rows = readWhere(spark, dir, fragmented.toIndexedSeq)
       .repartition(partExpr(partCol)) // one file per compacted partition
     // statsCol: a clustered table's compaction would otherwise NULL the
-    // compacted files' stats (conservatively kept by readWhereBetween —
+    // compacted files' stats (conservatively kept by readWhereStats —
     // correct but degraded skipping); passing the cluster column keeps
     // the files sorted and their manifest ranges populated
     val sorted = statsCol.fold(rows)(c => rows.sortWithinPartitions(partExpr(partCol), col(c)))
@@ -5108,7 +5042,6 @@ object Snapshot {
       checksumCol: String): DataFrame = {
     val (n, relFiles) = resolveFiles(spark, dir, None)
     val files = relFiles.map(resolvePath(dir, _))
-    val m = readManifest(spark, dir, n)
     val allEntries = manifestEntries(spark, dir, n)
     val dvKeyPaths = allEntries.filter(_.isKeyDv)
       .map(e => resolvePath(dir, e.path)).toArray
@@ -5146,7 +5079,11 @@ object Snapshot {
       else Some(fileStats(dvPosPaths, PosDvPosCol))).flatten
     val actual = (fileStats(files, checksumCol) +: sidecarStats)
       .reduce(_ unionByName _)
-    val bad = m.join(actual, Seq("path"), "full")
+    import spark.implicits._
+    val recorded = allEntries.map(e =>
+      (e.path, Option(e.nRows).map(_.longValue), Option(e.checksum).map(_.longValue)))
+      .toDF("path", "n_rows", "checksum")
+    val bad = recorded.join(actual, Seq("path"), "full")
       .filter(!(col("n_rows") <=> col("a_rows")) ||
         !(col("checksum") <=> col("a_checksum")))
       .select("path").collect().map(_.getString(0))

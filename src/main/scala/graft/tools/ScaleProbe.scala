@@ -643,7 +643,7 @@ object ScaleProbe {
     }
     // Multi-column stats pruning (round-15): a delete on a SECOND
     // recorded column whose values correlate with the clustered layout
-    // (score == doc_id here) must prune like the legacy stats column —
+    // (score == doc_id here) must prune like the clustered column —
     // fixed range, ~constant rewrite set as the store grows 1x -> 10x.
     if (mode == "all" || mode == "multistats") {
       def msProbe(mult: Int): (Double, Int, Int) = {

@@ -115,8 +115,11 @@ class ManifestSpec extends SparkSpec {
     * the table format does.
     */
   private val partVals = Seq("a b", "50%", "x=y", null, "plain") ++
-    (if (System.getProperty("sun.jnu.encoding", "").replace("-", "")
-        .equalsIgnoreCase("UTF8")) Seq("\u00fc\u20ac") else Nil)
+    (if (utf8FileNames) Seq("\u00fc\u20ac") else Nil)
+
+  private def utf8FileNames: Boolean =
+    System.getProperty("sun.jnu.encoding", "").replace("-", "")
+      .equalsIgnoreCase("UTF8")
 
   /** `n` rows with ids from `offset`: `id BIGINT NOT NULL`, a partition
     * column derived from the id (stable per key), a nullable checksum
@@ -142,16 +145,9 @@ class ManifestSpec extends SparkSpec {
   private def written(dir: String, n: Int, statCols: Seq[String]): Set[FileRow] =
     Snapshot.manifestEntries(spark, dir, n)
       .filter(_.path.startsWith(s"v$n/")).map { e =>
-        val ranges = statCols match {
-          case Seq() =>
-            assert(e.statLo == null && e.statHi == null && e.stats.isEmpty)
-            Nil
-          case Seq(c) =>
-            assert(e.statCol === c)
-            Seq((e.statLo, e.statHi))
-          case cs => cs.map(c => (e.stats(c).lo, e.stats(c).hi))
-        }
-        (e.path, e.part, e.nRows.longValue, e.checksum, ranges)
+        assert(e.stats.keySet === statCols.toSet)
+        (e.path, e.part, e.nRows.longValue, e.checksum,
+          statCols.map(c => (e.stats(c).lo, e.stats(c).hi)))
       }.toSet
 
   /** The reference model: the read-back aggregate over version `n`'s
@@ -278,6 +274,18 @@ class ManifestSpec extends SparkSpec {
     def rest(s: Set[FileRow]) = s.map(r => (r._1, r._3, r._4))
     assert(rest(got) === rest(model))
     assert(Snapshot.readWhere(spark, dir, Seq("007")).count() === 20L)
+  }
+
+  test("a non-ASCII partition value keeps its written value (UTF-8 file names)") {
+    assume(utf8FileNames, "sun.jnu.encoding is not UTF-8: no write can " +
+      "create a non-ASCII directory name")
+    val dir = tableDir()
+    val df = spark.range(20).withColumn("part", lit("\u00fc\u20ac"))
+      .withColumn("text", concat(lit("t"), col("id").cast("string")))
+    val v = Snapshot.publish(spark, dir, df, "part", "text")
+    assertModel(dir, v)
+    assert(written(dir, v, Nil).map(_._2) === Set("\u00fc\u20ac"))
+    assert(Snapshot.readWhere(spark, dir, Seq("\u00fc\u20ac")).count() === 20L)
   }
 
   test("a staged write seeds the schema memo with the footer schema it wrote") {

@@ -198,7 +198,7 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.publishClustered(spark, dir, docs, "lang", "n_chars", "text",
       nFiles = 8)
     val all = Snapshot.read(spark, dir)
-    val pruned = Snapshot.readWhereBetween(spark, dir, 150.0, 300.0)
+    val pruned = Snapshot.readWhereStats(spark, dir, "n_chars", 150.0, 300.0)
     assert(pruned.inputFiles.length < all.inputFiles.length,
       s"no files were skipped (${pruned.inputFiles.length} of ${all.inputFiles.length})")
     // pruning is conservative: pruned ∪ filter == plain filter
@@ -207,11 +207,10 @@ class SnapshotSpec extends SparkSpec {
       === fingerprint(expect))
     // manifest ranges are honest: every surviving file's [lo, hi]
     // intersects the query range; every skipped file's does not
-    val m = spark.read
-      .schema("path STRING, part STRING, n_rows BIGINT, checksum BIGINT, " +
-        "stat_lo DOUBLE, stat_hi DOUBLE")
-      .json(s"$dir/_manifest.v1")
-      .collect().map(r => (r.getString(0), r.getDouble(4), r.getDouble(5)))
+    val m = Snapshot.manifestEntries(spark, dir, 1).map { e =>
+      val (lo, hi) = e.rangeOf("n_chars").get
+      (e.path, lo, hi)
+    }
     val kept = pruned.inputFiles.map(f => f.split("/").takeRight(3).mkString("/")).toSet
     m.foreach { case (p, lo, hi) =>
       val intersects = lo <= 300.0 && hi >= 150.0
@@ -247,11 +246,11 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.diffVersions(spark, dir, 2, 2).count() === 0)
   }
 
-  test("readWhereBetween on a stat-less table conservatively keeps everything") {
+  test("readWhereStats on a stat-less table conservatively keeps everything") {
     val dir = freshDir()
     Snapshot.publish(spark, dir, docs, "lang", "text")
     val all = Snapshot.read(spark, dir)
-    val ranged = Snapshot.readWhereBetween(spark, dir, 150.0, 300.0)
+    val ranged = Snapshot.readWhereStats(spark, dir, "n_chars", 150.0, 300.0)
     assert(ranged.inputFiles.sorted.toSeq === all.inputFiles.sorted.toSeq,
       "files without stats must never be skipped")
     assert(fingerprint(ranged) === fingerprint(docs))
@@ -274,11 +273,76 @@ class SnapshotSpec extends SparkSpec {
     // a range read still skips a strict subset of files
     assert(fingerprint(Snapshot.readVerified(spark, dir, "text")) === before)
     val all = Snapshot.read(spark, dir)
-    val ranged = Snapshot.readWhereBetween(spark, dir, 150.0, 300.0)
+    val ranged = Snapshot.readWhereStats(spark, dir, "n_chars", 150.0, 300.0)
     assert(ranged.inputFiles.length < all.inputFiles.length,
       "post-compaction range read must still skip files")
     assert(fingerprint(ranged.filter(col("n_chars").between(150, 300))) ===
       fingerprint(Snapshot.read(spark, dir).filter(col("n_chars").between(150, 300))))
+  }
+
+  test("a range read after a purge re-clustered on another column equals the plain filter") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, docs, "lang", "n_chars", "text",
+      nFiles = 8)
+    val keys = docs.select("doc_id").orderBy("doc_id").limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    val v = Snapshot.purgeKeys(spark, dir, keys, "doc_id", "lang", "text",
+      statsCol = Some("doc_id"))
+    // the rewritten files record doc_id ranges and no n_chars range: a
+    // range read on n_chars must keep them, never prune by doc_id
+    val fresh = Snapshot.manifestEntries(spark, dir, v)
+      .filter(_.path.startsWith(s"v$v/"))
+    assert(fresh.nonEmpty && fresh.forall(_.stats.keySet == Set("doc_id")))
+    val ranged = Snapshot.readWhereStats(spark, dir, "n_chars", 150.0, 300.0)
+    assert(fingerprint(ranged.filter(col("n_chars").between(150, 300))) ===
+      fingerprint(docs.filter(!col("doc_id").isin(keys: _*) &&
+        col("n_chars").between(150, 300))))
+  }
+
+  /** The corpus plus a `score` column descending in doc_id. */
+  private def scored: DataFrame =
+    docs.withColumn("score", (lit(1000000L) - col("doc_id")).cast("double"))
+
+  test("purgeKeys prunes on ranges recorded by recordFileStats") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, scored, "lang", "score", "text",
+      nFiles = 8)
+    val va = Snapshot.recordFileStats(spark, dir, Seq("doc_id"))
+    val before = Snapshot.manifestEntries(spark, dir, va)
+    def covers(e: Snapshot.MEntry, keys: Seq[Long]): Boolean =
+      e.rangeOf("doc_id").exists { case (lo, hi) =>
+        keys.exists(k => k >= lo && k <= hi) }
+    // two keys inside the narrowest file's doc_id range
+    val lo = before.flatMap(_.rangeOf("doc_id")).minBy(r => r._2 - r._1)._1
+    val keys = Seq(lo.toLong, lo.toLong + 1)
+    val covering = before.filter(covers(_, keys)).map(_.path).toSet
+    assert(covering.nonEmpty && covering.size < before.size,
+      s"degenerate fixture: ${covering.size} of ${before.size} files covered")
+    val vb = Snapshot.purgeKeys(spark, dir, keys, "doc_id", "lang", "text")
+    assert(vb > va)
+    val replaced = before.map(_.path).toSet --
+      Snapshot.manifestEntries(spark, dir, vb).map(_.path)
+    assert(replaced === covering)
+    assert(fingerprint(Snapshot.read(spark, dir)) ===
+      fingerprint(docs.filter(!col("doc_id").isin(keys: _*))))
+  }
+
+  test("recordFileStats keeps a clustered range: deleteWhere on it still prunes") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, scored, "lang", "doc_id", "text",
+      nFiles = 8)
+    val va = Snapshot.recordFileStats(spark, dir, Seq("score"))
+    val m1 = Snapshot.manifestEntries(spark, dir, va)
+    assert(m1.forall(e => e.stats.keySet == Set("doc_id", "score")))
+    val vb = Snapshot.deleteWhere(spark, dir, "doc_id >= 10 AND doc_id <= 25",
+      "lang", "text", statsCol = Some("doc_id"))
+    assert(vb > va)
+    assert(fingerprint(Snapshot.read(spark, dir)) === fingerprint(
+      docs.filter(!col("doc_id").between(10, 25))))
+    val carried = Snapshot.manifestEntries(spark, dir, vb)
+      .filter(e => m1.contains(e))
+    assert(carried.nonEmpty && carried.size < m1.size,
+      s"${carried.size} of ${m1.size} files carried by reference")
   }
 
   test("vacuum retention keeps the last N versions time-travelable") {
@@ -529,11 +593,10 @@ class SnapshotSpec extends SparkSpec {
     val dir = freshDir()
     Snapshot.publishClustered(spark, dir, docs, "lang", "doc_id", "text",
       nFiles = 8)
-    def manifest(v: Int) = spark.read
-      .schema("path STRING, part STRING, n_rows BIGINT, checksum BIGINT, " +
-        "stat_lo DOUBLE, stat_hi DOUBLE")
-      .json(s"$dir/_manifest.v$v").collect()
-      .map(r => (r.getString(0), r.getLong(3), r.getDouble(4), r.getDouble(5)))
+    def manifest(v: Int) = Snapshot.manifestEntries(spark, dir, v).map { e =>
+      val (lo, hi) = e.rangeOf("doc_id").get
+      (e.path, e.checksum.longValue, lo, hi)
+    }
     val m1 = manifest(1)
     // purge keys chosen INSIDE one file's [lo, hi] range so stats can prune
     val (_, _, lo, _) = m1.minBy(t => t._4 - t._3)
@@ -584,12 +647,8 @@ class SnapshotSpec extends SparkSpec {
   }
 
   private def manifestPaths(dir: String, v: Int): Map[String, String] =
-    spark.read
-      .schema("path STRING, part STRING, n_rows BIGINT, checksum BIGINT, " +
-        "stat_lo DOUBLE, stat_hi DOUBLE, kind STRING")
-      .json(s"$dir/_manifest.v$v").collect()
-      .map(r => r.getString(0) -> Option(r.getString(6)).getOrElse("data"))
-      .toMap
+    Snapshot.manifestEntries(spark, dir, v)
+      .map(e => e.path -> Option(e.kind).getOrElse("data")).toMap
 
   test("merge-on-read delete: zero data files written, every reader masks, time travel keeps") {
     val dir = freshDir()
@@ -608,7 +667,7 @@ class SnapshotSpec extends SparkSpec {
     val expected = fingerprint(docs.filter(!col("doc_id").isin(keys: _*)))
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
     assert(fingerprint(Snapshot.readVerified(spark, dir, "text")) === expected)
-    assert(Snapshot.readWhereBetween(spark, dir, 0, 20)
+    assert(Snapshot.readWhereStats(spark, dir, "doc_id", 0, 20)
       .filter(col("doc_id").isin(keys: _*)).count() === 0)
     // time travel: v1 still has the rows; v2 applies its own DVs
     assert(fingerprint(Snapshot.readVersion(spark, dir, 1)) === fingerprint(docs))
@@ -835,10 +894,10 @@ class SnapshotSpec extends SparkSpec {
     val m3 = manifestPaths(dir, v3)
     assert(!m3.values.exists(_ == "dv"), "materialize must shed the DVs")
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
-    val stats1 = spark.read
-      .schema("path STRING, stat_lo DOUBLE, stat_hi DOUBLE")
-      .json(s"$dir/_manifest.v1").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+    val stats1 = Snapshot.manifestEntries(spark, dir, 1).map { e =>
+      val (lo, hi) = e.rangeOf("doc_id").get
+      (e.path, lo, hi)
+    }
     val uncovered = stats1.filter { case (_, lo, hi) =>
       hi < 100 || lo > 140 }.map(_._1).toSet
     assert(uncovered.nonEmpty, "degenerate fixture: every file covered")
@@ -2007,16 +2066,13 @@ class SnapshotSpec extends SparkSpec {
     // replacement files re-record doc_id ranges
     ext.sql(s"GRAFT SNAPSHOT COMPACT '$dir' PARTITION lang CHECKSUM text " +
       "MAXFILES 1 STATS doc_id")
-    val m = spark.read
-      .schema("path STRING, stat_lo DOUBLE, stat_hi DOUBLE, stat_col STRING")
-      .json(s"$dir/_manifest.v${Snapshot.currentVersion(ext, dir)}")
-      .collect()
-    val fresh = m.filter(_.getString(0).startsWith(
-      s"v${Snapshot.currentVersion(ext, dir)}/"))
+    val cur = Snapshot.currentVersion(ext, dir)
+    val fresh = Snapshot.manifestEntries(ext, dir, cur)
+      .filter(_.path.startsWith(s"v$cur/"))
     assert(fresh.nonEmpty)
-    fresh.foreach { r =>
-      assert(!r.isNullAt(1) && !r.isNullAt(2) && r.getString(3) == "doc_id",
-        s"compacted file ${r.getString(0)} lost its stats")
+    fresh.foreach { e =>
+      assert(e.rangeOf("doc_id").isDefined,
+        s"compacted file ${e.path} lost its stats")
     }
   }
 
