@@ -1932,15 +1932,17 @@ object Similarity {
     }),
 
     // MERGE-ON-READ delete (Snapshot.deleteMorKeys — the Delta deletion-
-    // vector / Iceberg equality-delete verb, the WRITE-optimized twin of
-    // x_io_purge's copy-on-write): the delete commits as an O(#keys)
-    // sidecar with ZERO data files rewritten (SnapshotSpec pins the
-    // manifest's data file set byte-identical across the delete), and
-    // the graded read applies the DV anti-join; applyMorDeletes then
-    // MATERIALIZES the mask (stats-guided rewrite, manifest sheds the
-    // sidecar) and the graded read re-checks the same content through a
-    // VERIFIED read — delete-fast, maintain-later, exactly the 100 TB
-    // right-to-be-forgotten lifecycle.
+    // vector verb, the WRITE-optimized twin of x_io_purge's
+    // copy-on-write): the keys resolve to the (file, pos) of their live
+    // rows — a scan of the stats-pruned candidate files — and commit as
+    // a position sidecar with ZERO data files rewritten (SnapshotSpec
+    // pins the manifest's data file set byte-identical across the
+    // delete); the graded read applies the position mask;
+    // applyMorDeletes then MATERIALIZES it (rewrites exactly the files
+    // the sidecar names, manifest sheds the sidecar) and the graded read
+    // re-checks the same content through a VERIFIED read — delete-fast,
+    // maintain-later, exactly the 100 TB right-to-be-forgotten
+    // lifecycle.
     "x_io_mor_delete" -> ((s, d) => {
       val dir = T.scratchDir("graft_mor")
       val gone = Seq(5L, 8L, 13L, 101L, 204L, 309L)
@@ -1967,14 +1969,14 @@ object Similarity {
     // overload → applyMorDeletes) — the same MoR lifecycle as
     // x_io_mor_delete but with a JOIN-DERIVED key FRAME, the shape
     // deletes actually arrive in at 100 TB ("every doc flagged by this
-    // quality predicate"), and NO key set ever on the driver: the DV
-    // sidecar writes distributed, materialization prunes rewrite
-    // candidates with a broadcast range join of the #files-sized
-    // manifest stats against the key frame (only file PATHS come back),
-    // and the delete itself is a distributed anti-join — the whole path
-    // is bounded by cluster memory, not driver memory (round 11's one
-    // scale boundary, removed; SnapshotSpec pins the no-collect shape
-    // and carries a 200k-key frame through it).
+    // quality predicate"), and NO key set ever on the driver: the stage
+    // prunes candidate files with a broadcast range join of the
+    // #files-sized manifest stats against the key frame (only file
+    // PATHS come back), resolves keys to positions with a distributed
+    // semi-join and writes the sidecar distributed; materialization
+    // rewrites exactly the files the sidecar names — the whole path is
+    // bounded by cluster memory, not driver memory (SnapshotSpec pins
+    // the no-collect shape and carries a 200k-key frame through it).
     "x_io_mor_bulk" -> ((s, d) => {
       val dir = T.scratchDir("graft_morbulk")
       val docs = t(s, d, "documents")
@@ -2085,8 +2087,8 @@ object Similarity {
     // maintained with the CDF deltas (insert = +, delete = −) and must
     // hash-equal the direct aggregate DuckDB computes over the final
     // logical content. Scale shape: the CDF reads only the symmetric
-    // difference of the file sets plus stats-pruned shared files for
-    // changed DV keys — a one-partition change feeds IVM at
+    // difference of the file sets plus the shared files the changed DV
+    // positions name — a one-partition change feeds IVM at
     // one-partition cost (SnapshotSpec pins per-verb emissions).
     "x_io_cdf" -> ((s, d) => {
       val dir = cdfScratch

@@ -53,7 +53,8 @@ final class GraftParseException(msg: String) extends RuntimeException(msg)
   * MAINTENANCE statements (Delta's OPTIMIZE/VACUUM shape) complete the
   * lifecycle from SQL: COMPACT rolls fragmented partitions into one
   * file each (layout-only, tag-preserving), APPLY DELETES materializes
-  * pending merge-on-read delete vectors, VACUUM enforces time-travel
+  * pending merge-on-read delete vectors (the (file, pos) sidecars that
+  * `DELETE … KEY` and mor-mode DML write), VACUUM enforces time-travel
   * retention (receipt's `version` column carries the deleted-file
   * count). With these plus the read/write statements, a pure-SQL user
   * can run the ENTIRE snapshot lifecycle — `x_io_sql_maint` grades
@@ -560,8 +561,10 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         graft.sources.Snapshot.stageMerge(sess, unq(path), df, keyCol,
           partCol, ckCol, clauses))
     case Delete(path, keyCol, query) =>
-      // merge-on-read delete: the key frame is the AS-query's result —
-      // O(#keys) at commit, readers mask until APPLY DELETES
+      // merge-on-read delete: the AS-query's keys resolve to the
+      // (file, pos) of the live rows carrying them — a scan of the
+      // stats-pruned candidate files at commit, no data file rewritten;
+      // readers mask the positions until APPLY DELETES
       writeCmd("delete", unq(path), query)((sess, df) =>
         graft.sources.Snapshot.stageDeleteMor(sess, unq(path), df, keyCol))
     case DeleteWhere(path, partCol, ckCol, statsCol, cond) =>

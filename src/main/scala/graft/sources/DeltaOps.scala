@@ -40,10 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - the WRITE receives Spark's per-row verbs: `delete(id)` buffers
   *    (file, pos) and lands them as a 'dvp' sidecar parquet
   *    ([[Snapshot]]'s position delete vectors — the Iceberg-v2/Delta
-  *    DV shape, POSITION-based by the round-16 judge's explicit
-  *    guidance: key-based DVs would mask every row sharing a key and
-  *    hold correctness hostage to an unverifiable uniqueness
-  *    contract); `insert(row)` reuses the SAME distributed manifest-
+  *    DV shape, the one form every reader masks); `insert(row)` reuses the SAME distributed manifest-
   *    stats parquet writer as the CoW door ([[GraftFileWriterFactory]]
   *    — UPDATE re-inserts land as fresh data files). The commit is
   *    manifest(base ∪ fresh data ∪ dvp sidecars) under
@@ -337,11 +334,7 @@ private[sources] final class GraftDeltaScanBuilder(spark: SparkSession,
   override def build(): Scan = {
     val base = Snapshot.currentVersion(spark, dir)
     require(base >= 1, s"snapshot table $dir has no committed version")
-    // KEY DVs refuse (their anti-join masks rows of ANY file — the scan
-    // cannot honor them per-file); pending POSITION DVs stack: the
-    // reader masks them in place
-    Snapshot.requireNoKeyDv(spark, dir, base,
-      s"row-level delta ${op.command()} (DSv2)")
+    // pending delete vectors stack: the reader masks them in place
     val entries = Snapshot.manifestEntries(spark, dir, base).filterNot(_.isDv)
     val spec = Snapshot.partitionSpecAt(spark, dir, base)
     val candidates = RowLevelOps.prunableSql(pushed.toSeq) match {

@@ -1078,7 +1078,7 @@ object Snapshot {
   /** The key a staged file's stats are filed under, task- and
     * driver-side alike: `_p=<value>/<name>` for a partitioned data write
     * (one task names its files alike in every partition directory it
-    * writes), the bare name for an unpartitioned DV sidecar.
+    * writes), the bare name for an unpartitioned position-DV sidecar.
     */
   private def fileKey(path: String, dvSidecar: Boolean): String =
     path.split('/').takeRight(if (dvSidecar) 1 else 2).mkString("/")
@@ -1092,8 +1092,8 @@ object Snapshot {
     def isEmpty: Boolean = files.isEmpty
 
     /** The manifest rows of the written files, now committed under
-      * `dir/v<n>` (`dir/v<n>/_dv` for a DV sidecar; a staged append
-      * renames its temp dir there first): ONE recursive `listStatus`
+      * `dir/v<n>` (`dir/v<n>/_dvp` for a position-DV sidecar; a staged
+      * append or delete renames its temp dir there first): ONE recursive `listStatus`
       * walk maps tracker keys to root-relative paths. The partition
       * value is the `_p=` directory name unescaped — the value the write
       * rendered, never a re-typed one; a sidecar records `__dv__`. A
@@ -1101,7 +1101,7 @@ object Snapshot {
       * key, so the first read of `v<n>` skips footer inference.
       */
     def entries(spark: SparkSession, dir: String, n: Int): Seq[MEntry] = {
-      val tail = if (dvSidecar) s"v$n/_dv" else s"v$n"
+      val tail = if (dvSidecar) s"v$n/_dvp" else s"v$n"
       val at = new Path(dir, tail)
       val listed = filesUnder(at.getFileSystem(
         spark.sparkContext.hadoopConfiguration), at).flatMap { case (rel, _) =>
@@ -1122,7 +1122,7 @@ object Snapshot {
             .map(org.apache.spark.sql.catalyst.catalog
               .ExternalCatalogUtils.unescapePathName).orNull
         MEntry(s"$tail/$rel", part, Long.box(st.nRows), st.checksum,
-          if (dvSidecar) "dv" else null,
+          if (dvSidecar) "dvp" else null,
           statCols.zip(st.ranges).map { case (c, (l, h)) =>
             c -> ColStat(l, h, null, null)
           }.toMap)
@@ -1132,8 +1132,8 @@ object Snapshot {
 
   /** THE staged-write helper: writes `df` as parquet under `out`
     * (replacing it, as `mode("overwrite")` did) — hive-partitioned on
-    * its `_p` column, or unpartitioned for a key DV sidecar
-    * (`dvSidecar`, written under `v<n>/_dv`) — and records each file's
+    * its `_p` column, or unpartitioned for a position-DV sidecar
+    * (`dvSidecar`, committed under `v<n>/_dvp`) — and records each file's
     * manifest ingredients as the rows pass through ([[StagedWrite]]).
     *
     * Mechanism: the write goes through Spark's own
@@ -1315,12 +1315,10 @@ object Snapshot {
       partCol: String, checksumCol: String): Int = {
     val cur = currentVersion(spark, dir)
     require(cur >= 1, s"snapshot table $dir has no committed version to append to")
-    // a re-inserted key would stay masked under a KEY delete vector
-    // (the anti-join matches any file's rows); a POSITION delete vector
-    // references one physical row of one existing file and can never
-    // mask an appended row — so ingest keeps flowing while dvp deletes
-    // accumulate (the GDPR-deletes-during-ingest production shape)
-    requireNoKeyDv(spark, dir, cur, "append")
+    // no delete-vector guard: a position DV references one physical row
+    // of one existing file and can never mask an appended row — so
+    // ingest keeps flowing while MoR deletes accumulate (the
+    // GDPR-deletes-during-ingest production shape)
     requireActiveSpec(spark, dir, cur, partCol, "an appended delta")
     requireAddedCols(spark, dir, cur, delta, "appended delta")
     // appends must carry EXACTLY the logical schema: a missing column
@@ -1780,18 +1778,18 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     require(cur >= 1, s"snapshot table $dir has no committed version to purge")
     requireNoDv(spark, dir, cur, "copy-on-write purge")
-    stagePurgeImpl(spark, dir, keys, keyCol, partCol, checksumCol,
-      statsCol, dropDv = false)
+    stagePurgeImpl(spark, dir, keys, keyCol, partCol, checksumCol, statsCol)
   }
 
   /** REQUEST-sized [[stagePurge]] front half: the driver-side stats
     * prune and NOT-isin delete predicate (pushed into the rewritten
     * files' parquet scan) are the right shape when `keys` is a deletion
-    * REQUEST. Data-sized delete sets go through [[stagePurgeFrameImpl]].
+    * REQUEST. Data-sized delete sets take the merge-on-read path
+    * ([[stageDeleteMor]], then [[applyMorDeletes]]).
     */
   private def stagePurgeImpl(spark: SparkSession, dir: String, keys: Seq[Long],
       keyCol: String, partCol: String, checksumCol: String,
-      statsCol: Option[String], dropDv: Boolean): Int = {
+      statsCol: Option[String]): Int = {
     require(keys.nonEmpty, "empty purge key set — nothing to delete")
     val cur = currentVersion(spark, dir)
     val manifest = manifestEntries(spark, dir, cur)
@@ -1814,44 +1812,23 @@ object Snapshot {
     }.map(_.path).toArray
     stagePurgeCore(spark, dir, manifest, hit,
       base => base.filter(!col(keyCol).isin(keys: _*)),
-      partCol, checksumCol, statsCol, dropDv)
+      partCol, checksumCol, statsCol)
   }
 
-  /** DATA-sized purge front half — nothing about the key set ever
-    * transits the driver: the stats prune is a BROADCAST RANGE JOIN of
-    * the (#files-sized) manifest against the key frame — only file
-    * PATHS, never keys, come back to plan the rewrite — and the delete
-    * itself is [[antiKeep]]'s distributed anti-join. This is the path
-    * [[applyMorDeletes]] drives, so a join-derived GDPR delete set of
-    * tens of millions of keys materializes without touching driver
-    * memory.
-    */
-  private def stagePurgeFrameImpl(spark: SparkSession, dir: String,
-      keys: DataFrame, keyCol: String, partCol: String, checksumCol: String,
-      statsCol: Option[String], dropDv: Boolean): Int = {
-    val cur = currentVersion(spark, dir)
-    val manifest = manifestEntries(spark, dir, cur)
-    // keys × files range join, file side broadcast (#files-sized by
-    // construction); files without a range on the key column are
-    // conservatively rewritten (statsHitPaths)
-    val hit = statsHitPaths(spark, manifest.filterNot(_.isDv), keys, keyCol)
-    stagePurgeCore(spark, dir, manifest, hit, antiKeep(_, keys, keyCol),
-      partCol, checksumCol, statsCol, dropDv)
-  }
-
-  /** SHARED stats prune of the key-based rewrite/CDF paths
-    * ([[stagePurgeFrameImpl]], [[readChanges]]): of the given manifest
-    * DATA rows, the paths that could contain a key from `keys` — files
-    * with a recorded range on the KEY column ([[MEntry.rangeOf]])
-    * range-join the key frame (broadcast, #files-sized); every other
-    * file is conservatively hit, since a range over a different column
-    * says nothing about key containment.
+  /** Stats prune of the key-addressed position resolution
+    * ([[stageDeleteMor]]): of the given manifest DATA rows, the paths
+    * that could contain a key from `keys` — files with a recorded range
+    * on the KEY column ([[MEntry.rangeOf]]) range-join the key frame
+    * (broadcast, #files-sized; only file PATHS come back, never keys);
+    * every other file is conservatively hit, since a range over a
+    * different column says nothing about key containment.
     */
   private def statsHitPaths(spark: SparkSession, entries: Seq[MEntry],
       keys: DataFrame, keyCol: String): Array[String] = {
     import spark.implicits._
     val (statted, unprunable) = entries.partitionMap(e =>
       e.rangeOf(keyCol).map { case (lo, hi) => (e.path, lo, hi) }.toLeft(e.path))
+    if (statted.isEmpty) return unprunable.toArray // no range: no join job
     val hitStatted = keys.select(col(keyCol).cast("double").as("_k"))
       .join(broadcast(statted.toDF("path", "lo", "hi")),
         col("_k") >= col("lo") && col("_k") <= col("hi"))
@@ -1859,39 +1836,25 @@ object Snapshot {
     (unprunable ++ hitStatted).distinct.toArray
   }
 
-  /** The distributed delete predicate of the frame purge path: a plain
-    * anti-join on the key column — shuffles when the key set is big,
-    * broadcasts (via AQE) when it is small, never an isin over
-    * collected keys. Package-visible so PlanShapeSpec can pin the
-    * no-driver-materialization shape directly.
-    */
-  private[graft] def antiKeep(base: DataFrame, keys: DataFrame,
-      keyCol: String): DataFrame =
-    base.join(keys.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-
-  /** Shared purge back half ([[stagePurgeImpl]] / [[stagePurgeFrameImpl]]):
-    * given the hit-file list and the keep transform, stage the rewrite
-    * as a new version; `dropDv = true` (the [[applyMorDeletes]] caller)
-    * sheds the now-materialized delete vectors from the staged manifest.
+  /** Shared purge back half ([[stagePurgeImpl]], the predicate verbs,
+    * [[applyMorDeletes]], compaction): given the hit-file list and the
+    * keep transform, stage the rewrite as a new version; `shedDv = true`
+    * (the [[applyMorDeletes]] caller, which reads the hit files under
+    * `posMask`) sheds the now-materialized delete-vector sidecars from
+    * the staged manifest.
     */
   private def stagePurgeCore(spark: SparkSession, dir: String,
       manifest: Seq[MEntry], hit: Array[String], keep: DataFrame => DataFrame,
-      partCol: String, checksumCol: String,
-      statsCol: Option[String], dropDv: Boolean,
-      posMask: Option[DataFrame] = None, dropPosDv: Boolean = false,
+      partCol: String, checksumCol: String, statsCol: Option[String],
+      posMask: Option[DataFrame] = None, shedDv: Boolean = false,
       rangeBuckets: Option[Int] = None): Int = {
-    // which sidecar kinds this rewrite MATERIALIZES (and therefore
-    // sheds from the staged manifest): dropDv = key DVs ('dv'),
-    // dropPosDv = position DVs ('dvp') — applyMorDeletes runs the two
-    // halves separately, so the other kind must carry untouched
-    def shed(e: MEntry): Boolean =
-      (dropDv && e.isKeyDv) || (dropPosDv && e.isPosDv)
+    def shed(e: MEntry): Boolean = shedDv && e.isDv
     val cur = currentVersion(spark, dir)
-    if (hit.isEmpty && !dropDv && !dropPosDv)
+    if (hit.isEmpty && !shedDv)
       return cur // no file can contain any key
     if (hit.isEmpty) {
-      // materializing DVs whose keys no file can contain: nothing to
-      // rewrite — stage a manifest-only version that sheds the DV rows
+      // materializing DVs that name no live file: nothing to rewrite —
+      // stage a manifest-only version that sheds the DV rows
       val n = claimVersion(spark, dir)
       writeManifestEntries(spark, dir, n, manifest.filterNot(shed))
       return n
@@ -2171,7 +2134,7 @@ object Snapshot {
       partCol, bloomsAt(spark, dir, cur), partitionSpecAt(spark, dir, cur))
     stagePurgeCore(spark, dir, manifest, hit,
       base => base.filter(keepUnlessTrue(condSql)),
-      partCol, checksumCol, statsCol, dropDv = false)
+      partCol, checksumCol, statsCol)
   }
 
   /** Predicate delete: stage + atomic commit (no-op when no file can
@@ -2229,7 +2192,7 @@ object Snapshot {
           case None => col(f.name)
         }
       }.toIndexedSeq: _*)
-    }, partCol, checksumCol, statsCol, dropDv = false)
+    }, partCol, checksumCol, statsCol)
   }
 
   /** Predicate update: stage + atomic commit (no-op when no file can
@@ -2369,11 +2332,8 @@ object Snapshot {
     // stay valid)
     val blooms = bloomsAt(spark, src, cur)
     if (blooms.nonEmpty)
-      writeJsonLinesDir(spark, s"$dst/_blooms.v$cur",
-        blooms.toSeq.sortBy(_._1).map { case (path, b) =>
-          s"""{"path":${jq(resolvePath(src, path))},"col":${jq(b.col)},""" +
-            s""""bits":${jq(java.util.Base64.getEncoder.encodeToString(b.bits))}}"""
-        })
+      writeBlooms(spark, dst, cur,
+        blooms.map { case (path, b) => resolvePath(src, path) -> b })
     // layout properties transplant with the content
     layoutOf(spark, src).foreach(l =>
       recordLayout(spark, dst, l.partCol, l.checksumCol, l.statsCol))
@@ -2381,45 +2341,43 @@ object Snapshot {
     cur
   }
 
-  /** Stage a MERGE-ON-READ delete (the Delta deletion-vector / Iceberg
-    * equality-delete verb) as version current+1 (no commit): the keys
-    * are recorded in a DELETE-VECTOR sidecar parquet under the new
-    * version dir, EVERY existing file — data and prior DVs — carries
-    * forward by manifest reference, and all readers anti-join the DV
-    * keys at scan time ([[read]]/[[readVersion]]/[[readWhere]]/
-    * [[readWhereStats]]/[[readVerified]] all apply them). This is the
-    * WRITE-optimized half of the delete trade: O(#keys) I/O at commit
-    * time — at 100 TB a right-to-be-forgotten request lands in
-    * milliseconds regardless of table size — while reads pay one
-    * broadcast anti-join until [[applyMorDeletes]] (or a [[purgeKeys]]
-    * on a DV-free table) materializes the mask; [[stagePurge]] is the
-    * READ-optimized copy-on-write half. The DV parquet's single column
-    * is NAMED `keyCol`, making the sidecar self-describing; repeated
-    * deletes accumulate sidecars that readers union and distinct.
-    * Copy-on-write maintenance (upsert/append/replace/compact/diff)
-    * REFUSES while DVs are pending — rewritten rows would stay masked
-    * and re-inserted keys would silently vanish ([[requireNoDv]]).
+  /** Stage a MERGE-ON-READ delete (the Delta deletion-vector verb) as
+    * version current+1 (no commit): the keys resolve to the (file, pos)
+    * of every live row carrying them ([[keyPositions]]), recorded in a
+    * POSITION delete-vector sidecar under `v<n>/_dvp` — the same `dvp`
+    * form the DSv2 `SupportsDelta` door writes, so every reader,
+    * materializer and CDF path has one masking mechanism. EVERY
+    * existing file — data and prior sidecars — carries forward by
+    * manifest reference; readers mask the positions at scan time until
+    * [[applyMorDeletes]] materializes them. This is the WRITE-optimized
+    * half of the delete trade: zero data files rewritten, at the cost
+    * of one scan of the CANDIDATE files — those whose recorded `keyCol`
+    * range can contain a key ([[statsHitPaths]]), so on a table
+    * clustered on the key the commit tracks the delete's footprint, not
+    * the table; [[stagePurge]] is the READ-optimized copy-on-write half.
+    * The candidates are read under the pending position mask, so
+    * re-deleting a masked row adds no position, and a delete whose keys
+    * mask no live row stages nothing and returns the current version.
+    * Copy-on-write maintenance (upsert/replace/compact/diff) REFUSES
+    * while DVs are pending ([[requireNoDv]]); appends stay legal (a
+    * position names one row of an existing file, never an appended one).
     */
   def stageDeleteMor(spark: SparkSession, dir: String, keys: Seq[Long],
       keyCol: String): Int = {
     import spark.implicits._
     require(keys.nonEmpty, "empty delete key set — nothing to delete")
-    // request-sized by contract → one tidy sidecar file
-    stageDeleteMor(spark, dir, keys.toDS.toDF(keyCol).coalesce(1), keyCol)
+    stageDeleteMor(spark, dir, keys.toDS.toDF(keyCol), keyCol)
   }
 
   /** DATA-sized merge-on-read delete — [[stageDeleteMor]] for a
     * join-derived key FRAME (the shape deletes actually arrive in at
-    * 100 TB: "every doc_id flagged by this quality join"). The DV
-    * sidecar parquet is written DISTRIBUTED — the key set never visits
-    * the driver at stage time, and [[applyMorDeletes]]' materialization
-    * prunes and anti-joins it distributed too ([[stagePurgeFrameImpl]]),
-    * so the whole delete lifecycle is bounded by cluster memory, not
-    * driver memory. The sidecar's single column is named `keyCol`
-    * (self-describing, same as the request-sized overload); `keyCol`
-    * must resolve against the table's PHYSICAL data schema — a typo'd
-    * or metadata-added column fails HERE, before anything commits,
-    * instead of wedging every read surface at analysis time.
+    * 100 TB: "every doc_id flagged by this quality join"). The key set
+    * never visits the driver: the candidate prune is a broadcast range
+    * join of the #files-sized manifest against the key frame, the
+    * position resolution a distributed semi-join, and the sidecar is
+    * written distributed. `keyCol` must resolve against the table's
+    * PHYSICAL data schema — a typo'd or metadata-added column fails
+    * HERE, before anything commits.
     */
   def stageDeleteMor(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String): Int = {
@@ -2428,32 +2386,58 @@ object Snapshot {
     require(keys.columns.contains(keyCol),
       s"delete key frame lacks column '$keyCol' (has: ${keys.columns.mkString(", ")})")
     requireDataKeyCol(spark, dir, cur, keyCol)
-    // The empty-frame guard moved POST-write (the stageAppend device):
-    // the former pre-write isEmpty probe evaluated the — typically
-    // join-derived — key plan a second time on every delete. The sidecar
-    // is written once, read back under the key's EXPLICIT schema (so
-    // zero part files cannot produce a no-schema error), and an empty
-    // result cleans up and refuses with the same message; the claimed
-    // version number is burned in that error path, which commit
-    // tolerates (stagePurgeCore's constraint refusal already does this).
-    val n = claimVersion(spark, dir)
-    val dvManifest = stagedWrite(spark, keys.select(keyCol).distinct(),
-      new Path(dir, s"v$n/_dv"), keyCol, dvSidecar = true).entries(spark, dir, n)
-    if (dvManifest.forall(e => e.nRows == null || e.nRows.longValue == 0L)) {
-      val p = new Path(s"$dir/v$n")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      require(false, "empty delete key set — nothing to delete")
-    }
-    writeManifestEntries(spark, dir, n,
-      manifestEntries(spark, dir, cur) ++ dvManifest)
-    n
+    val hit = statsHitPaths(spark, dataEntries(spark, dir, cur), keys, keyCol)
+    if (hit.isEmpty) return cur
+    // the sidecar's file range: the candidates' lexicographic [min, max]
+    // — a conservative bound the driver already holds, so readers above
+    // the driver mask budget still fetch only the sidecars that can
+    // reference their file ([[posDvSpecs]])
+    val tails = hit.map(vTailOf)
+    val range = Map(PosDvFileCol -> ColStat(null, null, tails.min, tails.max))
+    // staged to a TEMP dir and moved under a claimed version only when a
+    // position landed (the stageAppend device): an all-miss delete
+    // claims no version and leaves nothing behind
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dir, s"_stage_tmp.${java.util.UUID.randomUUID}")
+    try {
+      val staged = stagedWrite(spark,
+        keyPositions(spark, dir, cur, hit, keys, keyCol), tmp, PosDvPosCol,
+        dvSidecar = true)
+      if (staged.files.values.forall(_.nRows == 0L)) return cur
+      val n = claimVersion(spark, dir)
+      val dest = new Path(dir, s"v$n/_dvp")
+      fs.mkdirs(dest.getParent)
+      require(fs.rename(tmp, dest), s"could not move staged delete $tmp to $dest")
+      // a writer task that saw no rows may still leave an empty file
+      writeManifestEntries(spark, dir, n, manifestEntries(spark, dir, cur) ++
+        staged.entries(spark, dir, n).filter(_.nRows > 0).map(_.copy(stats = range)))
+      n
+    } finally if (fs.exists(tmp)) { fs.delete(tmp, true); () }
   }
 
-  /** Merge-on-read delete: stage + atomic commit. */
+  /** The (file, pos) of every row of version `n`'s `files`, read under
+    * `n`'s pending position mask, whose `keyCol` is in `keys` — a
+    * distributed left-semi join (never a collected key list), sorted by
+    * (file, pos) within each output partition as the DSv2 delete writer
+    * sorts its sidecars. Package-visible so a spec can pin the
+    * no-driver-materialization shape directly.
+    */
+  private[graft] def keyPositions(spark: SparkSession, dir: String, n: Int,
+      files: Array[String], keys: DataFrame, keyCol: String): DataFrame =
+    readFiles(spark, dir, n, files,
+      dvPosOf(spark, dir, n, Some(files.map(vTailOf).toSet)), withPosCols = true)
+      .join(keys.select(keyCol), Seq(keyCol), "left_semi")
+      .select(col("__dv_file").as(PosDvFileCol), col("__dv_pos").as(PosDvPosCol))
+      .repartition(col(PosDvFileCol))
+      .sortWithinPartitions(PosDvFileCol, PosDvPosCol)
+
+  /** Merge-on-read delete: stage + atomic commit (no-op when no live
+    * row carries a key).
+    */
   def deleteMorKeys(spark: SparkSession, dir: String, keys: Seq[Long],
       keyCol: String): Int = {
     val n = stageDeleteMor(spark, dir, keys, keyCol)
-    commit(spark, dir, n)
+    if (n > currentVersion(spark, dir)) commit(spark, dir, n)
     n
   }
 
@@ -2463,17 +2447,15 @@ object Snapshot {
   def deleteMorKeys(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String): Int = {
     val n = stageDeleteMor(spark, dir, keys, keyCol)
-    commit(spark, dir, n)
+    if (n > currentVersion(spark, dir)) commit(spark, dir, n)
     n
   }
 
   /** [[stageDeleteMor]]'s pre-commit guard: the delete key column must
-    * exist PHYSICALLY in the table's data files. A typo'd name would
-    * commit a DV sidecar whose anti-join fails every read surface at
-    * analysis time — wedging the table with no API-level recovery — and
-    * a metadata-added column ([[addColumn]]) only exists after the
-    * read-side default fill, which the purge rewrite and stats prune
-    * never see; both fail here instead.
+    * exist PHYSICALLY in the table's data files. A metadata-added
+    * column ([[addColumn]]) only exists after the read-side default
+    * fill, which the candidate stats prune never sees, and a typo'd
+    * name resolves nothing; both fail here with the table's columns.
     */
   private def requireDataKeyCol(spark: SparkSession, dir: String, cur: Int,
       keyCol: String): Unit = {
@@ -2488,57 +2470,32 @@ object Snapshot {
   }
 
   /** MATERIALIZE pending merge-on-read deletes (the maintenance half of
-    * [[deleteMorKeys]]): rewrite exactly the files that can contain a
-    * deleted key (stats-guided, the [[stagePurgeFrameImpl]] machinery),
-    * shed the DV sidecar rows from the manifest, and commit. After this
-    * the table is DV-free: reads drop the anti-join and copy-on-write
-    * maintenance is legal again. Returns the new version (or the
-    * current one when no DVs were pending).
-    *
-    * FULLY DISTRIBUTED: the DV key set stays a DataFrame end to end —
-    * file pruning is a broadcast range join of the #files-sized manifest
-    * stats against the key frame, and the delete is [[antiKeep]]'s
-    * anti-join — so a join-derived delete set of any size materializes
-    * without a driver-side key collect (the round-11 boundary, removed).
+    * [[deleteMorKeys]] and of the DSv2 position-delta DML): the
+    * position sidecars NAME their files, so the rewrite set is exact —
+    * no stats guessing — and the rewrite reads those files UNDER the
+    * position mask (a blind re-read would resurrect every masked row);
+    * the staged manifest sheds the sidecar rows. After this the table
+    * is DV-free: reads drop the mask and copy-on-write maintenance is
+    * legal again. Returns the new version (or the current one when no
+    * DVs were pending).
     */
   def applyMorDeletes(spark: SparkSession, dir: String, partCol: String,
       checksumCol: String, statsCol: Option[String] = None): Int = {
-    val cur0 = currentVersion(spark, dir)
-    require(cur0 >= 1, s"snapshot table $dir has no committed version")
-    // POSITION DVs first (the DSv2 SupportsDelta door's sidecars): the
-    // dvp rows NAME their files, so the rewrite set is exact — no stats
-    // guessing — and the rewrite reads those files UNDER the position
-    // mask (a blind re-read would resurrect every masked row). Runs
-    // before the key half so the key purge's own file reads never see
-    // an unapplied position mask.
-    val afterPos = {
-      val manifest = manifestEntries(spark, dir, cur0)
-      val posSidecars = manifest.filter(_.isPosDv)
-      if (posSidecars.isEmpty) cur0
-      else {
-        val dataByTail = manifest.filterNot(_.isDv)
-          .map(e => vTailOf(e.path) -> e.path).toMap
-        val affectedTails = dvPosOf(spark, dir, cur0).get
-          .select(PosDvFileCol).distinct().collect()
-          .map(_.getString(0)).toSet
-        val hit = affectedTails.flatMap(dataByTail.get).toArray.sorted
-        val n = stagePurgeCore(spark, dir, manifest, hit, identity,
-          partCol, checksumCol, statsCol, dropDv = false,
-          posMask = dvPosOf(spark, dir, cur0, Some(affectedTails)),
-          dropPosDv = true)
-        if (n > cur0) commit(spark, dir, n, currentTag(spark, dir))
-        n
-      }
-    }
-    val cur = math.max(cur0, afterPos)
-    dvKeysOf(spark, dir, cur) match {
-      case None => cur
-      case Some((kc, keyFrame)) =>
-        val n = stagePurgeFrameImpl(spark, dir, keyFrame, kc, partCol,
-          checksumCol, statsCol, dropDv = true)
-        if (n > cur) commit(spark, dir, n, currentTag(spark, dir))
-        n
-    }
+    val cur = currentVersion(spark, dir)
+    require(cur >= 1, s"snapshot table $dir has no committed version")
+    val manifest = manifestEntries(spark, dir, cur)
+    if (!manifest.exists(_.isDv)) return cur
+    val dataByTail = manifest.filterNot(_.isDv)
+      .map(e => vTailOf(e.path) -> e.path).toMap
+    val affectedTails = dvPosOf(spark, dir, cur).get
+      .select(PosDvFileCol).distinct().collect()
+      .map(_.getString(0)).toSet
+    val hit = affectedTails.flatMap(dataByTail.get).toArray.sorted
+    val n = stagePurgeCore(spark, dir, manifest, hit, identity,
+      partCol, checksumCol, statsCol,
+      posMask = dvPosOf(spark, dir, cur, Some(affectedTails)), shedDv = true)
+    if (n > cur) commit(spark, dir, n, currentTag(spark, dir))
+    n
   }
 
   // ------------------------------------------------------------------
@@ -2623,7 +2580,8 @@ object Snapshot {
       nulls: java.lang.Long = null)
 
   /** One manifest row, driver-side. Nullable columns mirror the JSON
-    * schema (`kind` NULL = data file, 'dv' = delete-vector sidecar).
+    * schema (`kind` NULL = data file, 'dvp' = position delete-vector
+    * sidecar).
     * `stats` is the per-column statistics map, keyed by column name
     * (empty when the file recorded none).
     */
@@ -2642,19 +2600,12 @@ object Snapshot {
     def rangeOf(c: String): Option[(Double, Double)] =
       statOf(c).filter(s => s.lo != null && s.hi != null)
         .map(s => (s.lo.doubleValue, s.hi.doubleValue))
-    /** Any delete-vector SIDECAR (not a data file): key-based ('dv',
-      * [[stageDeleteMor]]) or position-based ('dvp', the DSv2
-      * `SupportsDelta` door) — the filter every data-file walk uses.
+    /** A delete-vector SIDECAR (not a data file): (file, pos) rows
+      * masking exactly one physical row each — the Delta DV shape,
+      * written by [[stageDeleteMor]] and the DSv2 `SupportsDelta` door;
+      * the filter every data-file walk uses.
       */
-    def isDv: Boolean = kind == "dv" || kind == "dvp"
-    /** Key-based delete vector: one column (the key), masks by anti-join
-      * on that column — every row sharing a masked key, in ANY file.
-      */
-    def isKeyDv: Boolean = kind == "dv"
-    /** Position-based delete vector: (file, pos) rows masking exactly
-      * one physical row each — the Iceberg-v2/Delta DV shape.
-      */
-    def isPosDv: Boolean = kind == "dvp"
+    def isDv: Boolean = kind == "dvp"
     def jsonLine: String = {
       val b = new StringBuilder("{")
       def fld(k: String, v: String): Unit =
@@ -2699,8 +2650,17 @@ object Snapshot {
             g("nulls"))
         }.toMap
       }.getOrElse(Map.empty)
-    MEntry(jsText(n, "path"), jsText(n, "part"), lng("n_rows"),
+    val e = MEntry(jsText(n, "path"), jsText(n, "part"), lng("n_rows"),
       lng("checksum"), jsText(n, "kind"), stats)
+    // an unknown kind — e.g. a key-based delete vector ('dv') of an
+    // older format — masks rows no reader applies: skipping the entry
+    // would silently bring its deleted rows back, so refuse instead
+    require(e.kind == null || e.isDv,
+      s"manifest entry ${e.path} has kind '${e.kind}': only position " +
+        "delete vectors ('dvp') are read — a key-based delete vector " +
+        "('dv') of an older format is not, and ignoring it would " +
+        "resurrect the rows it deletes")
+    e
   }
 
   /** Manifest rows of version `n`, driver-side (no Spark job). Fails
@@ -2740,61 +2700,22 @@ object Snapshot {
     writeJsonLinesDir(spark, s"$dir/_manifest.v$toV",
       readJsonLinesDir(spark, s"$dir/_manifest.v$fromV"))
 
-  private def dataRows(m: DataFrame): DataFrame =
-    m.filter(!(col("kind") <=> lit("dv")) && !(col("kind") <=> lit("dvp")))
-
-  private def dvRows(m: DataFrame): DataFrame =
-    m.filter(col("kind") <=> lit("dv"))
-
-  /** The committed KEY-based DELETE VECTORS of version `n`: the key
-    * column name (self-described — it is the DV parquet's only column)
-    * and the distinct key frame, or None when no key-MoR deletes are
-    * pending. Position DVs ('dvp') resolve through [[dvPosOf]].
-    */
-  private def dvKeysOf(spark: SparkSession, dir: String,
-      n: Int): Option[(String, DataFrame)] = {
-    val paths = manifestEntries(spark, dir, n).filter(_.isKeyDv)
-      .map(e => resolvePath(dir, e.path))
-    if (paths.isEmpty) None
-    else {
-      val df = spark.read.parquet(paths.toIndexedSeq: _*)
-      Some((df.columns.head, df.distinct()))
-    }
-  }
-
-  /** Broadcast the read-side DV anti-join only when the manifest's
-    * recorded sidecar row counts say the key set is small — a zero-cost
-    * decision (the counts are already metadata). Request-sized deletes
-    * keep the broadcast fast path; a bulk frame delete
-    * ([[stageDeleteMor]]'s DataFrame overload) falls through to a
-    * shuffle anti-join instead of forcing a driver-memory-sized
+  /** Broadcast the read-side position mask only when the manifest's
+    * recorded sidecar row counts say the set is small — a zero-cost
+    * decision (the counts are already metadata); a bulk delete falls
+    * through to a shuffle anti-join instead of a driver-memory-sized
     * broadcast build.
     */
-  private val DvBroadcastMaxKeys = 1000000L
-
-  /** Apply version `n`'s delete vectors to a data frame — an anti-join
-    * on the DV's self-described key column, broadcast when the manifest
-    * says the key set is small (see [[DvBroadcastMaxKeys]]).
-    */
-  private def applyDv(spark: SparkSession, dir: String, n: Int,
-      data: DataFrame): DataFrame =
-    dvKeysOf(spark, dir, n) match {
-      case None => data
-      case Some((kc, keys)) =>
-        val nKeys = manifestEntries(spark, dir, n).filter(_.isKeyDv)
-          .map(e => if (e.nRows == null) 0L else e.nRows.longValue).sum
-        val side = if (nKeys <= DvBroadcastMaxKeys) broadcast(keys) else keys
-        data.join(side, Seq(kc), "left_anti")
-    }
+  private val DvBroadcastMaxPos = 1000000L
 
   // ------------------------------------------------------------------
-  // POSITION-based delete vectors ('dvp' sidecars — the DSv2
-  // `SupportsDelta` door, sources/DeltaOps.scala): parquet rows of
-  // (file vtail, physical row ordinal) masking exactly one row each.
-  // Unlike key DVs they are self-limiting — a dvp row references one
-  // specific physical row of one specific existing file — so appends
-  // stay legal while they are pending (new files can never be masked),
-  // and masking composes with schema fill/rename (row identity is
+  // POSITION-based delete vectors ('dvp' sidecars — written by
+  // [[stageDeleteMor]] and the DSv2 `SupportsDelta` door,
+  // sources/DeltaOps.scala): parquet rows of (file vtail, physical row
+  // ordinal) masking exactly one row each. They are self-limiting — a
+  // dvp row references one specific physical row of one specific
+  // existing file — so appends stay legal while they are pending (new
+  // files can never be masked), and masking composes with schema fill/rename (row identity is
   // physical, untouched by read-side transforms). Readers anti-join on
   // (vtail(_metadata.file_path), _metadata.row_index), applied at the
   // RAW scan inside [[readFiles]] (before any union/fill, where the
@@ -2841,7 +2762,7 @@ object Snapshot {
     */
   private[sources] def dvPosOf(spark: SparkSession, dir: String, n: Int,
       forFiles: Option[Set[String]] = None): Option[DataFrame] = {
-    val sidecars = manifestEntries(spark, dir, n).filter(_.isPosDv)
+    val sidecars = manifestEntries(spark, dir, n).filter(_.isDv)
     if (sidecars.isEmpty) return None
     // dvp sidecars have a FIXED schema — skip the footer-inference job
     val df0 = spark.read.schema(DeltaOps.DvSchema)
@@ -2852,7 +2773,7 @@ object Snapshot {
       else df0.filter(col(PosDvFileCol).isin(fs.toSeq: _*)))
     val nPos = sidecars
       .map(e => if (e.nRows == null) 0L else e.nRows.longValue).sum
-    Some(if (nPos <= DvBroadcastMaxKeys) broadcast(df) else df)
+    Some(if (nPos <= DvBroadcastMaxPos) broadcast(df) else df)
   }
 
   /** Per-file SORTED masked positions of version `n`, restricted to the
@@ -2884,7 +2805,7 @@ object Snapshot {
     */
   private[sources] def posDvSpecs(spark: SparkSession, dir: String,
       n: Int): (Long, Array[DeltaOps.DvSpec]) = {
-    val sidecars = manifestEntries(spark, dir, n).filter(_.isPosDv)
+    val sidecars = manifestEntries(spark, dir, n).filter(_.isDv)
     if (sidecars.isEmpty) return (0L, Array.empty)
     val nPos = sidecars
       .map(e => if (e.nRows == null) 0L else e.nRows.longValue).sum
@@ -2922,14 +2843,13 @@ object Snapshot {
     else readFiles(spark, dir, n, Array(entries.head.path)).columns
   }
 
-  /** [[readFiles]] + both DV masks of version `n` — the one assembly
+  /** [[readFiles]] + version `n`'s position mask — the one assembly
     * every committed-state read surface goes through.
     */
   private def readWithDv(spark: SparkSession, dir: String, n: Int,
       files: Array[String]): DataFrame =
-    applyDv(spark, dir, n,
-      readFiles(spark, dir, n, files,
-        dvPosOf(spark, dir, n, Some(files.map(vTailOf).toSet))))
+    readFiles(spark, dir, n, files,
+      dvPosOf(spark, dir, n, Some(files.map(vTailOf).toSet)))
 
   // ------------------------------------------------------------------
   // SCHEMA EVOLUTION — metadata-only ADD COLUMN with INITIAL DEFAULTS
@@ -3253,8 +3173,9 @@ object Snapshot {
     * is the current one verbatim plus an evolution step — zero data I/O;
     * files written before the rename read back under the new name, files
     * written after carry it physically (stage guards refuse the old
-    * name). Refuses under pending MoR deletes (the DV sidecar is
-    * self-described by column name) and when an active CHECK constraint
+    * name). The files' recorded `stats` and blooms move to the new name
+    * ([[commitColumnStep]]). Refuses under pending MoR deletes, like
+    * every metadata evolution verb, and when an active CHECK constraint
     * references the column.
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
@@ -3271,10 +3192,7 @@ object Snapshot {
       s"column '$to' already exists on $dir")
     requireNoConstraintRefs(spark, dir, cur, from, "renaming column")
     val n = claimVersion(spark, dir)
-    copyManifest(spark, dir, cur, n)
-    writeEvolution(spark, dir, n,
-      evolutionAt(spark, dir, cur) :+ RenameCol(from, to, n))
-    commit(spark, dir, n, currentTag(spark, dir))
+    commitColumnStep(spark, dir, cur, n, RenameCol(from, to, n), from, Some(to))
     n
   }
 
@@ -3282,7 +3200,8 @@ object Snapshot {
     * the current one verbatim plus an evolution step — zero data I/O;
     * readers project the column away from the files that still carry it
     * physically (the bytes become dead weight that the next compaction
-    * or rewrite of each file sheds). Refusals mirror [[renameColumn]];
+    * or rewrite of each file sheds), and so do the files' recorded
+    * `stats` and blooms of it. Refusals mirror [[renameColumn]];
     * re-adding the same name later is refused by [[addColumn]]'s
     * one-add-per-name rule.
     */
@@ -3297,11 +3216,28 @@ object Snapshot {
       s"cannot drop the last column of $dir")
     requireNoConstraintRefs(spark, dir, cur, name, "dropping column")
     val n = claimVersion(spark, dir)
-    copyManifest(spark, dir, cur, n)
-    writeEvolution(spark, dir, n,
-      evolutionAt(spark, dir, cur) :+ DropCol(name, n))
-    commit(spark, dir, n, currentTag(spark, dir))
+    commitColumnStep(spark, dir, cur, n, DropCol(name, n), name, None)
     n
+  }
+
+  /** Commit a rename or drop step as version `n`: the manifest and the
+    * bloom sidecar carry column `from`'s recorded statistics under its
+    * new name (`to = None` drops them). Copied verbatim, they would stay
+    * filed under the old name, and a column later added under that name
+    * would be pruned by the old column's ranges — silently wrong rows.
+    */
+  private def commitColumnStep(spark: SparkSession, dir: String, cur: Int,
+      n: Int, step: EvoStep, from: String, to: Option[String]): Unit = {
+    def rekey(c: String): Option[String] =
+      if (c.equalsIgnoreCase(from)) to else Some(c)
+    writeManifestEntries(spark, dir, n, manifestEntries(spark, dir, cur).map(e =>
+      e.copy(stats = e.stats.flatMap { case (c, st) => rekey(c).map(_ -> st) })))
+    val blooms = bloomsAt(spark, dir, cur)
+    if (blooms.values.exists(_.col.equalsIgnoreCase(from)))
+      writeBlooms(spark, dir, n, blooms.flatMap { case (p, b) =>
+        rekey(b.col).map(c => p -> b.copy(col = c)) })
+    writeEvolution(spark, dir, n, evolutionAt(spark, dir, cur) :+ step)
+    commit(spark, dir, n, currentTag(spark, dir))
   }
 
   /** Metadata-only COLUMN TYPE WIDENING (Delta's type widening):
@@ -3700,26 +3636,16 @@ object Snapshot {
       .toDF("name", "cond_sql", "since")
   }
 
-  /** CoW maintenance under pending MoR deletes would resurrect or
-    * double-mask rows (a rewritten file's rows still anti-join the DV
-    * keys; an upsert re-inserting a deleted key would stay hidden) —
-    * refuse loudly; [[applyMorDeletes]] materializes first.
+  /** CoW maintenance under pending MoR deletes would resurrect rows: a
+    * rewrite reads its files without the position mask, and the
+    * sidecars keep naming the files it replaced — refuse loudly;
+    * [[applyMorDeletes]] materializes first.
     */
   private[sources] def requireNoDv(spark: SparkSession, dir: String, n: Int,
       what: String): Unit =
     require(!manifestEntries(spark, dir, n).exists(_.isDv),
       s"snapshot table $dir v$n has pending merge-on-read deletes — " +
         s"run applyMorDeletes before $what")
-
-  /** [[requireNoDv]] restricted to KEY delete vectors — for operations
-    * position DVs cannot endanger (appends: a dvp row references one
-    * physical row of one EXISTING file, so new files are unmaskable).
-    */
-  private[sources] def requireNoKeyDv(spark: SparkSession, dir: String, n: Int,
-      what: String): Unit =
-    require(!manifestEntries(spark, dir, n).exists(_.isKeyDv),
-      s"snapshot table $dir v$n has pending key-based merge-on-read " +
-        s"deletes — run applyMorDeletes before $what")
 
   /** Publish a snapshot CLUSTERED on a numeric `statsCol` with per-FILE
     * min/max recorded in the manifest — the second metadata-skipping
@@ -3875,10 +3801,12 @@ object Snapshot {
     *
     * Cost shape (100 TB): files present in BOTH manifests are immutable
     * and identical, so they cancel by identity and are read ONLY where a
-    * delete-vector's mask status changed — restricted to the CHANGED dv
-    * keys (semi-join), with statted files range-pruned from #files-sized
-    * manifest metadata first (the [[stagePurgeFrameImpl]] device, same
-    * numeric-key-stats contract). Everything else reads only the
+    * delete-vector position's mask status changed — the sidecars NAME
+    * the affected shared files (no stats guessing), the candidate rows
+    * are a semi-join against the #changed-positions-sized frame, and
+    * each candidate is read once and evaluated under both sides' masks,
+    * so the multiset `exceptAll` emits each logical change exactly
+    * once. Everything else reads only the
     * SYMMETRIC DIFFERENCE of the file sets, and unchanged rows inside a
     * rewritten partition cancel in the exceptAll — a one-partition
     * upsert on a thousand-partition table feeds IVM by reading one
@@ -3905,94 +3833,6 @@ object Snapshot {
         evolutionAt(spark, dir, fromV) == evolutionAt(spark, dir, toV),
       s"snapshot $dir: schema changed between v$fromV and v$toV (addColumn/" +
         "renameColumn/dropColumn) — read changes within one schema generation")
-    val mbEntries = manifestEntries(spark, dir, toV)
-    val fa = dataEntries(spark, dir, fromV).map(_.path).toSet
-    val fb = mbEntries.filterNot(_.isDv).map(_.path).toSet
-    // POSITION-DV commits: the masked rows are named exactly by
-    // (file, pos), so the row-level delta needs no multiset diff at
-    // all — served by the dedicated path below
-    val posA = manifestEntries(spark, dir, fromV).exists(_.isPosDv)
-    val posB = mbEntries.exists(_.isPosDv)
-    if (posA || posB)
-      return readChangesWithPos(spark, dir, fromV, toV)
-    val onlyA = (fa -- fb).toArray
-    val onlyB = (fb -- fa).toArray
-    val shared = fa.intersect(fb)
-    val schemaV = math.max(fromV, toV)
-    val dvA = dvKeysOf(spark, dir, fromV)
-    val dvB = dvKeysOf(spark, dir, toV)
-    for { (ka, _) <- dvA; (kb, _) <- dvB } require(ka == kb,
-      s"snapshot $dir: delete-vector key column changed between v$fromV " +
-        s"('$ka') and v$toV ('$kb')")
-    def mask(df: DataFrame, dv: Option[(String, DataFrame)]): DataFrame =
-      dv.fold(df) { case (kc, keys) => df.join(keys, Seq(kc), "left_anti") }
-    // the dv keys whose MASK STATUS differs between the versions — the
-    // only keys for which a shared (identity-cancelled) file can hold a
-    // logical change. #sidecar-sized frames; the emptiness probe keeps
-    // the no-dv-change path from touching shared files at all.
-    val changed: Option[(String, DataFrame)] = ((dvA, dvB) match {
-      case (None, None) => None
-      case (Some((k, a)), Some((_, b))) =>
-        Some((k, a.exceptAll(b).union(b.exceptAll(a))))
-      case (Some((k, a)), None) => Some((k, a))
-      case (None, Some((k, b))) => Some((k, b))
-    }).filter { case (_, ck) => !ck.isEmpty }
-    // shared-file rows whose key mask changed, read once per side under
-    // each side's full mask; stats-statted shared files are range-pruned
-    // against the changed keys before any data I/O
-    val sharedExtra: Option[(DataFrame, DataFrame)] =
-      if (shared.isEmpty) None
-      else changed.flatMap { case (kc, ck) =>
-        val hit = statsHitPaths(spark,
-          mbEntries.filter(e => !e.isDv && shared.contains(e.path)), ck, kc)
-        if (hit.isEmpty) None
-        else {
-          val rows = readFiles(spark, dir, schemaV, hit)
-            .join(ck, Seq(kc), "left_semi")
-          Some((mask(rows, dvA), mask(rows, dvB)))
-        }
-      }
-    // L_from ∖ L_to restricted to where they can differ: the common
-    // sub-multiset (shared files at unchanged mask status) cancels in
-    // the multiset difference, so both sides carry only their exclusive
-    // files (under their full dv mask) plus the mask-changed shared rows
-    val template = readVersion(spark, dir, schemaV).limit(0)
-    val canonical = template.columns.toIndexedSeq
-    def canon(df: DataFrame): DataFrame = df.select(canonical.map(col): _*)
-    def rowsOf(paths: Array[String]): Option[DataFrame] =
-      if (paths.isEmpty) None else Some(readFiles(spark, dir, schemaV, paths))
-    def side(only: Array[String], dv: Option[(String, DataFrame)],
-        extra: Option[DataFrame]): DataFrame =
-      (rowsOf(only).map(mask(_, dv)).toSeq ++ extra.toSeq)
-        .map(canon).reduceOption(_ union _).getOrElse(canon(template))
-    val left = side(onlyA, dvA, sharedExtra.map(_._1))
-    val right = side(onlyB, dvB, sharedExtra.map(_._2))
-    left.exceptAll(right).withColumn("_change_type", lit("delete"))
-      .unionByName(
-        right.exceptAll(left).withColumn("_change_type", lit("insert")))
-      .select(col("_change_type") +: canonical.map(col): _*)
-  }
-
-  /** [[readChanges]] when POSITION delete vectors are in play on either
-    * side — the dvp rows NAME the changed rows (file, pos), so the
-    * changed-row candidate set is exact:
-    *
-    *  - files exclusive to one side diff wholesale under that side's
-    *    full masks (both kinds), exactly like the main path;
-    *  - shared files contribute only rows at POSITIONS whose dvp mask
-    *    status changed, or matching KEYS whose key-DV status changed —
-    *    read ONCE, then evaluated under each side's full masks, so a
-    *    row that is both position- and key-masked is never counted
-    *    twice; the multiset `exceptAll` emits each logical change
-    *    exactly once.
-    *
-    * At 100 TB: the dvp sidecars name the affected shared files
-    * exactly (no stats guessing), the candidate filter is a semi-join
-    * against #changed-rows-sized frames, and untouched shared files are
-    * never opened.
-    */
-  private def readChangesWithPos(spark: SparkSession, dir: String,
-      fromV: Int, toV: Int): DataFrame = {
     val schemaV = math.max(fromV, toV)
     val entriesA = manifestEntries(spark, dir, fromV)
     val entriesB = manifestEntries(spark, dir, toV)
@@ -4001,91 +3841,45 @@ object Snapshot {
     val onlyA = (fa -- fb).toArray
     val onlyB = (fb -- fa).toArray
     val shared = fa.intersect(fb)
-    val dvA = dvKeysOf(spark, dir, fromV)
-    val dvB = dvKeysOf(spark, dir, toV)
-    for { (ka, _) <- dvA; (kb, _) <- dvB } require(ka == kb,
-      s"snapshot $dir: delete-vector key column changed between v$fromV " +
-        s"('$ka') and v$toV ('$kb')")
-    def keyMask(df: DataFrame, dv: Option[(String, DataFrame)]): DataFrame =
-      dv.fold(df) { case (kc, keys) => df.join(keys, Seq(kc), "left_anti") }
     val template = readVersion(spark, dir, schemaV).limit(0)
     val canonical = template.columns.toIndexedSeq
     def canon(df: DataFrame): DataFrame = df.select(canonical.map(col): _*)
-    // exclusive files, read under their own side's position + key masks
-    def sideRows(paths: Array[String], v: Int,
-        dv: Option[(String, DataFrame)]): Option[DataFrame] =
+    // a position frame keyed like readFiles' exposed position columns
+    def scanPos(p: DataFrame): DataFrame =
+      p.select(col(PosDvFileCol).as("__dv_file"), col(PosDvPosCol).as("__dv_pos"))
+    // exclusive files, read under their own side's position mask
+    def sideRows(paths: Array[String], v: Int): Option[DataFrame] =
       if (paths.isEmpty) None
-      else Some(keyMask(readFiles(spark, dir, schemaV, paths,
-        dvPosOf(spark, dir, v, Some(paths.map(vTailOf).toSet))), dv))
-    // shared-file candidates: positions whose dvp status changed …
+      else Some(readFiles(spark, dir, schemaV, paths,
+        dvPosOf(spark, dir, v, Some(paths.map(vTailOf).toSet))))
+    // shared-file candidates: the positions whose mask status changed
     val posA = dvPosOf(spark, dir, fromV)
     val posB = dvPosOf(spark, dir, toV)
-    val sharedTails = shared.map(vTailOf)
-    val tailToPath = entriesB.filterNot(_.isDv)
-      .filter(e => shared.contains(e.path))
+    val tailToPath = entriesB.filter(e => !e.isDv && shared.contains(e.path))
       .map(e => vTailOf(e.path) -> e.path).toMap
     val changedPos: Option[DataFrame] = ((posA, posB) match {
       case (None, None) => None
       case (Some(a), Some(b)) => Some(a.exceptAll(b).union(b.exceptAll(a)))
       case (Some(a), None) => Some(a)
       case (None, Some(b)) => Some(b)
-    }).map(_.filter(col(PosDvFileCol).isin(sharedTails.toSeq: _*)))
+    }).map(_.filter(col(PosDvFileCol).isin(tailToPath.keys.toSeq: _*)))
       .filter(!_.isEmpty)
-    // … plus rows matching keys whose key-DV status changed
-    val changedKeys: Option[(String, DataFrame)] = ((dvA, dvB) match {
-      case (None, None) => None
-      case (Some((k, a)), Some((_, b))) =>
-        Some((k, a.exceptAll(b).union(b.exceptAll(a))))
-      case (Some((k, a)), None) => Some((k, a))
-      case (None, Some((k, b))) => Some((k, b))
-    }).filter { case (_, ck) => !ck.isEmpty }
-    val posHitPaths: Set[String] = changedPos.fold(Set.empty[String])(cp =>
-      cp.select(PosDvFileCol).distinct().collect()
-        .flatMap(r => tailToPath.get(r.getString(0))).toSet)
-    val keyHitPaths: Set[String] = changedKeys.fold(Set.empty[String]) {
-      case (kc, ck) => statsHitPaths(spark,
-        entriesB.filter(e => !e.isDv && shared.contains(e.path)), ck, kc).toSet
+    // each candidate row read ONCE, then evaluated under each side's mask
+    val sharedExtra: Option[(DataFrame, DataFrame)] = changedPos.map { cp =>
+      val hitPaths = cp.select(PosDvFileCol).distinct().collect()
+        .flatMap(r => tailToPath.get(r.getString(0))).sorted
+      val cand = readFiles(spark, dir, schemaV, hitPaths,
+        posMask = None, withPosCols = true)
+        .join(scanPos(cp), Seq("__dv_file", "__dv_pos"), "left_semi")
+      def sideOf(pos: Option[DataFrame]): DataFrame = pos.fold(cand)(p =>
+        cand.join(scanPos(p), Seq("__dv_file", "__dv_pos"), "left_anti"))
+      (sideOf(posA), sideOf(posB))
     }
-    val hitPaths = (posHitPaths ++ keyHitPaths).toArray.sorted
-    val sharedExtra: Option[(DataFrame, DataFrame)] =
-      if (hitPaths.isEmpty) None
-      else {
-        val rows = readFiles(spark, dir, schemaV, hitPaths,
-          posMask = None, withPosCols = true)
-        // disjoint candidate split: position-changed rows, then
-        // key-changed rows NOT already position-changed — a row
-        // matching both is counted once
-        val posMatched = changedPos.map(cp => rows.join(
-          cp.select(col(PosDvFileCol).as("__dv_file"),
-            col(PosDvPosCol).as("__dv_pos")),
-          Seq("__dv_file", "__dv_pos"), "left_semi"))
-        val keyMatched = changedKeys.map { case (kc, ck) =>
-          val base = changedPos.fold(rows)(cp => rows.join(
-            cp.select(col(PosDvFileCol).as("__dv_file"),
-              col(PosDvPosCol).as("__dv_pos")),
-            Seq("__dv_file", "__dv_pos"), "left_anti"))
-          base.join(ck, Seq(kc), "left_semi")
-        }
-        val candidates = (posMatched.toSeq ++ keyMatched.toSeq)
-          .reduceOption(_ unionByName _)
-        candidates.map { cand =>
-          def sideOf(v: Int, pos: Option[DataFrame],
-              dv: Option[(String, DataFrame)]): DataFrame = {
-            val pMasked = pos.fold(cand)(p => cand.join(
-              p.select(col(PosDvFileCol).as("__dv_file"),
-                col(PosDvPosCol).as("__dv_pos")),
-              Seq("__dv_file", "__dv_pos"), "left_anti"))
-            keyMask(pMasked, dv)
-          }
-          (sideOf(fromV, posA, dvA), sideOf(toV, posB, dvB))
-        }
-      }
-    def side(only: Array[String], v: Int, dv: Option[(String, DataFrame)],
-        extra: Option[DataFrame]): DataFrame =
-      (sideRows(only, v, dv).toSeq ++ extra.toSeq)
+    def side(only: Array[String], v: Int, extra: Option[DataFrame]): DataFrame =
+      (sideRows(only, v).toSeq ++ extra.toSeq)
         .map(canon).reduceOption(_ union _).getOrElse(canon(template))
-    val left = side(onlyA, fromV, dvA, sharedExtra.map(_._1))
-    val right = side(onlyB, toV, dvB, sharedExtra.map(_._2))
+    val left = side(onlyA, fromV, sharedExtra.map(_._1))
+    val right = side(onlyB, toV, sharedExtra.map(_._2))
     left.exceptAll(right).withColumn("_change_type", lit("delete"))
       .unionByName(
         right.exceptAll(left).withColumn("_change_type", lit("insert")))
@@ -4218,6 +4012,17 @@ object Snapshot {
       }
     }.toMap
 
+  /** Write a path-keyed bloom sidecar under version `n` (one line per
+    * file, in path order) — the form [[bloomsAt]] reads.
+    */
+  private def writeBlooms(spark: SparkSession, dir: String, n: Int,
+      blooms: Map[String, FileBloom]): Unit =
+    writeJsonLinesDir(spark, s"$dir/_blooms.v$n",
+      blooms.toSeq.sortBy(_._1).map { case (path, b) =>
+        s"""{"path":${jq(path)},"col":${jq(b.col)},""" +
+          s""""bits":${jq(java.util.Base64.getEncoder.encodeToString(b.bits))}}"""
+      })
+
   /** Record a PER-FILE BLOOM FILTER over an integral point-lookup key
     * (round-16, the judge's #3: a GDPR purge on a table NOT clustered
     * by the key rewrote every file — min/max ranges on an un-clustered
@@ -4271,13 +4076,10 @@ object Snapshot {
     }.toMap
     val n = claimVersion(spark, dir)
     copyManifest(spark, dir, cur, n)
-    val lines = entries.filterNot(_.isDv).flatMap { e =>
-      byTail.get(vTailOf(e.path)).filter(_ != null).map { bits =>
-        s"""{"path":${jq(e.path)},"col":${jq(f.name)},""" +
-          s""""bits":${jq(java.util.Base64.getEncoder.encodeToString(bits))}}"""
-      }
-    }
-    writeJsonLinesDir(spark, s"$dir/_blooms.v$n", lines)
+    writeBlooms(spark, dir, n, entries.filterNot(_.isDv).flatMap { e =>
+      byTail.get(vTailOf(e.path)).filter(_ != null)
+        .map(bits => e.path -> FileBloom(f.name, bits))
+    }.toMap)
     commit(spark, dir, n, currentTag(spark, dir))
     n
   }
@@ -4346,8 +4148,10 @@ object Snapshot {
     * LOUDLY otherwise rather than silently diverging from
     * [[read]]/[[readVersion]]:
     *
-    *  - pending merge-on-read deletes need the read-side anti-join →
-    *    run [[applyMorDeletes]] first (or read through the Scala API);
+    *  - pending merge-on-read deletes need the read-side position mask
+    *    → this raw list refuses them unless `allowDv` (the masking
+    *    scan of [[sqlServe]] asks for it); otherwise run
+    *    [[applyMorDeletes]] first, or read through the Scala API;
     *  - a metadata-added column that pre-add files must FILL needs the
     *    per-writer-version default resolution of [[readFiles]] → full
     *    republish first, or the Scala API. Once every live file carries
@@ -4356,13 +4160,13 @@ object Snapshot {
     */
   private def sqlFilesCore(spark: SparkSession, dir: String,
       version: Option[Int], partValues: Option[Seq[String]],
-      allowPosDv: Boolean = false): (Int, Array[String]) = {
+      allowDv: Boolean = false): (Int, Array[String]) = {
     val n = version.getOrElse(currentVersion(spark, dir))
     require(n >= 1, s"snapshot table $dir has no committed version")
     require(fc(spark).util.exists(new Path(dir, s"_manifest.v$n")),
       s"snapshot $dir has no manifest for v$n (never committed, or vacuumed)")
     val m = manifestEntries(spark, dir, n)
-    require(!m.exists(e => e.isKeyDv || (!allowPosDv && e.isPosDv)),
+    require(allowDv || !m.exists(_.isDv),
       s"snapshot table $dir v$n has pending merge-on-read deletes — the " +
         "SQL front door serves materialized tables; run applyMorDeletes " +
         "first (or read through Snapshot.read)")
@@ -4459,13 +4263,12 @@ object Snapshot {
     *    parquet scans underneath, so pushdown survives through the
     *    projections).
     *
-    * Pending MoR deletes and empty file lists still refuse in
-    * [[sqlFilesCore]] (materialize first / no files, no schema).
+    * Pending MoR deletes serve as described in the body; empty file
+    * lists still refuse in [[sqlFilesCore]] (no files, no schema).
     */
   private[sources] def sqlServe(spark: SparkSession, dir: String,
       version: Option[Int], partValues: Option[Seq[String]]): SqlServing = {
-    // PENDING POSITION DVs (key DVs keep their long-standing refusal in
-    // sqlFilesCore — spec-pinned contract):
+    // PENDING delete vectors:
     //  - the CURRENT full state serves through the connector's own
     //    position-masking scan (ServePosMasked → the writable table
     //    keeps reading AND mutating on plain sessions — a mor table
@@ -4474,17 +4277,24 @@ object Snapshot {
     //    plan (extension sessions; plain sessions get the mapped-read
     //    refusal naming the remedy).
     val nPeek = version.getOrElse(currentVersion(spark, dir))
-    val posPending = nPeek >= 1 &&
-      fc(spark).util.exists(new Path(dir, s"_manifest.v$nPeek")) && {
-        val m = manifestEntries(spark, dir, nPeek)
-        m.exists(_.isPosDv) && !m.exists(_.isKeyDv)
-      }
-    if (posPending && version.isEmpty && partValues.isEmpty)
-      sqlServeInner(spark, dir, None, None, allowPosDv = true) match {
+    val dvPending = nPeek >= 1 &&
+      fc(spark).util.exists(new Path(dir, s"_manifest.v$nPeek")) &&
+      manifestEntries(spark, dir, nPeek).exists(_.isDv)
+    if (dvPending && version.isEmpty && partValues.isEmpty)
+      sqlServeInner(spark, dir, None, None, allowDv = true) match {
         case ServeParquet(files, fill) => ServePosMasked(files, fill)
         case other => other // rename/drop states: the logical read masks
       }
-    else if (posPending) {
+    else if (dvPending) servedMapped(spark, dir, version, partValues)
+    else sqlServeInner(spark, dir, version, partValues, allowDv = false)
+  }
+
+  /** The LOGICAL read of one resolved snapshot state ([[ServeMapped]]):
+    * the committed or time-traveled content, partition-filtered when
+    * the parts option is set.
+    */
+  private def servedMapped(spark: SparkSession, dir: String,
+      version: Option[Int], partValues: Option[Seq[String]]): ServeMapped = {
       val base = version.fold {
         partValues.fold(read(spark, dir))(vs => readWhere(spark, dir, vs))
       } { v =>
@@ -4496,31 +4306,16 @@ object Snapshot {
         }
       }
       ServeMapped(base)
-    }
-    else sqlServeInner(spark, dir, version, partValues, allowPosDv = false)
   }
 
   private def sqlServeInner(spark: SparkSession, dir: String,
       version: Option[Int], partValues: Option[Seq[String]],
-      allowPosDv: Boolean): SqlServing = {
+      allowDv: Boolean): SqlServing = {
     import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
-    val (n, files) = sqlFilesCore(spark, dir, version, partValues, allowPosDv)
-    def mapped: ServeMapped = {
-      val base = version.fold {
-        partValues.fold(read(spark, dir))(vs => readWhere(spark, dir, vs))
-      } { v =>
-        val df = readVersion(spark, dir, v)
-        partValues.fold(df) { vs =>
-          val l = requireLayout(spark, dir,
-            "a partition-pruned time-travel read of this snapshot state")
-          df.filter(partExpr(l.partCol).cast("string").isin(vs: _*))
-        }
-      }
-      ServeMapped(base)
-    }
+    val (n, files) = sqlFilesCore(spark, dir, version, partValues, allowDv)
     val needEvo = evolutionAt(spark, dir, n)
       .exists(s => files.exists(writerVersion(_) < s.since))
-    if (needEvo) return mapped
+    if (needEvo) return servedMapped(spark, dir, version, partValues)
     val resolved = files.map(resolvePath(dir, _)).toIndexedSeq
     val added = addedColumnsAt(spark, dir, n)
     if (added.isEmpty) return ServeParquet(resolved, None)
@@ -4550,7 +4345,7 @@ object Snapshot {
     } catch {
       // a non-foldable default (generated column) has no existence-
       // default representation — serve the logical read instead
-      case _: Exception => mapped
+      case _: Exception => servedMapped(spark, dir, version, partValues)
     }
   }
 
@@ -4643,9 +4438,8 @@ object Snapshot {
     *    immutable and masks only grow, so the new sidecars' rows ARE
     *    the step's deletes, no multiset diff).
     *
-    * None when the step cannot split: a data file removed/rewritten,
-    * key-DV drift or presence (their masks are not per-file), a schema
-    * change, or a dvp sidecar REMOVED (materialization — which also
+    * None when the step cannot split: a data file removed/rewritten, a
+    * schema change, or a dvp sidecar REMOVED (materialization — which also
     * rewrites files). The list is derived from the two manifests +
     * sidecar paths only (sorted, deterministic), so a restart re-slices
     * identically; the signed CDF aggregate law holds per sub-batch
@@ -4653,26 +4447,21 @@ object Snapshot {
     */
   private[graft] def cdfSplitUnits(spark: SparkSession, dir: String,
       p: Int, v: Int): Option[Seq[(String, Boolean)]] = {
-    // p = 0: the INITIAL LOAD of a table with PENDING position DVs —
-    // its content is still a per-file list (each file's rows under the
-    // position mask), so it splits as insert units; key DVs mask
-    // across files and fall back to the atomic readVersion batch
-    if (p == 0) {
-      val eb = manifestEntries(spark, dir, v)
-      if (eb.exists(_.isKeyDv)) return None
-      return Some(eb.filterNot(_.isDv).map(_.path).sorted
+    // p = 0: the INITIAL LOAD of a table with PENDING DVs — its
+    // content is still a per-file list (each file's rows under the
+    // position mask), so it splits as insert units
+    if (p == 0)
+      return Some(dataEntries(spark, dir, v).map(_.path).sorted
         .map(f => (resolvePath(dir, f), false)))
-    }
     if (addedColumnsAt(spark, dir, p) != addedColumnsAt(spark, dir, v) ||
         evolutionAt(spark, dir, p) != evolutionAt(spark, dir, v)) return None
     val ea = manifestEntries(spark, dir, p)
     val eb = manifestEntries(spark, dir, v)
-    if (ea.exists(_.isKeyDv) || eb.exists(_.isKeyDv)) return None
     val fa = ea.filterNot(_.isDv).map(_.path).toSet
     val fb = eb.filterNot(_.isDv).map(_.path).toSet
     if ((fa -- fb).nonEmpty) return None // rewrote/removed data files
-    val dvpA = ea.filter(_.isPosDv).map(_.path).toSet
-    val dvpB = eb.filter(_.isPosDv).map(_.path).toSet
+    val dvpA = ea.filter(_.isDv).map(_.path).toSet
+    val dvpB = eb.filter(_.isDv).map(_.path).toSet
     if ((dvpA -- dvpB).nonEmpty) return None // materialization shape
     val inserts = (fb -- fa).toSeq.sorted
       .map(f => (resolvePath(dir, f), false))
@@ -4721,9 +4510,9 @@ object Snapshot {
     val delDf =
       if (dels.isEmpty) None
       else {
-        val dvpA = manifestEntries(spark, dir, p).filter(_.isPosDv)
+        val dvpA = manifestEntries(spark, dir, p).filter(_.isDv)
           .map(_.path).toSet
-        val newDvp = manifestEntries(spark, dir, v).filter(_.isPosDv)
+        val newDvp = manifestEntries(spark, dir, v).filter(_.isDv)
           .map(_.path).filterNot(dvpA.contains)
         val wantTails = dels.map(u => vTailOf(u._1)).toSet
         val positions = spark.read
@@ -4985,7 +4774,7 @@ object Snapshot {
       // which would rewrite a 20-file fragmented partition back into
       // ~20 files and never actually compact it (ADVICE r18)
       val n = stagePurgeCore(spark, dir, manifest, hit, identity,
-        partCol, checksumCol, statsCol = statsCol, dropDv = false,
+        partCol, checksumCol, statsCol = statsCol,
         rangeBuckets = Some(math.max(1,
           fragmented.size + heal.map(_.part).distinct.size)))
       // stagePurgeCore's Some(c) path already records the fresh files'
@@ -5043,11 +4832,8 @@ object Snapshot {
     val (n, relFiles) = resolveFiles(spark, dir, None)
     val files = relFiles.map(resolvePath(dir, _))
     val allEntries = manifestEntries(spark, dir, n)
-    val dvKeyPaths = allEntries.filter(_.isKeyDv)
+    val dvPaths = allEntries.filter(_.isDv)
       .map(e => resolvePath(dir, e.path)).toArray
-    val dvPosPaths = allEntries.filter(_.isPosDv)
-      .map(e => resolvePath(dir, e.path)).toArray
-    val dvPaths = dvKeyPaths ++ dvPosPaths
     require(!addedColumnsAt(spark, dir, n).exists(_.name == checksumCol),
       s"checksum column '$checksumCol' is a metadata-added column — " +
         "verify against a physical column")
@@ -5063,22 +4849,14 @@ object Snapshot {
             .cast("bigint")).as("a_checksum"))
         .select(vTailExpr(col("abs")).as("path"),
           col("a_rows"), col("a_checksum"))
-    // DV sidecars verify against their OWN key column (self-described —
-    // the sidecar's only column); a tampered delete vector is an
-    // integrity failure exactly like a tampered data file: it silently
-    // changes what every reader sees.
-    // sidecars verify per KIND against their own checksum rule: a key
-    // DV over its single self-described key column, a position DV over
-    // its `pos` column — a tampered delete vector of either kind is an
-    // integrity failure exactly like a tampered data file
-    val sidecarStats = Seq(
-      if (dvKeyPaths.isEmpty) None
-      else Some(fileStats(dvKeyPaths,
-        spark.read.parquet(dvKeyPaths.toIndexedSeq: _*).columns.head)),
-      if (dvPosPaths.isEmpty) None
-      else Some(fileStats(dvPosPaths, PosDvPosCol))).flatten
-    val actual = (fileStats(files, checksumCol) +: sidecarStats)
-      .reduce(_ unionByName _)
+    // DV sidecars verify against their own checksum rule, over the `pos`
+    // column: a tampered delete vector is an integrity failure exactly
+    // like a tampered data file — it silently changes what every reader
+    // sees
+    val actual =
+      if (dvPaths.isEmpty) fileStats(files, checksumCol)
+      else fileStats(files, checksumCol)
+        .unionByName(fileStats(dvPaths, PosDvPosCol))
     import spark.implicits._
     val recorded = allEntries.map(e =>
       (e.path, Option(e.nRows).map(_.longValue), Option(e.checksum).map(_.longValue)))

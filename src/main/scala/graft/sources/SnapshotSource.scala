@@ -39,10 +39,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * States the explicit file list cannot fully describe either SERVE
   * through a richer scan or REFUSE LOUDLY instead of silently diverging
-  * from `Snapshot.read`: pending POSITION delete vectors serve through
-  * the connector's own masking scan (round 17 — a mor table with
-  * deletes pending is its normal operating state), pending KEY delete
-  * vectors refuse (run `applyMorDeletes` first), and metadata-added
+  * from `Snapshot.read`: pending delete vectors serve through the
+  * connector's own masking scan (round 17 — a mor table with deletes
+  * pending is its normal operating state), and metadata-added
   * columns still needing read-side default fill serve via
   * EXISTS_DEFAULT or the mapped route ([[Snapshot.sqlServe]] documents
   * the full resolution). Read-only: `write.format("graft-snapshot")`

@@ -437,7 +437,7 @@ private[graft] class SnapshotVersionSource(spark: SparkSession, dir: String,
     // a CDF step splits when its content reduces to per-file UNITS —
     // pure file lists AND dv-only delete-bearing steps (round 17:
     // insert units + per-file delete units); anything else (file
-    // rewrites, key-DV drift, schema change, materialization) emits as
+    // rewrites, schema change, materialization) emits as
     // ONE commit-atomic batch instead
     val filesOpt =
       if (changes) cdfUnits(p, v).map(_.map(_._1))

@@ -878,9 +878,12 @@ object ScaleProbe {
         f"($nk10 nodes; factor ${k10 / k1}%5.1f)")
     }
     // Merge-on-read delete at a 10× store: like the purge probe but for
-    // the WRITE-optimized path — the DV commit writes O(#keys) bytes
-    // regardless of table size (claim ~1, and absolutely tiny), while
-    // the read-side anti-join cost scales with the scan it masks.
+    // the WRITE-optimized path — the commit resolves the keys to
+    // (file, pos) by scanning the candidate files, which the stats prune
+    // on the clustered key keeps to the files whose range holds a key
+    // (so the commit grows with the key footprint, not the store), and
+    // writes only the position sidecar; the read-side position mask
+    // cost scales with the scan it masks.
     if (mode == "all" || mode == "mor") {
       def morProbe(mult: Int): (Double, Double, Double) = {
         val dir = java.nio.file.Files.createTempDirectory("probe_mor").toString
@@ -906,8 +909,9 @@ object ScaleProbe {
       graft.ops.T.releaseCaches(blocking = true)
       val (a10, d10, r10) = morProbe(10)
       graft.ops.T.releaseCaches(blocking = true)
-      println(f"MoR delete commit 1x ${d1}%6.2fs -> 10x-store ${d10}%7.2fs (factor ${d10 / d1}%5.1f, claim ~1); " +
-        f"masked read ${r1}%5.2fs -> ${r10}%5.2fs; materialize ${a1}%5.2fs -> ${a10}%5.2fs (stats-bounded)")
+      println(f"MoR delete commit 1x ${d1}%6.2fs -> 10x-store ${d10}%7.2fs (factor ${d10 / d1}%5.1f, " +
+        "stats-pruned candidate scan); " +
+        f"masked read ${r1}%5.2fs -> ${r10}%5.2fs; materialize ${a1}%5.2fs -> ${a10}%5.2fs (rewrites the named files)")
     }
     // COMPOSITE-SPEC pruning (round-17 — the judge's #2 done-criterion):
     // after lang -> (lang, source), a delete with atoms on BOTH
@@ -1048,15 +1052,16 @@ object ScaleProbe {
         f"cow same delete: commit ${cd1}%5.2fs -> ${cd10}%5.2fs, " +
         f"bytes ${cb1}%d -> ${cb10}%d (factor ${cb10.toDouble / math.max(1L, cb1)}%4.1f, file-size-bound)")
     }
-    // BULK MoR delete through the DataFrame path (round-12, the
-    // distributed DV write + broadcast-stats prune + anti-join
-    // materialize that replaced the driver-side key collect). Two
-    // delete shapes, separate lifecycles: a SPREAD set (10 % of every
-    // file — materialize must rewrite everything it touches, so its
+    // BULK MoR delete through the DataFrame path: broadcast-stats
+    // prune + distributed key-to-position semi-join at commit, and a
+    // materialize that rewrites exactly the files the sidecar names.
+    // Two delete shapes, separate lifecycles: a SPREAD set (10 % of
+    // every file — commit and materialize touch every file, so their
     // factor tracks the store) and a RANGE-confined set (one fixed
-    // doc_id band — the stats prune should keep materialize roughly
-    // FLAT as the store grows 10×, because the hit-file set doesn't
-    // grow with the table; that flatness is the money number).
+    // doc_id band — the commit's stats prune and the named rewrite set
+    // should keep both roughly FLAT as the store grows 10×, because the
+    // hit-file set doesn't grow with the table; that flatness is the
+    // money number).
     if (mode == "all" || mode == "morbulk") {
       def bulkProbe(mult: Int, rangeConfined: Boolean): (Double, Double) = {
         val dir = java.nio.file.Files.createTempDirectory("probe_morbulk").toString
@@ -1088,7 +1093,7 @@ object ScaleProbe {
       println(f"MoR BULK spread: commit ${sd1}%5.2fs -> ${sd10}%5.2fs, " +
         f"materialize ${sm1}%5.2fs -> ${sm10}%5.2fs (factor ${sm10 / sm1}%4.1f, store-bound by design); " +
         f"range-confined: commit ${rd1}%5.2fs -> ${rd10}%5.2fs, " +
-        f"materialize ${rm1}%5.2fs -> ${rm10}%5.2fs (factor ${rm10 / rm1}%4.1f, stats-pruned ~flat)")
+        f"materialize ${rm1}%5.2fs -> ${rm10}%5.2fs (factor ${rm10 / rm1}%4.1f, ~flat)")
     }
     // DSv2 SQL front door (round-13 probe): manifest-level partition
     // prune vs full scan as the PARTITION COUNT grows 10× with one

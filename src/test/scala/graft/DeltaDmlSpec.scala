@@ -238,21 +238,14 @@ class DeltaDmlSpec extends SparkSpec {
     assert(ch2 === Set(("delete", 1L, 110), ("insert", 1L, 999)))
   }
 
-  test("key-DV pending refuses the delta door; cow mode keeps the group plan") {
-    val root = scratch("deltadml_keydv")
+  test("cow mode keeps the group plan: a DELETE lands no dvp sidecar") {
+    val root = scratch("deltadml_cow")
     val s = plainWithCatalog("dd9", root)
-    val dir = morTable(root, "ns/docs", s)
-    Snapshot.deleteMorKeys(s, dir, Seq(6L), "doc_id")
-    val e = intercept[Exception] {
-      s.sql("DELETE FROM dd9.ns.docs WHERE n_chars < 100")
-    }
-    assert(e.getMessage.contains("applyMorDeletes") ||
-      Option(e.getCause).exists(_.getMessage.contains("applyMorDeletes")))
-    // a cow-mode table still takes the group/metadata plans (rewrites)
-    val dir2 = s"$root/ns/cow"
-    Snapshot.publish(s, dir2, docs(s), "lang", "text")
+    // a cow-mode table takes the group/metadata plans (rewrites)
+    val dir = s"$root/ns/cow"
+    Snapshot.publish(s, dir, docs(s), "lang", "text")
     s.sql("DELETE FROM dd9.ns.cow WHERE n_chars < 100")
-    assert(manifestPaths(dir2, 2).forall(!_.contains("_dvp")),
+    assert(manifestPaths(dir, 2).forall(!_.contains("_dvp")),
       "cow mode must not land dvp sidecars")
   }
 
@@ -451,5 +444,25 @@ class DeltaDmlSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSeq
       assert(after === Seq(1L, 3L))
     } finally s.conf.unset("graft.snapshot.dvDriverMaskMaxPositions")
+  }
+
+  test("a mor DELETE stacks on a pending MoR key delete; both masks hold") {
+    val root = scratch("deltadml_keystack")
+    val s = plainWithCatalog("dd17", root)
+    val dir = morTable(root, "ns/docs", s)
+    Snapshot.deleteMorKeys(s, dir, Seq(2L, 5L), "doc_id")
+    s.sql("DELETE FROM dd17.ns.docs WHERE n_chars < 100") // 2 (masked), 4, 6
+    assert(Snapshot.currentVersion(s, dir) === 3)
+    // the DSv2 sidecar masks only the rows the key delete left live
+    val dvp3 = manifestPaths(dir, 3).filter(_.contains("v3/_dvp"))
+    assert(dvp3.map(p => spark.read.parquet(s"$dir/$p").count()).sum === 2L)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(Snapshot.read(s, dir)) === Seq(1L, 3L))
+    assert(ids(s.sql("SELECT doc_id FROM dd17.ns.docs")) === Seq(1L, 3L))
+    Snapshot.applyMorDeletes(s, dir, "lang", "text")
+    assert(manifestKinds(dir, Snapshot.currentVersion(s, dir))
+      .getOrElse("dvp", 0) === 0)
+    assert(ids(Snapshot.read(s, dir)) === Seq(1L, 3L))
   }
 }

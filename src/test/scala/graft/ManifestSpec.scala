@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.sources.{DocumentIO, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** T1 checks for DocumentIO.writeManifest/readVerified (graded by
   * `x_io_manifest`): the REFUSAL paths the value oracle can't see — a
@@ -141,27 +140,28 @@ class ManifestSpec extends SparkSpec {
   private type FileRow = (String, String, Long, java.lang.Long,
     Seq[(java.lang.Double, java.lang.Double)])
 
-  /** Version `n`'s own files as its manifest records them. */
-  private def written(dir: String, n: Int, statCols: Seq[String]): Set[FileRow] =
+  /** Version `n`'s own files as its manifest records them (a position
+    * delete-vector sidecar records its `file` range as its only stat).
+    */
+  private def written(dir: String, n: Int, statCols: Seq[String],
+      dvp: Boolean = false): Set[FileRow] =
     Snapshot.manifestEntries(spark, dir, n)
       .filter(_.path.startsWith(s"v$n/")).map { e =>
-        assert(e.stats.keySet === statCols.toSet)
+        assert(e.stats.keySet === (if (dvp) Set("file") else statCols.toSet))
         (e.path, e.part, e.nRows.longValue, e.checksum,
           statCols.map(c => (e.stats(c).lo, e.stats(c).hi)))
       }.toSet
 
   /** The reference model: the read-back aggregate over version `n`'s
     * staged directory that built manifest rows before the writes
-    * recorded them (`dvKey` = a delete-vector sidecar under `_dv`, read
-    * under the key's schema).
+    * recorded them (`dvp` = a position delete-vector sidecar under
+    * `_dvp`).
     */
   private def readBack(dir: String, n: Int, checksumCol: String,
-      statCols: Seq[String], dvKey: Option[String] = None): Set[FileRow] = {
-    val df = dvKey.fold(spark.read.parquet(s"$dir/v$n"))(k =>
-      spark.read.schema(StructType(Seq(StructField(k, LongType))))
-        .parquet(s"$dir/v$n/_dv"))
+      statCols: Seq[String], dvp: Boolean = false): Set[FileRow] = {
+    val df = spark.read.parquet(if (dvp) s"$dir/v$n/_dvp" else s"$dir/v$n")
     val keys = input_file_name().as("abs") +:
-      (if (dvKey.isEmpty) Seq(col("_p")) else Nil)
+      (if (dvp) Nil else Seq(col("_p")))
     val aggs = Seq(count(lit(1)).as("n_rows"),
       sum(conv(substring(md5(col(checksumCol).cast("string")), 1, 8), 16, 10)
         .cast("bigint")).as("checksum")) ++
@@ -172,7 +172,7 @@ class ManifestSpec extends SparkSpec {
     df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
       .select(Seq(regexp_extract(regexp_replace(regexp_replace(col("abs"),
           "%25", "%"), "%20", " "), "^(?:.*/)?(v\\d+/.*)$", 1),
-        if (dvKey.isEmpty) col("_p").cast("string") else lit("__dv__"),
+        if (dvp) lit("__dv__") else col("_p").cast("string"),
         col("n_rows"), col("checksum")) ++
         statCols.indices.flatMap(i => Seq(col(s"lo$i"), col(s"hi$i"))): _*)
       .collect().map { r =>
@@ -185,10 +185,10 @@ class ManifestSpec extends SparkSpec {
   }
 
   private def assertModel(dir: String, n: Int, statCols: Seq[String] = Nil,
-      checksumCol: String = "text", dvKey: Option[String] = None): Unit = {
-    val got = written(dir, n, statCols)
+      checksumCol: String = "text", dvp: Boolean = false): Unit = {
+    val got = written(dir, n, statCols, dvp)
     assert(got.nonEmpty, s"v$n recorded no files of its own")
-    assert(got === readBack(dir, n, checksumCol, statCols, dvKey), s"v$n")
+    assert(got === readBack(dir, n, checksumCol, statCols, dvp), s"v$n")
   }
 
   private def tableDir(): String =
@@ -223,14 +223,19 @@ class ManifestSpec extends SparkSpec {
     val v4 = Snapshot.currentVersion(spark, dir)
     assert(v4 > v3)
     assertModel(dir, v4)
-    // merge-on-read delete-vector sidecar; an empty key set refuses
+    // merge-on-read position delete-vector sidecar, checksummed over
+    // `pos`, whose recorded file range covers every file it names; an
+    // empty key set stages nothing
     val v5 = Snapshot.deleteMorKeys(spark, dir, Seq(1L, 2L, 3L, 1005L), "id")
-    assertModel(dir, v5, checksumCol = "id", dvKey = Some("id"))
-    assert(Snapshot.manifestEntries(spark, dir, v5).filter(_.path.startsWith(s"v$v5/"))
-      .forall(e => e.kind == "dv" && e.part == "__dv__"))
-    val empty = intercept[IllegalArgumentException](
-      Snapshot.deleteMorKeys(spark, dir, spark.range(0).toDF("id"), "id"))
-    assert(empty.getMessage.contains("empty delete key set"))
+    assertModel(dir, v5, checksumCol = "pos", dvp = true)
+    val sidecars = Snapshot.manifestEntries(spark, dir, v5)
+      .filter(_.path.startsWith(s"v$v5/"))
+    assert(sidecars.forall(e => e.kind == "dvp" && e.part == "__dv__"))
+    val named = spark.read.parquet(s"$dir/v$v5/_dvp").select("file").distinct()
+      .collect().map(_.getString(0))
+    assert(sidecars.forall(e => named.forall(t =>
+      e.stats("file").smin <= t && t <= e.stats("file").smax)))
+    assert(Snapshot.deleteMorKeys(spark, dir, spark.range(0).toDF("id"), "id") === v5)
     assert(Snapshot.currentVersion(spark, dir) === v5)
     // apply deletes without, then with, a stats column
     val v6 = Snapshot.applyMorDeletes(spark, dir, "part", "text")
@@ -331,8 +336,10 @@ class ManifestSpec extends SparkSpec {
         "append" -> jobs("append")(Snapshot.append(spark, dir, small(30, 100), "part", "text")),
         "upsert" -> jobs("upsert")(Snapshot.upsert(spark, dir, small(20, 50), "id", "part", "text")),
         "deleteMorKeys" -> jobs("delete")(Snapshot.deleteMorKeys(spark, dir, Seq(1L, 2L), "id")))
+      // deleteMorKeys: the key broadcast, the position shuffle and the
+      // sidecar write (the candidate prune needs no job without ranges)
       assert(got === Seq("publish" -> 2, "append" -> 2, "upsert" -> 6,
-        "deleteMorKeys" -> 1))
+        "deleteMorKeys" -> 3))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -661,8 +661,8 @@ class SnapshotSpec extends SparkSpec {
     val m2 = manifestPaths(dir, 2)
     // the delete wrote ONLY the DV sidecar: data file set identical
     assert(m2.filter(_._2 == "data").keySet === m1.keySet)
-    val dvs = m2.filter(_._2 == "dv").keys.toSeq
-    assert(dvs.size === 1 && dvs.head.startsWith("v2/_dv/"))
+    val dvs = m2.filter(_._2 == "dvp").keys.toSeq
+    assert(dvs.size === 1 && dvs.head.startsWith("v2/_dvp/"))
     // every read surface masks the keys
     val expected = fingerprint(docs.filter(!col("doc_id").isin(keys: _*)))
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
@@ -686,7 +686,7 @@ class SnapshotSpec extends SparkSpec {
     val v4 = Snapshot.applyMorDeletes(spark, dir, "lang", "text",
       statsCol = Some("doc_id"))
     val m4 = manifestPaths(dir, v4)
-    assert(!m4.values.exists(_ == "dv"), "materialize must shed the DV rows")
+    assert(!m4.values.exists(_ == "dvp"), "materialize must shed the DV rows")
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
     // stats-guided: files whose range can't contain a key carried as-is
     assert(m4.keySet.exists(p => m1.contains(p)),
@@ -712,9 +712,6 @@ class SnapshotSpec extends SparkSpec {
       Snapshot.upsert(spark, dir, upd, "doc_id", "lang", "text")
     }
     intercept[IllegalArgumentException] {
-      Snapshot.stageAppend(spark, dir, upd, "lang", "text")
-    }
-    intercept[IllegalArgumentException] {
       Snapshot.purgeKeys(spark, dir, Seq(4L), "doc_id", "lang", "text")
     }
     intercept[IllegalArgumentException] {
@@ -732,14 +729,15 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.deleteMorKeys(spark, dir, Seq(3L, 7L), "doc_id")
     assert(Snapshot.readVerified(spark, dir, "text")
       .filter(col("doc_id").isin(3L, 7L)).count() === 0)
-    // rewrite the DV sidecar with a DIFFERENT key set, same row count —
-    // silently widening the delete; verification must refuse
+    // rewrite the DV sidecar with DIFFERENT positions, same row count —
+    // silently moving the delete; verification must refuse
     import spark.implicits._
-    val dvDir = new java.io.File(s"$dir/v2/_dv")
+    val dvDir = new java.io.File(s"$dir/v2/_dvp")
     val dvFile = dvDir.listFiles().filter(_.getName.endsWith(".parquet")).head
-    Seq(900L, 901L).toDS.toDF("doc_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/v2/_dv_tmp")
-    val replacement = new java.io.File(s"$dir/v2/_dv_tmp").listFiles()
+    val tail = spark.read.parquet(dvFile.getPath).head().getString(0)
+    Seq((tail, 900L), (tail, 901L)).toDF("file", "pos").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/v2/_dvp_tmp")
+    val replacement = new java.io.File(s"$dir/v2/_dvp_tmp").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(replacement.toPath, dvFile.toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -886,13 +884,13 @@ class SnapshotSpec extends SparkSpec {
     val expected =
       fingerprint(docs.filter(!col("doc_id").between(100, 140)))
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
-    // materialize: stats prune from a BROADCAST RANGE JOIN against the
-    // key frame — files whose range intersects neither [100,140] nor
-    // the absent block carry forward by reference, byte-identical
+    // materialize rewrites only the files the position sidecars name —
+    // files whose range intersects neither [100,140] nor the absent
+    // block carry forward by reference, byte-identical
     val v3 = Snapshot.applyMorDeletes(spark, dir, "lang", "text",
       statsCol = Some("doc_id"))
     val m3 = manifestPaths(dir, v3)
-    assert(!m3.values.exists(_ == "dv"), "materialize must shed the DVs")
+    assert(!m3.values.exists(_ == "dvp"), "materialize must shed the DVs")
     assert(fingerprint(Snapshot.read(spark, dir)) === expected)
     val stats1 = Snapshot.manifestEntries(spark, dir, 1).map { e =>
       val (lo, hi) = e.rangeOf("doc_id").get
@@ -907,18 +905,129 @@ class SnapshotSpec extends SparkSpec {
     assert(fingerprint(Snapshot.readVerified(spark, dir, "text")) === expected)
   }
 
-  test("the bulk delete predicate is a distributed anti-join, never a collected key list") {
-    import spark.implicits._
+  test("the bulk delete resolves keys to positions with a distributed semi-join, never a collected key list") {
+    val dir = freshDir()
+    Snapshot.publish(spark, dir, docs, "lang", "text")
     val keys = spark.range(0L, 500000L).toDF("doc_id")
-    val plan = Snapshot.antiKeep(docs, keys, "doc_id")
+    val files = Snapshot.manifestEntries(spark, dir, 1).map(_.path).toArray
+    val plan = Snapshot.keyPositions(spark, dir, 1, files, keys, "doc_id")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftAnti"),
-      s"bulk delete must keep rows via an anti-join, got:\n$plan")
+    assert(plan.contains("LeftSemi"),
+      s"bulk delete must find positions via a semi-join, got:\n$plan")
     // an isin/driver-materialized key set would render as an IN list or
     // a LocalTableScan of literals — neither may appear
     assert(!plan.contains(" IN ("), s"collected IN-list in plan:\n$plan")
     assert(!plan.contains("LocalTableScan"),
       s"driver-materialized key set in plan:\n$plan")
+  }
+
+  test("an append under a pending MoR key delete commits; a re-inserted key is visible") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, docs, "lang", "doc_id", "text",
+      nFiles = 4)
+    Snapshot.deleteMorKeys(spark, dir, Seq(3L, 7L), "doc_id")
+    val back = docs.filter(col("doc_id") === 3L)
+      .withColumn("text", concat(col("text"), lit(" reborn")))
+    val v3 = Snapshot.stageAppend(spark, dir, back, "lang", "text")
+    assert(v3 === 3)
+    Snapshot.commit(spark, dir, v3)
+    val expected = fingerprint(
+      docs.filter(!col("doc_id").isin(3L, 7L)).unionByName(back))
+    assert(fingerprint(Snapshot.read(spark, dir)) === expected)
+    // materialization keeps the re-inserted row
+    Snapshot.applyMorDeletes(spark, dir, "lang", "text",
+      statsCol = Some("doc_id"))
+    assert(fingerprint(Snapshot.read(spark, dir)) === expected)
+  }
+
+  test("a plain-session SQL read of a table with a pending MoR key delete serves the masked rows") {
+    val dir = freshDir()
+    Snapshot.publish(spark, dir, docs, "lang", "text")
+    Snapshot.deleteMorKeys(spark, dir, Seq(3L, 7L, 11L), "doc_id")
+    val sqlRead = spark.newSession().read.format("graft-snapshot")
+      .option("path", dir).load()
+    assert(fingerprint(sqlRead) ===
+      fingerprint(docs.filter(!col("doc_id").isin(3L, 7L, 11L))))
+  }
+
+  test("re-deleting a masked key adds no position row") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, docs, "lang", "doc_id", "text",
+      nFiles = 4)
+    assert(Snapshot.deleteMorKeys(spark, dir, Seq(3L, 7L), "doc_id") === 2)
+    // 7 is masked already: only 11's row lands in the second sidecar
+    assert(Snapshot.deleteMorKeys(spark, dir, Seq(7L, 11L), "doc_id") === 3)
+    val v3Rows = Snapshot.manifestEntries(spark, dir, 3)
+      .filter(_.path.startsWith("v3/_dvp/")).map(_.nRows.longValue).sum
+    assert(v3Rows === docs.filter(col("doc_id") === 11L).count())
+    // every key masked already: nothing staged
+    assert(Snapshot.deleteMorKeys(spark, dir, Seq(3L, 7L), "doc_id") === 3)
+    assert(Snapshot.currentVersion(spark, dir) === 3)
+    assert(fingerprint(Snapshot.read(spark, dir)) ===
+      fingerprint(docs.filter(!col("doc_id").isin(3L, 7L, 11L))))
+  }
+
+  test("a delete key frame that masks no live row stages no version") {
+    val dir = freshDir()
+    Snapshot.publishClustered(spark, dir, docs, "lang", "doc_id", "text",
+      nFiles = 4)
+    val before = fingerprint(Snapshot.read(spark, dir))
+    assert(Snapshot.deleteMorKeys(spark, dir,
+      spark.range(-9L, -1L).toDF("doc_id"), "doc_id") === 1)
+    assert(Snapshot.deleteMorKeys(spark, dir, Seq(-5L), "doc_id") === 1)
+    assert(Snapshot.currentVersion(spark, dir) === 1)
+    assert(fingerprint(Snapshot.read(spark, dir)) === before)
+  }
+
+  test("a manifest carrying a key-based 'dv' entry fails loudly on read") {
+    import spark.implicits._
+    val dir = freshDir()
+    Snapshot.publish(spark, dir, docs, "lang", "text")
+    // a key delete vector as older writers recorded it: a one-column key
+    // parquet under v1/_dv and a manifest row of kind 'dv'
+    Seq(3L).toDF("doc_id").coalesce(1).write.parquet(s"$dir/v1/_dv")
+    val sidecar = new java.io.File(s"$dir/v1/_dv").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).head
+    val manifest = new java.io.File(s"$dir/_manifest.v1").listFiles()
+      .filter(_.getName.endsWith(".json")).head
+    java.nio.file.Files.write(manifest.toPath,
+      (s"""{"path":"v1/_dv/$sidecar","part":"__dv__","n_rows":1,"kind":"dv"}""" +
+        "\n").getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
+    new java.io.File(manifest.getParent, s".${manifest.getName}.crc").delete()
+    val e = intercept[IllegalArgumentException](Snapshot.read(spark, dir).count())
+    assert(e.getMessage.contains(s"v1/_dv/$sidecar") && e.getMessage.contains("'dv'"),
+      e.getMessage)
+  }
+
+  test("renameColumn and dropColumn take a column's recorded stats and blooms with it") {
+    val total = docs.count()
+    val en = docs.filter(col("lang") === "en").count()
+    def probe(evolve: String => Unit): Unit = {
+      val dir = freshDir()
+      Snapshot.publishClustered(spark, dir, docs, "lang", "doc_id", "text",
+        nFiles = 8)
+      Snapshot.recordFileBlooms(spark, dir, "doc_id")
+      evolve(dir)
+      // a NEW column reuses the name: every row reads doc_id = 15, so no
+      // prune may consult the old column's ranges or blooms
+      Snapshot.addColumn(spark, dir, "doc_id", "BIGINT", "15")
+      assert(Snapshot.readWhereStats(spark, dir, "doc_id", 15, 15)
+        .filter(col("doc_id") === 15L).count() === total)
+      Snapshot.deleteWhere(spark, dir, "doc_id = 15 AND lang = 'en'",
+        "lang", "text")
+      assert(Snapshot.read(spark, dir).count() === total - en)
+    }
+    probe(dir => Snapshot.dropColumn(spark, dir, "doc_id"))
+    probe { dir =>
+      Snapshot.renameColumn(spark, dir, "doc_id", "old_id")
+      // the renamed column keeps pruning under its new name
+      val v = Snapshot.currentVersion(spark, dir)
+      assert(Snapshot.manifestEntries(spark, dir, v)
+        .forall(_.rangeOf("old_id").isDefined))
+      assert(Snapshot.readWhereStats(spark, dir, "old_id", 15, 15)
+        .filter(col("old_id") === 15L).count() ===
+        docs.filter(col("doc_id") === 15L).count())
+    }
   }
 
   test("DSv2 SQL front door: committed read, time travel, pushdown, and schema parity") {
@@ -973,10 +1082,9 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.publish(spark, dir, docs, "lang", "text")
     def load() = spark.read.format("graft-snapshot").option("path", dir).load()
     assert(load().count() === docs.count())
-    // pending MoR deletes need the read-side anti-join → refuse loudly
+    // pending MoR deletes serve through the position-masking scan
     Snapshot.deleteMorKeys(spark, dir, Seq(3L), "doc_id")
-    val e1 = intercept[IllegalArgumentException] { load() }
-    assert(e1.getMessage.contains("applyMorDeletes"))
+    assert(load().count() === docs.count() - 1)
     Snapshot.applyMorDeletes(spark, dir, "lang", "text")
     assert(load().count() === docs.count() - 1)
     // a metadata-added column fills its recorded default THROUGH the
@@ -1150,12 +1258,12 @@ class SnapshotSpec extends SparkSpec {
     }
     assert(msgs(ex2).contains("staged-commit API"),
       s"property DDL has no snapshot verb and must refuse: ${msgs(ex2)}")
-    // the refusal semantics match the other SQL doors: pending DVs refuse
+    // like the other SQL doors, pending DVs serve the masked rows
+    def rows(): Long =
+      spark.sql("SELECT count(*) FROM gcat_spec.ns1.tbl").head().getLong(0)
+    val before = rows()
     Snapshot.deleteMorKeys(spark, dir, Seq(3L), "doc_id")
-    val dv = intercept[Exception] {
-      spark.sql("SELECT * FROM gcat_spec.ns1.tbl").collect()
-    }
-    assert(msgs(dv).contains("applyMorDeletes"), msgs(dv))
+    assert(rows() === before - 1)
   }
 
   test("catalog namespaces + CTAS: tree-backed namespaces, CTAS publishes through the staged protocol") {
@@ -1286,15 +1394,12 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.readVerified(spark, dir, "text").count() === docs.count())
   }
 
-  test("an empty delete key FRAME refuses loudly instead of a confusing sidecar failure") {
-    import spark.implicits._
+  test("an empty delete key FRAME stages nothing and returns the current version") {
     val dir = freshDir()
     Snapshot.publish(spark, dir, docs, "lang", "text")
     val before = fingerprint(Snapshot.read(spark, dir))
-    intercept[IllegalArgumentException] {
-      Snapshot.stageDeleteMor(spark, dir,
-        spark.range(0).toDF("doc_id"), "doc_id")
-    }
+    assert(Snapshot.stageDeleteMor(spark, dir,
+      spark.range(0).toDF("doc_id"), "doc_id") === 1)
     assert(Snapshot.currentVersion(spark, dir) === 1)
     assert(fingerprint(Snapshot.read(spark, dir)) === before)
   }
