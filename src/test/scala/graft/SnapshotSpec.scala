@@ -905,7 +905,7 @@ class SnapshotSpec extends SparkSpec {
     assert(fingerprint(Snapshot.readVerified(spark, dir, "text")) === expected)
   }
 
-  test("the bulk delete resolves keys to positions with a distributed semi-join, never a collected key list") {
+  test("bulk delete resolves keys to positions by a distributed semi-join, no key list") {
     val dir = freshDir()
     Snapshot.publish(spark, dir, docs, "lang", "text")
     val keys = spark.range(0L, 500000L).toDF("doc_id")
